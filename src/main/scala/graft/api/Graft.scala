@@ -16,9 +16,11 @@ import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
   * never all-pairs; survivors of dedup are deterministic; heavy per-element
   * math runs in codegen (native expression or long-array algebra).
   *
-  * Caching note: the near-dup combinators and dupClusters `.cache()`
-  * intermediate signature/label tables (self-joins would otherwise
-  * recompute the lineage per side). Caches live until the caller runs
+  * Caching note: the Jaccard near-dup combinators and dupClusters
+  * `.cache()` their shingle/label tables, which are read more than once
+  * (the candidate pass and both sides of the confirm join, or every
+  * fixpoint round) and would otherwise recompute their lineage per read.
+  * Caches live until the caller runs
   * `spark.catalog.clearCache()` or unpersists — long-lived applications
   * calling these per-shard should clear between shards (Bench/Verify do).
   */
@@ -122,80 +124,58 @@ object Graft {
       .drop("__g", "__thr")
   }
 
-  /** Shared (a < b) pair expansion within equal-key groups — the r18
-    * bucket shape, with an OPT-IN hot-key guard for uncurated corpora.
+  /** The within-group pair expander every dedup / co-occurrence operator
+    * shares: all (a, b) pairs, a < b, among the members of each equal-key
+    * group. One shuffle on `keys`; each group's members are sorted into
+    * one array and pairs expand row-locally ([[expandPairs]]), so the key
+    * lineage runs once — never once per side of a self-join. `member` may
+    * be a struct; structs compare field by field.
     *
-    * Default (`hotCap = Int.MaxValue`): the one-shuffle grouped plan —
-    * ids sorted per key, pairs expanded row-locally, per-key aggregation
-    * state O(group). The group-size bound is a CONTRACT of the callers
-    * (duplicate-cluster / basket size): on a degenerate corpus (millions
-    * of byte-identical docs under one signature) the whole cluster lands
-    * in ONE aggregation buffer and one array row — pass a finite
-    * `hotCap` there.
+    * Pair set is the key-equality self-join's: members of a NULL key are
+    * not collected (the join never matched NULL), and equal members never
+    * pair with each other (a duplicate id yields no (x, x) pair). Callers
+    * drop NULL texts at the source column instead of filtering the
+    * derived key, which Catalyst would push down as a second evaluation
+    * of the key expression. Returns `keys`, `a`, `b`.
     *
-    * With a finite `hotCap`: keys above the cap — detected by a
-    * partial-aggregated count, O(1) state — stream through the
-    * self-join the bucket shape replaced (shuffles and spills instead
-    * of buffering; the pair OUTPUT is quadratic either way). At most
-    * N/hotCap keys can be hot, so the hot-key list broadcasts and the
-    * cold path keeps the grouped plan. The guard is opt-in because its
-    * plan re-runs the key derivation for the counts pass and the two
-    * (normally zero-row) fallback branches: measured at sf0.1 that
-    * fixed overhead costs 1.2–1.8× on the dedup-family queries — r19
-    * A/B, q31_neardup 0.52→0.89 s, q30_simhash 0.69→1.27 s — for
-    * insurance the declared corpora never need. GraftApiSpec's
-    * mass-duplicate law exercises the routed plan.
-    *
-    * Pair set is the self-join's exactly (both modes): null keys are
-    * dropped (a join on key equality never matched NULL), and the final
-    * `id_a < id_b` filter excludes the (x, x) pairs duplicate ids would
-    * otherwise emit from a sorted bucket. Returns (__k, id_a, id_b).
+    * Group-size contract: a key's members sit in one aggregation buffer
+    * and one array row — O(group) memory per key. Callers' groups are
+    * clusters, buckets or baskets; the bounded-memory route for a skewed
+    * hot key is a spillable grouped-pairs operator (ROADMAP item B).
     */
-  private[graft] def pairsWithinGroups(rows: DataFrame,
-      hotCap: Int = Int.MaxValue): DataFrame = {
-    val keyed = rows.where(col("__k").isNotNull)
-    def bucketPairs(in: DataFrame): DataFrame = in
-      .groupBy(col("__k"))
-      .agg(sort_array(collect_list(col("__id"))).as("__ids"))
-      .where(size(col("__ids")) > 1)
-      .select(col("__k"), posexplode(col("__ids")).as(Seq("__i", "id_a")),
-        col("__ids"))
-      .select(col("__k"), col("id_a"),
-        explode(slice(col("__ids"), col("__i") + 2,
-          size(col("__ids")))).as("id_b"))
-    val all =
-      if (hotCap == Int.MaxValue) bucketPairs(keyed)
-      else {
-        val hot = keyed.groupBy(col("__k")).agg(count(lit(1)).as("__n"))
-          .where(col("__n") > hotCap).select(col("__k"))
-        val hotRows = keyed.join(broadcast(hot), Seq("__k"), "left_semi")
-        val hotPairs = hotRows.as("a")
-          .join(hotRows.withColumnRenamed("__id", "__idb").as("b"),
-            Seq("__k"))
-          .select(col("__k"), col("__id").as("id_a"),
-            col("__idb").as("id_b"))
-        bucketPairs(keyed.join(broadcast(hot), Seq("__k"), "left_anti"))
-          .unionAll(hotPairs)
-      }
-    all.where(col("id_a") < col("id_b"))
+  private[graft] def pairsWithinGroups(rows: DataFrame, keys: Seq[Column],
+      member: Column): DataFrame =
+    expandPairs(rows.groupBy(keys: _*)
+      .agg(sort_array(collect_list(
+        when(keys.map(_.isNotNull).reduce(_ && _), member))).as("__m")),
+      "__m")
+
+  /** (a, b) pairs, a < b, from each row's SORTED array column `members`:
+    * posexplode, then explode the slice after each position. Other
+    * columns ride along; `members` is dropped.
+    */
+  private def expandPairs(df: DataFrame, members: String): DataFrame = {
+    val m = col(members)
+    df.where(size(m) > 1)
+      .select(col("*"), posexplode(m).as(Seq("__i", "a")))
+      .select(col("*"), explode(slice(m, col("__i") + 2, size(m))).as("b"))
+      .where(col("a") < col("b"))
+      .drop("__i", members)
   }
 
   /** Exact-duplicate pairs by content signature (md5 of the sorted token
-    * set): equi-join on the fixed-width signature, bucketed by it.
+    * set), grouped by the fixed-width signature: the corpus is tokenized
+    * and hashed once and only (signature, id) rows shuffle.
     */
-  def exactDupPairs(df: DataFrame, id: Column, text: Column): DataFrame = {
-    // r18: one signature pass + one shuffle instead of a signature
-    // self-join — the corpus is tokenized and md5-hashed ONCE and only
-    // (sig, id) pairs shuffle. Per-signature state is O(cluster) — a
-    // contract of the operator; see [[pairsWithinGroups]] for the
-    // opt-in hot-signature guard on uncurated corpora.
-    val sigs = df.select(id.as("__id"),
-      md5(array_join(tokenSet(text), " ")).as("__k"))
-    pairsWithinGroups(sigs).select(col("id_a"), col("id_b"))
-  }
+  def exactDupPairs(df: DataFrame, id: Column, text: Column): DataFrame =
+    pairsWithinGroups(
+      df.where(text.isNotNull)
+        .select(id.as("__id"), contentSignature(text).as("__k")),
+      Seq(col("__k")), col("__id"))
+      .select(col("a").as("id_a"), col("b").as("id_b"))
 
   /** SimHash duplicate pairs: `bits`-bit signature over the distinct token
-    * set (order-independent), pairs via signature-equality join. The
+    * set (order-independent), pairs within equal signatures. The
     * signature is the native [[graft.functions.SimHash]] expression — one
     * codegen pass over the hash array; the per-bit interpreted-HOF
     * formulation it replaced was 32 passes and the engine's slowest hot
@@ -204,32 +184,35 @@ object Graft {
   def simhashPairs(df: DataFrame, id: Column, text: Column, bits: Int = 32): DataFrame = {
     // the portable token hash is 32-bit; more bits would silently be zero
     require(bits >= 1 && bits <= 32, s"bits must be in [1,32], got $bits")
-    val sigs = df
+    pairsWithinGroups(simhashSigs(df, id, text, bits), Seq(col("__sig")),
+        col("__id"))
+      .select(col("a").as("id_a"), col("b").as("id_b"),
+        col("__sig").as("simhash"))
+  }
+
+  /** (__id, __sig): the `bits`-bit simhash of each non-NULL text's token
+    * set, shared by [[simhashPairs]] and [[simhashHammingPairs]].
+    */
+  private def simhashSigs(df: DataFrame, id: Column, text: Column,
+      bits: Int): DataFrame =
+    df.where(text.isNotNull)
       .select(id.as("__id"), transform(tokenSet(text), t => phash32(t)).as("__hs"))
       .select(col("__id"),
-        GraftFunctions.simhash(df.sparkSession, col("__hs"), bits).as("__k"))
-    // r18: group ids per signature and expand (a < b) pairs row-locally —
-    // one signature pass + one shuffle instead of a self-join that ran
-    // the tokenize+hash lineage once per side (see exactDupPairs;
-    // [[pairsWithinGroups]] documents the group-size contract and the
-    // opt-in hot-signature guard).
-    pairsWithinGroups(sigs)
-      .select(col("id_a"), col("id_b"), col("__k").as("simhash"))
-  }
+        GraftFunctions.simhash(df.sparkSession, col("__hs"), bits).as("__sig"))
 
   /** SimHash near-dup pairs within Hamming distance `maxDist` — the
     * fuzzy extension of [[simhashPairs]] (which only finds EQUAL
     * signatures). Candidates come from banding, not all-pairs: the
     * signature splits into `bands` contiguous chunks, and by pigeonhole a
     * pair within distance `maxDist < bands` must agree on at least one
-    * whole band — so an equi-join on (band index, band value) has exact
+    * whole band — so buckets on (band index, band value) have exact
     * recall. Confirmation is `bit_count(xor) <= maxDist`.
     *
     * Band values are computed with PLAN-TIME literal shifts (bands is a
     * builder constant), so the explode is row-local and the only shuffles
-    * are the band-key join and the candidate DISTINCT. Hot band-values
-    * (boilerplate corpora) are the usual skew risk — AQE skew join, then
-    * salting, is the escalation path. At corpus scale you'd widen to a
+    * are the (band, value) bucket aggregate and the candidate DISTINCT.
+    * Hot band values (boilerplate corpora) are the skew risk (see
+    * [[pairsWithinGroups]]). At corpus scale you'd widen to a
     * 64-bit signature / 16-bit bands to keep buckets sparse; the shape is
     * identical.
     */
@@ -241,35 +224,23 @@ object Graft {
       s"pigeonhole needs maxDist < bands: $maxDist >= $bands")
     val w = bits / bands
     val mask = (1L << w) - 1
-    // r18: the former banded SELF-JOIN (which needed the signature table
-    // cached — the lineage ran once per side) is now a (band, value)
-    // bucket aggregate with row-local pair expansion: ONE signature pass,
-    // no cache barrier, one bucket shuffle. Members sort by id inside
-    // each bucket, so pairs are (a < b) by construction.
-    val sigs = df
-      .select(id.as("__id"), transform(tokenSet(text), t => phash32(t)).as("__hs"))
-      .select(col("__id"),
-        GraftFunctions.simhash(df.sparkSession, col("__hs"), bits).as("simhash"))
-    val banded = sigs.select(col("__id"), col("simhash"),
+    // one signature pass; members are (id, signature) structs, so each
+    // bucket's pairs carry both signatures to the confirm
+    val banded = simhashSigs(df, id, text, bits).select(col("__id"),
+        col("__sig"),
         explode(array((0 until bands).map(b =>
           struct(lit(b).as("band"),
-            (shiftright(col("simhash"), b * w).bitwiseAND(lit(mask)))
+            (shiftright(col("__sig"), b * w).bitwiseAND(lit(mask)))
               .as("bv"))): _*)).as("__b"))
-      .select(col("__id"), col("simhash"),
+      .select(col("__id"), col("__sig"),
         col("__b.band").as("band"), col("__b.bv").as("bv"))
     // confirm BEFORE the pair-dedup: bit_count is codegen'd and filters
     // before the DISTINCT shuffle, so it carries only surviving pairs
     // (~6x fewer rows than deduping raw candidates, measured at sf0.1)
-    banded.groupBy(col("band"), col("bv"))
-      .agg(sort_array(collect_list(
-        struct(col("__id"), col("simhash")))).as("__m"))
-      .where(size(col("__m")) > 1)
-      .select(posexplode(col("__m")).as(Seq("__i", "__a")), col("__m"))
-      .select(col("__a"), explode(slice(col("__m"), col("__i") + 2,
-        size(col("__m")))).as("__b"))
-      .select(col("__a.__id").as("id_a"), col("__b.__id").as("id_b"),
-        bit_count(col("__a.simhash").bitwiseXOR(col("__b.simhash")))
-          .as("hamming"))
+    pairsWithinGroups(banded, Seq(col("band"), col("bv")),
+        struct(col("__id"), col("__sig")))
+      .select(col("a.__id").as("id_a"), col("b.__id").as("id_b"),
+        bit_count(col("a.__sig").bitwiseXOR(col("b.__sig"))).as("hamming"))
       .filter(col("hamming") <= maxDist)
       .distinct()
   }
@@ -277,27 +248,22 @@ object Graft {
   /** Exact n-gram-Jaccard near-dup pairs via PPJoin-style prefix filtering:
     * for Jaccard >= `threshold` over sorted shingle sets, a qualifying pair
     * must share a shingle in each side's first
-    * floor(|S|·(1−threshold))+1 shingles — candidates come from an
-    * equi-join on exploded prefix shingles (exact recall, never
-    * all-pairs). Set algebra runs over hashed longs.
+    * floor(|S|·(1−threshold))+1 shingles — candidates come from buckets
+    * of exploded prefix shingles (exact recall, never all-pairs). Set algebra runs over hashed longs.
     */
   def nearDupJaccard(df: DataFrame, id: Column, text: Column, k: Int = 5,
       threshold: Double = 0.5): DataFrame = {
     require(threshold > 0 && threshold <= 1, s"threshold in (0,1]: $threshold")
-    val sh = df.select(id.as("__id"),
+    val sh = df.where(text.isNotNull).select(id.as("__id"),
       array_sort(array_distinct(
         transform(shingleSet(text, k), t => phash32(t)))).as("__shs"))
       .cache()
     val prefLen = (floor(size(col("__shs")) * (1.0 - threshold)) + 1).cast("int")
     val pref = sh.select(col("__id"),
       explode(slice(col("__shs"), lit(1), prefLen)).as("__k"))
-    // r18: prefix-shingle buckets with row-local (a < b) pair expansion
-    // instead of a pref self-join — one prefix pass + one shuffle (see
-    // exactDupPairs); buckets are small by the prefix-filter design on
-    // real corpora ([[pairsWithinGroups]] documents the group-size
-    // contract and the opt-in hot-key guard for degenerate ones).
-    val cand = pairsWithinGroups(pref)
-      .select(col("id_a"), col("id_b"))
+    // prefix-shingle buckets: small by the prefix-filter design
+    val cand = pairsWithinGroups(pref, Seq(col("__k")), col("__id"))
+      .select(col("a").as("id_a"), col("b").as("id_b"))
       .distinct()
     cand
       .join(sh.as("sa"), col("id_a") === col("sa.__id"))
@@ -339,7 +305,7 @@ object Graft {
 
   /** Banded MinHash-LSH near-dup pairs: `numHashes` minhashes over hashed
     * k-shingles (hash once, XOR family), `bands` bands, candidates from
-    * band-bucket equi-joins, confirmed by exact Jaccard >= `threshold`.
+    * band buckets, confirmed by exact Jaccard >= `threshold`.
     * Probabilistic recall below J=1 (tune bands/rows for the target J);
     * exact duplicates always collide.
     */
@@ -352,7 +318,9 @@ object Graft {
       val m = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
       m ^ (m >>> 27)
     }
-    val docs = df.select(id.as("__id"),
+    // NULL texts must not enter: every one has the same shingle set
+    // ([NULL]) and would pair with every other at Jaccard 1.0
+    val docs = df.where(text.isNotNull).select(id.as("__id"),
       array_sort(array_distinct(
         transform(shingleSet(text, k), t => xxhash64(t)))).as("__shs"))
       .cache()
@@ -365,16 +333,9 @@ object Graft {
           xxhash64(slice(col("__sig"), bIdx * rows + 1, rows)).as("bh"))
       }: _*)).as("bk"))
       .select(col("__id"), col("bk.band").as("band"), col("bk.bh").as("bh"))
-    // r18: band-bucket aggregate with row-local (a < b) pair expansion
-    // instead of a bandRows self-join — the signature lineage (from the
-    // cached shingle table) runs once, and one bucket shuffle replaces
-    // the two join-side shuffles (see exactDupPairs).
-    val cand = bandRows.groupBy(col("band"), col("bh"))
-      .agg(sort_array(collect_list(col("__id"))).as("__ids"))
-      .where(size(col("__ids")) > 1)
-      .select(posexplode(col("__ids")).as(Seq("__i", "id_a")), col("__ids"))
-      .select(col("id_a"), explode(slice(col("__ids"), col("__i") + 2,
-        size(col("__ids")))).as("id_b"))
+    val cand = pairsWithinGroups(bandRows, Seq(col("band"), col("bh")),
+        col("__id"))
+      .select(col("a").as("id_a"), col("b").as("id_b"))
       .distinct()
     cand
       .join(docs.as("ta"), col("id_a") === col("ta.__id"))
@@ -2595,38 +2556,28 @@ object Graft {
   }
 
   /** Market-basket co-occurrence: item pairs that appear in ≥ `minSupport`
-    * shared baskets, with lift = N·supp(a,b) / (supp(a)·supp(b)). The
-    * pair generator is a self EQUI-join on the basket key — candidate
+    * shared baskets, with lift = N·supp(a,b) / (supp(a)·supp(b)). Pairs
+    * expand within each basket's sorted distinct item set — candidate
     * count is Σ basket_size², bounded by the data's basket size (never
-    * n²); distinct-ing (basket,item) first both dedups repeat lines and
-    * shrinks the join input. Marginals join back per item (equi, partial-
-    * agg'd) and the one-row basket total rides a broadcast. At skew
+    * n²); the set both dedups repeat lines and shrinks the expansion.
+    * Marginals join back per item (equi, partial-agg'd) and the one-row
+    * basket total rides a broadcast. At skew
     * (one mega-basket) cap or sub-sample giant baskets upstream — a
     * 10⁶-item basket is 10¹² pairs no engine should emit.
     */
   def coPurchasePairs(df: DataFrame, basket: Column, item: Column,
       minSupport: Long): DataFrame = {
     require(minSupport >= 1, s"minSupport must be >= 1: $minSupport")
-    // r18: ONE basket-keyed shuffle instead of four distinct passes + a
-    // basket self-join. collect_set dedups (basket, item) inside the
-    // aggregate; pairs expand row-locally from the sorted item array
-    // (p1 < p2 by construction — identical pair set to the former
-    // self-join), and the marginals/basket total derive from the same
-    // cached basket table instead of re-scanning the input. Per-basket
-    // state is O(basket size) — the docstring's "cap giant baskets
-    // upstream" is the contract that bounds it. r19: null baskets are
-    // dropped — the declared semantics (the former equi-join on the
-    // basket key never matched NULL, and the total was COUNT(DISTINCT
-    // basket), which skips nulls; the r18 groupBy had silently bucketed
-    // them).
+    // ONE basket-keyed shuffle: collect_set dedups (basket, item) inside
+    // the aggregate, and the pairs, the marginals and the basket total
+    // all derive from the same cached basket table. NULL baskets are
+    // dropped (a basket-key join never matched NULL, and the total
+    // counts distinct non-NULL baskets).
     val baskets = df.where(basket.isNotNull).groupBy(basket.as("__bk"))
       .agg(sort_array(collect_set(item)).as("__its"))
       .cache()
-    val supp = baskets
-      .select(posexplode(col("__its")).as(Seq("__i", "p1")), col("__its"))
-      .select(col("p1"), explode(slice(col("__its"), col("__i") + 2,
-        size(col("__its")))).as("p2"))
-      .groupBy(col("p1"), col("p2"))
+    val supp = expandPairs(baskets, "__its")
+      .groupBy(col("a").as("p1"), col("b").as("p2"))
       .agg(count(lit(1)).as("supp"))
       .where(col("supp") >= minSupport)
     val marg = baskets.select(explode(col("__its")).as("__it"))

@@ -149,12 +149,11 @@ object LlmOps {
     //    XOR permutations are not min-wise independent, but banding only
     //    needs collision-on-similarity: exact dups always collide, and
     //    every candidate is confirmed by exact Jaccard below.
-    //  - The signature/shingle tables are cached: the band self-join and
-    //    the Jaccard verification would otherwise recompute the signature
-    //    lineage once per join side (Catalyst does not reuse the
-    //    symmetric exchange here).
-    // 16 minhashes (4 bands x 4 rows); candidates from the band-bucket
-    // equi-join; exact shingle-Jaccard >= 0.9 confirms candidates. Shingles are
+    //  - The shingle table is cached: the band buckets and both sides of
+    //    the Jaccard verification join read it, and would otherwise
+    //    recompute the shingle lineage once per read.
+    // 16 minhashes (4 bands x 4 rows); candidates from the band buckets;
+    // exact shingle-Jaccard >= 0.9 confirms candidates. Shingles are
     // 5 tokens (k=3 on this dense synthetic vocabulary produced ~670x more
     // false candidates for the identical final pair set).
     Q("q31_minhash_lsh",
@@ -1338,7 +1337,8 @@ object LlmOps {
     // the survivors+audit table a cleaning run actually materializes.
     // Oracle closed form: exact-dup components ARE the signature groups,
     // so cluster = min id and survivor = first by (n_chars desc, id)
-    // within the signature.
+    // within the signature. A NULL text pairs with nothing, so its
+    // signature is made distinct per document: each stays a singleton.
     Q("q74_survivorship",
       (s, d) => {
         val docs = Tables(s, d, "documents")
@@ -1353,8 +1353,9 @@ object LlmOps {
       },
       Some("""WITH sigs AS (
              |  SELECT doc_id, n_chars,
-             |    md5(array_to_string(list_sort(list_distinct(
-             |      string_split(text, ' '))), ' ')) AS sig
+             |    COALESCE(md5(array_to_string(list_sort(list_distinct(
+             |      string_split(text, ' '))), ' ')),
+             |      'null:' || CAST(doc_id AS VARCHAR)) AS sig
              |  FROM documents),
              |r AS (
              |  SELECT doc_id, n_chars,

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{Exact, Q, Tables}
+import graft.api.Graft
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
@@ -102,25 +103,18 @@ object StatTests {
         val pc = cnt.join(tot, "source")
           .select(col("source"), col("tok"),
             (col("c").cast(DoubleType) / col("t").cast(DoubleType)).as("p"))
-        // r18: token-bucket aggregate with row-local (a < b) pair
-        // expansion instead of a pc-vs-pc self-join — the probability
-        // table's explode+agg+join lineage now runs ONCE, not once per
-        // join side; bucket width is bounded by the source count.
+        // token buckets of (source, p) members: the probability table's
+        // lineage runs once; bucket width is bounded by the source count
         val term =
           lit(0.5) * col("pa") *
             log2(lit(2.0) * col("pa") / (col("pa") + col("pb"))) +
           lit(0.5) * col("pb") *
             log2(lit(2.0) * col("pb") / (col("pa") + col("pb")))
-        pc.groupBy(col("tok"))
-          .agg(sort_array(collect_list(
-            struct(col("source"), col("p")))).as("__m"))
-          .where(size(col("__m")) > 1)
-          .select(posexplode(col("__m")).as(Seq("__i", "__a")), col("__m"))
-          .select(col("__a"), explode(slice(col("__m"), col("__i") + 2,
-            size(col("__m")))).as("__b"))
-          .select(col("__a.source").as("source_a"),
-            col("__b.source").as("source_b"),
-            col("__a.p").as("pa"), col("__b.p").as("pb"))
+        Graft.pairsWithinGroups(pc, Seq(col("tok")),
+            struct(col("source"), col("p")))
+          .select(col("a.source").as("source_a"),
+            col("b.source").as("source_b"),
+            col("a.p").as("pa"), col("b.p").as("pb"))
           .groupBy(col("source_a"), col("source_b"))
           .agg(count(lit(1)).as("n_common"),
             sum(term.cast(DTerm)).as("ct"),

@@ -17,9 +17,16 @@ class GraftApiSpec extends SparkSpec {
       (10L, "one two three four five six seven eight"),
       (11L, "one two three four five six seven eight"),   // exact dup of 10
       (12L, "totally different content here nine ten eleven twelve"),
-      (13L, "one two three four five six seven nine")      // near dup of 10
+      (13L, "one two three four five six seven nine"),     // near dup of 10
+      (14L, null),                                        // NULL texts pair
+      (15L, null)                                         // with nothing
     ).toDF("k", "body")
   }
+
+  private val nullTextIds = Set(14L, 15L)
+
+  private def noNullTextMember(pairs: Iterable[(Long, Long)]): Boolean =
+    pairs.forall(p => !nullTextIds(p._1) && !nullTextIds(p._2))
 
   test("dedupExact keeps the first row per key under the given order") {
     import spark.implicits._
@@ -39,6 +46,7 @@ class GraftApiSpec extends SparkSpec {
     val sim = Graft.simhashPairs(c, col("k"), col("body"))
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(sim.contains((10L, 11L)))
+    assert(noNullTextMember(sim), s"NULL text paired: ${sim.mkString(",")}")
   }
 
   test("nearDupJaccard finds near dups at a threshold that excludes unrelated docs") {
@@ -50,6 +58,7 @@ class GraftApiSpec extends SparkSpec {
       s"missed near dup: $pairs")
     assert(!pairs.exists(p => p._1 == 12L || p._2 == 12L),
       s"false positive on unrelated doc: $pairs")
+    assert(noNullTextMember(pairs), s"NULL text paired: $pairs")
   }
 
   test("nearDupLsh agrees with nearDupJaccard for exact duplicates") {
@@ -462,6 +471,8 @@ class GraftApiSpec extends SparkSpec {
     assert(out.forall(p => p._1 < p._2), "canonical pair order")
     assert(out.map(p => (p._1, p._2)).distinct.length == out.length,
       "multi-band matches dedup to one pair")
+    assert(noNullTextMember(out.map(p => (p._1, p._2))),
+      s"NULL text paired: ${out.mkString(",")}")
   }
 
   test("invertedIndex: df/tf from ALL docs, postings capped in doc order") {
@@ -1365,37 +1376,33 @@ class GraftApiSpec extends SparkSpec {
       (2L, 0L, 1L)))
   }
 
-  test("pairsWithinGroups: hot keys stream via the join fallback, pair set identical") {
+  test("pairsWithinGroups: pair set equals the key-equality self-join") {
     import spark.implicits._
-    // one hot key (120 members), cold keys, a null key, a duplicate id
-    val rows = ((1 to 120).map(i => ("hot", i.toLong)) ++
+    // one hot key (120 members), cold keys, NULL keys, a duplicate id
+    val input = (1 to 120).map(i => ("hot", i.toLong)) ++
       Seq(("c1", 500L), ("c1", 501L), ("c2", 600L),
         (null: String, 900L), (null: String, 901L),
-        ("dup", 700L), ("dup", 700L), ("dup", 701L)))
-      .toDF("__k", "__id")
-    def pairs(cap: Int) = Graft.pairsWithinGroups(rows, hotCap = cap)
-      .select("id_a", "id_b").collect()
+        ("dup", 700L), ("dup", 700L), ("dup", 701L))
+    val got = Graft.pairsWithinGroups(input.toDF("__k", "__id"),
+        Seq(col("__k")), col("__id"))
+      .select("a", "b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).sortBy(p => (p._1, p._2)).toSeq
-    val grouped = pairs(Int.MaxValue) // default: pure bucket plan
-    val split = pairs(50)             // "hot" routes through the join fallback
-    assert(grouped == split)
-    // 120-member key fully paired + c1's pair + dup's two (700,701) rows
-    assert(split.size == 120 * 119 / 2 + 1 + 2)
-    // join semantics preserved: no pairs among NULL keys, no (x, x)
-    assert(!split.contains((900L, 901L)))
-    assert(!split.contains((700L, 700L)))
+    // plain Scala reference: the self-join on key equality (NULL never
+    // equals NULL) keeping a < b, one row per joined pair of rows
+    val want = (for {
+      (ka, a) <- input; (kb, b) <- input
+      if ka != null && ka == kb && a < b
+    } yield (a, b)).sortBy(p => (p._1, p._2))
+    assert(got == want)
+    assert(got.size == 120 * 119 / 2 + 1 + 2)
   }
 
-  test("pair expansion hot guard: a degenerate mass-duplicate key streams to completion") {
+  test("pairsWithinGroups: a 5000-member mass-duplicate key yields every pair") {
     import spark.implicits._
-    // 5000 identical members = 12.5M pairs through ONE key: the bucket
-    // path would buffer the whole member list in one aggregation task
-    // (and at corpus scale one >2GB row); the guard's join fallback
-    // shuffles and streams instead — this asserts the routed plan
-    // completes and is pair-exact
     val n = 5000
     val rows = (1 to n).map(i => ("same", i.toLong)).toDF("__k", "__id")
-    val cnt = Graft.pairsWithinGroups(rows, hotCap = 1000).count()
-    assert(cnt == n.toLong * (n - 1) / 2)
+    val cnt = Graft.pairsWithinGroups(rows, Seq(col("__k")), col("__id"))
+      .count()
+    assert(cnt == 12497500L) // n * (n - 1) / 2
   }
 }

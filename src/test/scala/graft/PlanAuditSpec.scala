@@ -85,6 +85,17 @@ class PlanAuditSpec extends SparkSpec {
       .isDefined, s"no (key, split)-keyed exchange:\n$p")
   }
 
+  test("q31_neardup/q30_simhash: the dedup key expression is evaluated once") {
+    // a NULL filter on the derived key would be pushed below its
+    // projection, evaluating the tokenize-and-hash lineage twice
+    Seq("q31_neardup" -> "md5(", "q30_simhash" -> "simhash(").foreach {
+      case (q, key) =>
+        val p = plan(q)
+        assert(java.util.regex.Pattern.quote(key).r.findAllIn(p).size == 1,
+          s"$q must evaluate $key exactly once:\n$p")
+    }
+  }
+
   test("q46: grouped top-k costs exactly one hash-partition shuffle") {
     val p = plan("q46_topk_grouped")
     assert("Exchange hashpartitioning".r.findAllIn(p).size == 1, p)

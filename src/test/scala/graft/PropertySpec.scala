@@ -51,7 +51,10 @@ class PropertySpec extends SparkSpec {
       (1L, "the quick brown fox jumps over the lazy dog near the river bank", "en", "s1", 60L),
       (2L, "completely different words about spark shuffle partitions and codegen stages", "en", "s2", 70L),
       (3L, "completely different words about spark shuffle partitions and codegen stages", "en", "s3", 70L),
-      (4L, "a third unrelated document mentioning minhash banding and jaccard filters", "en", "s4", 70L))
+      (4L, "a third unrelated document mentioning minhash banding and jaccard filters", "en", "s4", 70L),
+      // NULL texts share one shingle set; they must not pair
+      (5L, null, "en", "s5", 0L),
+      (6L, null, "en", "s6", 0L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     val dir = java.nio.file.Files.createTempDirectory("lshtest").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
