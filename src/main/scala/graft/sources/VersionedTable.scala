@@ -258,7 +258,7 @@ object VersionedTable {
       writeStatsSidecar(spark, dataDir, statsCols, bloomCols, bloomBitsPerRow)
     else skippingPolicy(spark, table) match {
       case Some((pStats, pBloom, pBits)) =>
-        val have = dirParquet(spark, dataDir).columns.toSet
+        val have = footerSchema(spark, dataDir).fieldNames.toSet
         val (s2, b2) = (pStats.filter(have), pBloom.filter(have))
         if (s2.nonEmpty || b2.nonEmpty)
           writeStatsSidecar(spark, dataDir, s2, b2, pBits)
@@ -625,13 +625,11 @@ object VersionedTable {
     // always bind to their dirs' physical column names.
     val chain = schemaStateOf(spark, table, version)
     if (preds.isEmpty && chain.isEmpty)
-      scopedParquet(spark, hfs, root, groups.map(_._1),
-        groups.flatMap { case (scope, toks) =>
-          groupReadPaths(hfs, root, scope, toks) })
+      parquetOf(spark, groups.flatMap { case (scope, toks) =>
+        groupReadPaths(hfs, root, scope, toks) }: _*)
     else {
       val mapped = groups.map { case (scope, toks) =>
-        val df = scopedParquet(spark, hfs, root, Seq(scope),
-          groupReadPaths(hfs, root, scope, toks))
+        val df = parquetOf(spark, groupReadPaths(hfs, root, scope, toks): _*)
         val kept = delKeepFilter(preds, scope).map(df.where).getOrElse(df)
         if (chain.isEmpty) kept
         else applySchemaChain(kept,
@@ -1725,7 +1723,7 @@ object VersionedTable {
         publishCowRebasingWith(spark, table, baseVersion, "merge",
           perScope, touched, Some(d), batchId,
           mergeKey = if (keys.size == 1) Some(keys.head) else None)(
-          paths => spark.read.parquet(paths: _*).alias("b")
+          paths => parquetOf(spark, paths: _*).alias("b")
             .join(keyFrame,
               keys.map(k => col(s"b.$k") <=> col(s"c.$k")).reduce(_ && _),
               "left_semi")
@@ -1818,7 +1816,8 @@ object VersionedTable {
     // batches must be key-unique for the upsert interpretation to hold.
     if (opOf(spark, table, version).contains("insert")) {
       import org.apache.spark.sql.functions.lit
-      val df = dirParquet(spark, dataPathsOf(spark, table, version).last)
+      val df =
+        parquetOf(spark, dataPathsOf(spark, table, version).last.toString)
       require(!df.columns.contains("__ver") && !df.columns.contains("__op"),
         s"$table carries reserved columns __ver/__op — its appends " +
           "cannot synthesize a change feed")
@@ -1833,7 +1832,7 @@ object VersionedTable {
     if (!hfs.exists(p)) throw new IllegalArgumentException(
       s"version $version of $table has no change log (full-snapshot " +
         "commit) — use diffVersions for snapshot-level CDC")
-    dirParquet(spark, p)
+    parquetOf(spark, p.toString)
   }
 
   /** BOUNDED CDC range read (r15): the change batches of every version
@@ -1879,7 +1878,7 @@ object VersionedTable {
     def batchOf(v: Long): Option[DataFrame] = {
       val mirrored = new Path(new Path(root, cdfDirName), cdfVersionDirName(v))
       if (hfs.exists(mirrored))
-        Some(spark.read.parquet(mirrored.toString).drop("_commit_version"))
+        Some(parquetOf(spark, mirrored.toString).drop("_commit_version"))
       else opOf(spark, table, v) match {
         case Some("lazydelete") =>
           // an unmirrored deferred delete synthesizes its batch from the
@@ -1945,8 +1944,7 @@ object VersionedTable {
     val added = delStateOf(spark, table, version).drop(oldState.size)
     val deleted = groupTokensByScope(splitDirs(dirStr)).map {
       case (scope, toks) =>
-        val df = scopedParquet(spark, hfs, root, Seq(scope),
-          groupReadPaths(hfs, root, scope, toks))
+        val df = parquetOf(spark, groupReadPaths(hfs, root, scope, toks): _*)
         val visible = delKeepFilter(oldState, scope)
           .map(df.where).getOrElse(df)
         delKeepFilter(added, scope) match {
@@ -2918,8 +2916,8 @@ object VersionedTable {
         resolveDir(hfs, baseRoot, v).flatMap { dirStr =>
           val newDir = splitDirs(dirStr).last
           if (opOf(spark, baseTable, v).contains("insert")) {
-            val cols = dirParquet(spark,
-              new Path(baseRoot, newDir)).columns.toSet
+            val cols = footerSchema(spark,
+              new Path(baseRoot, newDir)).fieldNames.toSet
             if (keys.forall(cols.contains)) Some((v, AppendDelta(newDir)))
             else None
           } else if (opOf(spark, baseTable, v).contains("lazydelete")) {
@@ -2975,7 +2973,7 @@ object VersionedTable {
         val touched = entries.map {
           case (_, AppendDelta(newDir)) =>
             // appended delta: the new dir's rows are exactly the change
-            dirParquet(spark, new Path(baseRoot, newDir))
+            parquetOf(spark, new Path(baseRoot, newDir).toString)
               .select(keyCols: _*)
           case (v, LazyDeleteDelta) =>
             // deferred delete: the synthesized feed names the touched
@@ -3202,7 +3200,7 @@ object VersionedTable {
       s"source dir must not live under the table's managed data/ " +
         s"namespace: $abs")
     // it must actually read as parquet before it becomes a version
-    spark.read.parquet(abs.toString).schema
+    footerSchema(spark, abs)
     hfs.mkdirs(root)
     publish(spark, table, 1L, abs.toString, op = "convert")
     1L
@@ -3561,55 +3559,47 @@ object VersionedTable {
     if (u.getPath == null || u.getPath.isEmpty) p else u.getPath
   }
 
-  /** In-process memo of a data dir's parquet footer schema (qualified
-    * scope dir → inferred StructType). Sound because committed data dirs
-    * are IMMUTABLE: [[writeSnapshot]] creates each writer-unique uuid dir
-    * exactly once (ErrorIfExists) and vacuum only ever deletes files —
-    * never rewrites one — so a dir's footer schema is fixed for the life
-    * of the process; and all dirs of one chain-free version share an
-    * identical schema (the [[append]] contract), so a multi-dir read may
-    * key on any of its scopes. Metadata only — never rows — and bounded:
-    * this exists because every schema-less `spark.read.parquet` launches
-    * a footer-inference Spark job, and one verb chain re-opens the same
-    * dirs 3–5× per statement (probe, rewrite, constraint gate, sidecar).
+  /** A dir's (or file's) parquet schema from ONE footer read on the
+    * driver — the first visible data file, descending into subdirs when
+    * the dir holds none — through the session's parquet-to-Spark
+    * converter: what a schema-less `spark.read.parquet` infers, minus its
+    * Spark job. All files of a graft dir, and all dirs of a chain-free
+    * version (the [[append]] contract), share one schema.
     */
-  private val dirSchemaMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]()
-
-  /** The shared snapshot-read entry: parquet over `paths` (all belonging
-    * to the dirs named by `scopes`), reusing a memoized footer schema
-    * when any scope has one and memoizing for all scopes otherwise.
-    * Callers guarantee the chain-free shared-schema invariant above when
-    * passing several scopes (readVersion's fast path; per-dir reads pass
-    * exactly one).
-    */
-  private def scopedParquet(spark: SparkSession, hfs: FileSystem,
-      root: Path, scopes: Seq[String], paths: Seq[String]): DataFrame =
-    memoParquet(spark, scopes.map(sc =>
-      schemeFreePath(hfs.makeQualified(new Path(root, sc)).toString)), paths)
-
-  /** [[scopedParquet]] for a caller holding the data dir as an absolute
-    * path already (the fresh-dir commit tail: constraint gate + sidecar).
-    */
-  private def dirParquet(spark: SparkSession, dataDir: Path): DataFrame = {
-    val hfs = dataDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    memoParquet(spark,
-      Seq(schemeFreePath(hfs.makeQualified(dataDir).toString)),
-      Seq(dataDir.toString))
+  private def footerSchema(spark: SparkSession,
+      path: Path): org.apache.spark.sql.types.StructType = {
+    import org.apache.hadoop.fs.FileStatus
+    import org.apache.parquet.format.converter.ParquetMetadataConverter
+    import org.apache.parquet.hadoop.Footer
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+    val conf = spark.sparkContext.hadoopConfiguration
+    val hfs = path.getFileSystem(conf)
+    def firstFile(st: FileStatus): Option[FileStatus] =
+      if (st.isFile) Some(st)
+      else {
+        val (files, dirs) = hfs.listStatus(st.getPath)
+          .filterNot { c => val n = c.getPath.getName
+            n.startsWith("_") || n.startsWith(".") }
+          .sortBy(_.getPath.getName).partition(_.isFile)
+        files.headOption.orElse(dirs.iterator.flatMap(firstFile).nextOption())
+      }
+    val file = firstFile(hfs.getFileStatus(path)).getOrElse(
+      throw new IllegalArgumentException(s"no parquet data file under $path"))
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(file, conf),
+      ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
   }
 
-  private def memoParquet(spark: SparkSession, keys: Seq[String],
-      paths: Seq[String]): DataFrame = {
-    val known = keys.iterator.map(dirSchemaMemo.get).find(_ != null)
-    known match {
-      case Some(s) => spark.read.schema(s).parquet(paths: _*)
-      case None =>
-        val df = spark.read.parquet(paths: _*)
-        if (dirSchemaMemo.size < 8192)
-          keys.foreach(k => dirSchemaMemo.putIfAbsent(k, df.schema))
-        df
-    }
-  }
+  /** The shared snapshot-read entry: parquet over `paths` (files or dirs
+    * sharing one schema) typed by the first path's [[footerSchema]].
+    */
+  private def parquetOf(spark: SparkSession, paths: String*): DataFrame =
+    spark.read.schema(footerSchema(spark, new Path(paths.head)))
+      .parquet(paths: _*)
 
   /** One scope's VISIBLE rows: the token group's restricted parquet
     * read with the scope's deferred-delete keep filter bound to the RAW
@@ -3618,8 +3608,7 @@ object VersionedTable {
   private def visibleScopeFrame(spark: SparkSession, hfs: FileSystem,
       root: Path, preds: Seq[DelPred], scope: String,
       toks: Seq[String]): DataFrame = {
-    val df = scopedParquet(spark, hfs, root, Seq(scope),
-      groupReadPaths(hfs, root, scope, toks))
+    val df = parquetOf(spark, groupReadPaths(hfs, root, scope, toks): _*)
     delKeepFilter(preds, scope).map(df.where).getOrElse(df)
   }
 
@@ -3707,7 +3696,7 @@ object VersionedTable {
     import org.apache.spark.sql.functions.{coalesce, lit}
     publishCowRebasingWith(spark, table, base, op, basePerScope, touched,
       newDir)(paths =>
-      spark.read.parquet(paths: _*)
+      parquetOf(spark, paths: _*)
         .where(coalesce(cond, lit(false))).limit(1).count() > 0)
   }
 
@@ -4124,7 +4113,7 @@ object VersionedTable {
     val cs = constraintsOf(spark, table)
     if (cs.isEmpty) return
     import org.apache.spark.sql.functions._
-    val snap = dirParquet(spark, new Path(new Path(table), dirName))
+    val snap = parquetOf(spark, new Path(new Path(table), dirName).toString)
     val counts =
       try snap.select(cs.map { case (n, e) =>
         sum(when(!coalesce(expr(e), lit(true)), 1L).otherwise(0L)).as(n)
@@ -4188,7 +4177,7 @@ object VersionedTable {
         .map(d => new Path(new Path(root, d), statsDirName))
         .map { p =>
           if (!hfs.exists(p)) Seq.empty[String]
-          else try spark.read.parquet(p.toString).columns.toSeq
+          else try footerSchema(spark, p).fieldNames.toSeq
           catch { case scala.util.control.NonFatal(_) => Seq.empty[String] }
         }
       val cols =
@@ -4249,7 +4238,7 @@ object VersionedTable {
       bloomBitsPerRow: Int = 10): Unit = {
     if (cols.isEmpty && bloomCols.isEmpty) return
     import org.apache.spark.sql.functions._
-    val df = dirParquet(spark, dataDir)
+    val df = parquetOf(spark, dataDir.toString)
     val missing = (cols ++ bloomCols).distinct.filterNot(df.columns.contains)
     require(missing.isEmpty,
       s"stats column(s) ${missing.mkString(", ")} not in snapshot schema")
@@ -4345,7 +4334,7 @@ object VersionedTable {
       val (haveStats, haveBloom): (Seq[String], Seq[String]) =
         if (!hfs.exists(statsPath)) (Nil, Nil)
         else {
-          val have = spark.read.parquet(statsPath.toString).columns
+          val have = footerSchema(spark, statsPath).fieldNames
           (have.filter(_.startsWith("min__"))
             .map(_.stripPrefix("min__")).toSeq,
             have.filter(_.startsWith("bloom_m__"))
@@ -4383,18 +4372,36 @@ object VersionedTable {
     * min <= upper`); bounds on uncovered columns prune nothing (the
     * residual filter still applies them row-level). Appended versions
     * prune PER DIR: a dir without a sidecar keeps all its files (listed,
-    * not scanned). The kept list is driver-side — one path per SURVIVING
-    * file, the same driver-memory class as the file index every scan
-    * builds.
+    * not scanned). `schema` is the version's snapshot schema — it types
+    * the Bloom probe values. Cost: one footer read and one one-row-per-
+    * file sidecar scan (one Spark job) per sidecar-bearing dir; the probe
+    * hashes are evaluated once per call, on the driver.
     */
   private[graft] def pruneSelection(spark: SparkSession, table: String,
-      version: Long, bounds: Seq[ColumnBounds],
+      version: Long, schema: org.apache.spark.sql.types.StructType,
+      bounds: Seq[ColumnBounds],
       equalities: Seq[ColumnEquals] = Nil,
       inLists: Seq[ColumnIn] = Nil): Option[(Seq[String], Int)] = {
     val (hfs, root) = fs(spark, table)
     val tokens = resolveDir(hfs, root, version).map(splitDirs).getOrElse(
       throw new IllegalArgumentException(
         s"version $version of $table was never committed"))
+    // point predicates (equalities + size-capped IN-lists), unified: a
+    // file survives an IN-list iff ANY value could be present
+    val pointPreds: Seq[(String, Seq[Any])] =
+      equalities.map(e => e.column -> Seq(e.value)) ++
+        inLists.filter(l => l.values.nonEmpty &&
+          l.values.size <= MaxInListSkip).map(l => l.column -> l.values)
+    // aligned with pointPreds: each value's k probe hashes as the
+    // snapshot's column type (None: the column is not in the snapshot).
+    // Lazy — only a sidecar carrying a Bloom filter for a point column
+    // forces it, once for every dir
+    lazy val probeHashes: Seq[Option[Seq[Seq[Long]]]] = {
+      val typed = pointPreds.map { case (c, vs) =>
+        schema.find(_.name == c).map(f => vs.map(f.dataType -> _)) }
+      val hs = bloomHashes(spark, typed.flatten.flatten).iterator
+      typed.map(_.map(_.map(_ => hs.next())))
+    }
     // file-granular CoW versions reference kept FILES of a dir: the dir's
     // `_stats` sidecar still covers them (stats are per file; the
     // rewritten-away files' rows are simply never consulted), so pruning
@@ -4405,21 +4412,21 @@ object VersionedTable {
       groupTokensByScope(tokens).map { case (scope, toks) =>
         val restriction: Option[Set[String]] =
           groupRestriction(hfs, root, scope, toks).map(_.toSet)
-        val dataDir = new Path(root, scope)
-        val statsPath = new Path(dataDir, statsDirName)
+        val statsPath = new Path(new Path(root, scope), statsDirName)
         // the sidecar is an OPTIMIZATION: any failure reading it (an
         // [[ensureStats]] backfill rewriting it mid-read, a truncated
-        // write) must degrade to the full scan, never fail the query
+        // write, an unreadable footer) must degrade to the full scan,
+        // never fail the query
         val sel =
           if (!hfs.exists(statsPath)) None
-          else try pruneAgainstStats(spark, dataDir, statsPath, bounds,
-            equalities, inLists).map { case (kept, total) =>
-              restriction match {
-                case None => (kept, total)
-                case Some(rs) => (kept.filter(rs.contains), rs.size)
-              }
-            }
-          catch { case scala.util.control.NonFatal(_) => None }
+          else try {
+            val (kept, total) = pruneAgainstStats(spark, statsPath, bounds,
+              pointPreds, probeHashes)
+            Some(restriction match {
+              case None => (kept, total)
+              case Some(rs) => (kept.filter(rs.contains), rs.size)
+            })
+          } catch { case scala.util.control.NonFatal(_) => None }
         (scope, restriction, sel)
       }
     if (perDir.forall(_._3.isEmpty)) return None
@@ -4437,77 +4444,61 @@ object VersionedTable {
     Some((parts.flatMap(_._1), parts.iterator.map(_._2).sum))
   }
 
-  private def pruneAgainstStats(spark: SparkSession, dataDir: Path,
-      statsPath: Path, bounds: Seq[ColumnBounds],
-      equalities: Seq[ColumnEquals],
-      inLists: Seq[ColumnIn]): Option[(Seq[String], Int)] = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val stats = spark.read.parquet(statsPath.toString)
+  /** One dir's sidecar against the predicates: (kept file names, files
+    * in the sidecar). `probeHashes` is aligned with `pointPreds` (see
+    * [[pruneSelection]]).
+    */
+  private def pruneAgainstStats(spark: SparkSession, statsPath: Path,
+      bounds: Seq[ColumnBounds], pointPreds: Seq[(String, Seq[Any])],
+      probeHashes: => Seq[Option[Seq[Seq[Long]]]]): (Seq[String], Int) = {
+    import org.apache.spark.sql.functions.{coalesce, col, lit}
+    val stats = parquetOf(spark, statsPath.toString)
+    val has = stats.columns.toSet
     val rangeTests = bounds
-      .filter(b => stats.columns.contains(s"min__${b.column}"))
+      .filter(b => has(s"min__${b.column}"))
       .flatMap { b =>
         b.lower.map(l => col(s"max__${b.column}") >= lit(l)).toSeq ++
           b.upper.map(u => col(s"min__${b.column}") <= lit(u)).toSeq
       }
-    // column dtypes only matter for Bloom probes (the probe hash must be
-    // computed on the value AS the column's type); one footer read
-    lazy val snapSchema =
-      spark.read.parquet(dataDir.toString).schema
-    // point predicates (equalities + size-capped IN-lists), unified: a
-    // file survives an IN-list iff ANY value could be present. Bloom
-    // probe hashes for EVERY (column, value) pair are computed in ONE
-    // 1-row job — per-value jobs would cost an IN-list up to
-    // MaxInListSkip round trips.
-    val pointPreds: Seq[(String, Seq[Any])] =
-      equalities.map(e => e.column -> Seq(e.value)) ++
-        inLists.filter(l => l.values.nonEmpty &&
-          l.values.size <= MaxInListSkip).map(l => l.column -> l.values)
-    def bloomAvailable(c: String) =
-      stats.columns.contains(s"bloom_m__$c") && snapSchema.fieldNames.contains(c)
-    val bloomItems = pointPreds.flatMap { case (c, vs) =>
-      if (bloomAvailable(c)) vs.map(v => (snapSchema(c).dataType, v)) else Nil
-    }
-    // consumed below in the exact order pointPreds built bloomItems
-    val hashIt = bloomHashes(spark, bloomItems).iterator
-    val pointTests = pointPreds.flatMap { case (c, vs) =>
-      if (bloomAvailable(c))
-        Some(vs.map(_ => bloomTestExpr(c, hashIt.next())).reduce(_ || _))
-      else if (stats.columns.contains(s"min__$c"))
-        // no Bloom -> the zone map still excludes files whose range
-        // cannot contain the point
-        Some(vs.map(v => col(s"min__$c") <= lit(v) &&
-          col(s"max__$c") >= lit(v)).reduce(_ || _))
-      else None
+    val pointTests = pointPreds.zipWithIndex.flatMap { case ((c, vs), i) =>
+      (if (has(s"bloom_m__$c")) probeHashes(i) else None) match {
+        case Some(hs) => Some(hs.map(bloomTestExpr(c, _)).reduce(_ || _))
+        case None if has(s"min__$c") =>
+          // no Bloom -> the zone map still excludes files whose range
+          // cannot contain the point
+          Some(vs.map(v => col(s"min__$c") <= lit(v) &&
+            col(s"max__$c") >= lit(v)).reduce(_ || _))
+        case None => None
+      }
     }
     val keep = (rangeTests ++ pointTests)
       .reduceOption(_ && _).getOrElse(lit(true))
     // an all-null file has null min/max -> the range test is NULL ->
     // "cannot satisfy" -> prune (false), matching SQL range semantics.
-    // The keep test folds INTO the sidecar scan: only SURVIVING file
-    // names materialize on the driver — bounded by the files the read
-    // will open anyway (the same driver-memory class as the file index
-    // every scan builds), not by the table's total file count.
-    val total = stats.count().toInt
-    val kept = stats
-      .where(org.apache.spark.sql.functions.coalesce(keep, lit(false)))
-      .select(col("file")).collect().map(_.getString(0)).toSeq
-    Some((kept, total))
+    // ONE scan returns every file with its keep flag: the total and the
+    // survivors in one job — one (name, flag) per file on the driver,
+    // the same driver-memory class as the file index every scan builds
+    val flags = stats.select(col("file"), coalesce(keep, lit(false)))
+      .collect()
+    (flags.iterator.filter(_.getBoolean(1)).map(_.getString(0)).toSeq,
+      flags.length)
   }
 
-  /** The k probe hashes for each (column-type, value) pair, all computed
-    * by ONE 1-row Spark job — the SAME `xxhash64(value-as-column-type,
-    * seed)` expression the write side evaluated, so driver and executor
-    * hashing can never drift.
+  /** The k probe hashes for each (column-type, value) pair: the SAME
+    * analyzed `xxhash64(value-as-column-type, seed)` expression the write
+    * side evaluates per row, evaluated here on the driver (constant
+    * inputs need no Spark job), so driver and executor hashing can never
+    * drift.
     */
-  private def bloomHashes(spark: SparkSession,
+  private[graft] def bloomHashes(spark: SparkSession,
       items: Seq[(org.apache.spark.sql.types.DataType, Any)]): Seq[Seq[Long]] = {
     import org.apache.spark.sql.functions.{lit, xxhash64}
     if (items.isEmpty) return Nil
     val exprs = items.flatMap { case (dt, v) =>
       BloomSeeds.map(s => xxhash64(lit(v).cast(dt), lit(s))) }
-    val row = spark.range(1).select(exprs: _*).head()
-    items.indices.map(i =>
-      BloomSeeds.indices.map(j => row.getLong(i * BloomSeeds.size + j)))
+    val hashes = spark.range(1).select(exprs: _*).queryExecution.analyzed
+      .expressions.map(_.eval().asInstanceOf[Long])
+    hashes.grouped(BloomSeeds.size).toSeq
   }
 
   /** The membership test for one value's probe `hashes` against column
@@ -4558,7 +4549,8 @@ object VersionedTable {
     // materializes the mapping
     if (schemaStateOf(spark, table, version).nonEmpty)
       return full.where(residual)
-    pruneSelection(spark, table, version, bounds, equalities, inLists) match {
+    pruneSelection(spark, table, version, full.schema, bounds, equalities,
+        inLists) match {
       case None => full.where(residual)
       case Some((kept, total)) if kept.size == total => full.where(residual)
       case Some((kept, _)) if kept.isEmpty =>

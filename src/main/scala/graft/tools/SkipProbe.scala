@@ -59,13 +59,15 @@ object SkipProbe {
       .where(col("l_shipdate").between("1995-03-01", "1995-03-31")).count())
     val (tPrunedRange, _) = med5(() =>
       VersionedTable.readVersionPruned(spark, t, 1L, monthB).count())
-    val selRange = VersionedTable.pruneSelection(spark, t, 1L, monthB)
+    val selRange =
+      VersionedTable.pruneSelection(spark, t, 1L, full.schema, monthB)
 
     val (tFullPoint, nPoint) = med5(() =>
       full.where(col("l_orderkey") === 1285L).count())
     val (tPrunedPoint, _) = med5(() =>
       VersionedTable.readVersionPruned(spark, t, 1L, Nil, keyE).count())
-    val selPoint = VersionedTable.pruneSelection(spark, t, 1L, Nil, keyE)
+    val selPoint =
+      VersionedTable.pruneSelection(spark, t, 1L, full.schema, Nil, keyE)
 
     println(f"range 1-month: rows=$nRange full=${tFullRange}%.0fms " +
       f"pruned=${tPrunedRange}%.0fms files=${touched(selRange)}")

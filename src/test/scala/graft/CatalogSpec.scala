@@ -142,6 +142,7 @@ class CatalogSpec extends AnyFunSuite {
       import graft.sources.VersionedTable.ColumnBounds
       val latestV = VersionedTable.latestVersion(spark, tbl).get
       assert(VersionedTable.pruneSelection(spark, tbl, latestV,
+        VersionedTable.readVersion(spark, tbl, latestV).schema,
         Seq(ColumnBounds("k", Some(9L), Some(9L)))).isDefined,
         "statement-set policy did not reach the merge commit's sidecar")
 
@@ -660,6 +661,7 @@ class CatalogSpec extends AnyFunSuite {
       // the same bounds prune files at the manifest level (the vanilla
       // scan routes through readLatestPruned — pruneSelection parity)
       val (kept, total) = VersionedTable.pruneSelection(spark, root, 1L,
+        VersionedTable.readVersion(spark, root, 1L).schema,
         Seq(ColumnBounds("id", Some(2000L), Some(2999L)))).get
       assert(kept.size < total, s"no file pruning: ${kept.size}/$total")
 

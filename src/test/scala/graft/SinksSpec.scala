@@ -9,6 +9,18 @@ class SinksSpec extends SparkSpec {
   private def tmp(): String =
     java.nio.file.Files.createTempDirectory("graft-sink").toString
 
+  /** pruneSelection typed by the version's own snapshot schema, as
+    * readVersionPruned calls it.
+    */
+  private def prune(t: String, v: Long,
+      bounds: Seq[graft.sources.VersionedTable.ColumnBounds],
+      eqs: Seq[graft.sources.VersionedTable.ColumnEquals] = Nil,
+      ins: Seq[graft.sources.VersionedTable.ColumnIn] = Nil) = {
+    import graft.sources.VersionedTable
+    VersionedTable.pruneSelection(spark, t, v,
+      VersionedTable.readVersion(spark, t, v).schema, bounds, eqs, ins)
+  }
+
   test("parquet round-trip with directory partitioning prunes by partition") {
     val docs = Tables(spark, sfDir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
@@ -538,7 +550,7 @@ class SinksSpec extends SparkSpec {
 
     // narrow id range -> at most 2 of 8 range-clustered files survive
     val idBounds = Seq(ColumnBounds("id", Some(2000L), Some(2999L)))
-    val (kept, total) = VersionedTable.pruneSelection(spark, t, 1L, idBounds).get
+    val (kept, total) = prune(t, 1L, idBounds).get
     assert(total == 8, s"expected 8 stats rows, got $total")
     assert(kept.nonEmpty && kept.size <= 2, s"kept ${kept.size}/8 files")
     val pruned = VersionedTable.readVersionPruned(spark, t, 1L, idBounds)
@@ -548,7 +560,7 @@ class SinksSpec extends SparkSpec {
     // all-null files prune on the null-bearing column (min/max null fail
     // every range test), and the surviving rows are exact
     val nvBounds = Seq(ColumnBounds("nv", Some(0L), None))
-    val (keptNv, _) = VersionedTable.pruneSelection(spark, t, 1L, nvBounds).get
+    val (keptNv, _) = prune(t, 1L, nvBounds).get
     assert(keptNv.size < 8, s"all-null nv files not pruned: ${keptNv.size}/8")
     val prunedNv = VersionedTable.readVersionPruned(spark, t, 1L, nvBounds)
     val expectNv = full.where(col("nv") >= 0L)
@@ -582,8 +594,7 @@ class SinksSpec extends SparkSpec {
     import spark.implicits._
     VersionedTable.commit(spark,
       Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "s"), t2)
-    assert(VersionedTable.pruneSelection(spark, t2, 1L,
-      Seq(ColumnBounds("k", Some(2L), None))).isEmpty)
+    assert(prune(t2, 1L, Seq(ColumnBounds("k", Some(2L), None))).isEmpty)
     val fb = VersionedTable.readLatestPruned(spark, t2,
       Seq(ColumnBounds("k", Some(2L), None)))
     assert(fb.collect().map(_.getLong(0)).toSet == Set(2L, 3L))
@@ -605,7 +616,7 @@ class SinksSpec extends SparkSpec {
     // a present id lives in exactly one group -> exactly one file really
     // holds it; Bloom keeps that file plus <= a false positive or two
     val hit = Seq(ColumnEquals("id", 12345L))
-    val (kept, total) = VersionedTable.pruneSelection(spark, t, 1L, Nil, hit).get
+    val (kept, total) = prune(t, 1L, Nil, hit).get
     assert(total == 8 && kept.nonEmpty && kept.size <= 3,
       s"bloom kept ${kept.size}/$total files for a single-file id")
     val got = VersionedTable.readVersionPruned(spark, t, 1L, Nil, hit)
@@ -614,7 +625,7 @@ class SinksSpec extends SparkSpec {
     // an ABSENT id: every filter should reject it (k=7 at 10 bits/row);
     // the read must come back empty without error
     val miss = Seq(ColumnEquals("id", 999999999L))
-    val (keptM, _) = VersionedTable.pruneSelection(spark, t, 1L, Nil, miss).get
+    val (keptM, _) = prune(t, 1L, Nil, miss).get
     assert(keptM.size <= 1, s"absent id kept ${keptM.size}/8 files")
     assert(VersionedTable.readVersionPruned(spark, t, 1L, Nil, miss).count() == 0)
 
@@ -626,8 +637,7 @@ class SinksSpec extends SparkSpec {
 
     // no Bloom for a column -> equality falls back to its zone map: on
     // the CLUSTER column the point range prunes to one file
-    val (keptG, _) = VersionedTable.pruneSelection(spark, t, 1L, Nil,
-      Seq(ColumnEquals("grp", 5L))).get
+    val (keptG, _) = prune(t, 1L, Nil, Seq(ColumnEquals("grp", 5L))).get
     assert(keptG.size <= 2, s"zone-map point lookup kept ${keptG.size}/8")
     val g5 = VersionedTable.readVersionPruned(spark, t, 1L, Nil,
       Seq(ColumnEquals("grp", 5L)))
@@ -659,7 +669,7 @@ class SinksSpec extends SparkSpec {
     val lo = new java.sql.Timestamp(span.getTimestamp(0).getTime + 86400000L)
     val hi = new java.sql.Timestamp(lo.getTime + 86400000L)
     val bounds = Seq(ColumnBounds("ts", Some(lo), Some(hi)))
-    val (kept, total) = VersionedTable.pruneSelection(spark, t, 1L, bounds).get
+    val (kept, total) = prune(t, 1L, bounds).get
     assert(total == 8 && kept.nonEmpty && kept.size < 8,
       s"timestamp bounds kept ${kept.size}/$total")
     val got = VersionedTable.readVersionPruned(spark, t, 1L, bounds)
@@ -679,7 +689,7 @@ class SinksSpec extends SparkSpec {
     VersionedTable.commit(spark, spark.range(1000).toDF("id")
       .repartitionByRange(4, col("id")).sortWithinPartitions(col("id")), t2)
     assert(VersionedTable.ensureStats(spark, t2, 1L, Seq("id")))
-    val (kept, total) = VersionedTable.pruneSelection(spark, t2, 1L,
+    val (kept, total) = prune(t2, 1L,
       Seq(ColumnBounds("id", Some(0L), Some(99L)))).get
     assert(total == 4 && kept.size < 4, s"kept ${kept.size}/$total")
   }
@@ -694,18 +704,180 @@ class SinksSpec extends SparkSpec {
     // two present ids + one absent: ~2 real files + at most a false
     // positive or two survive; rows are exactly the present pair
     val probe = Seq(ColumnIn("id", Seq(100L, 15001L, 888888L)))
-    val (kept, total) = VersionedTable.pruneSelection(spark, t, 1L,
-      Nil, Nil, probe).get
+    val (kept, total) = prune(t, 1L, Nil, Nil, probe).get
     assert(total == 8 && kept.size <= 4, s"IN-list kept ${kept.size}/8")
     val got = VersionedTable.readVersionPruned(spark, t, 1L, Nil, Nil, probe)
     assert(got.collect().map(_.getLong(0)).sorted.toSeq == Seq(100L, 15001L))
     // an over-cap list prunes nothing but still filters exactly
     val big = ColumnIn("id", (0L until 300L).map(_ * 64L))
-    val (keptBig, _) = VersionedTable.pruneSelection(spark, t, 1L,
-      Nil, Nil, Seq(big)).get
+    val (keptBig, _) = prune(t, 1L, Nil, Nil, Seq(big)).get
     assert(keptBig.size == 8, "over-cap IN-list must not prune")
     assert(VersionedTable.readVersionPruned(spark, t, 1L, Nil, Nil, Seq(big))
       .count() == 300L)
+  }
+
+  /** The call sites ("collect at X.scala:N") of the jobs `body` launches,
+    * each flagged when it is a schema-inference or listing job (its
+    * stage starts in DataFrameReader/DataSource, as the benchmark tracer
+    * classifies them). Listener events arrive asynchronously but in
+    * order, so a marker job closes the window: once its start arrives,
+    * every earlier start has.
+    */
+  private def jobsOf(body: => Any): Seq[(String, Boolean)] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val marker = "graft.test.marker"
+    val seen = new java.util.concurrent.LinkedBlockingQueue[(String, Boolean)]
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        val p = Option(j.properties)
+        seen.put(
+          if (p.exists(_.getProperty(marker) != null)) (marker, false)
+          else (j.stageInfos.lastOption.map(_.name).getOrElse(""),
+            p.exists(x => Option(x.getProperty("spark.job.description"))
+              .exists(_.contains("Listing leaf files"))) ||
+            j.stageInfos.exists { st =>
+              val top = st.details.takeWhile(_ != '\n')
+              top.contains("DataFrameReader.") || top.contains("DataSource.")
+            }))
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(l)
+    try {
+      body
+      sc.setLocalProperty(marker, "1")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty(marker, null)
+      val out = Seq.newBuilder[(String, Boolean)]
+      var j = seen.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      while (j != null && j._1 != marker) {
+        out += j
+        j = seen.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      }
+      assert(j != null, "the marker job never reached the listener")
+      out.result()
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("pruned reads launch at most one job per sidecar dir, no inference") {
+    import graft.sources.{GraftSql, VersionedTable}
+    import graft.sources.VersionedTable.{ColumnBounds, ColumnEquals}
+    val t = tmp() + "/vt_jobs"
+    VersionedTable.setSkippingPolicy(spark, t, Seq("d"), Seq("k"))
+    val df = spark.range(4000).select(col("id").as("k"),
+      (col("id") % 40).as("d"), (col("id") % 3).as("cat"))
+    VersionedTable.commitClustered(spark, df, t, Seq("d"), numFiles = 4,
+      statsCols = Seq("d"), bloomCols = Seq("k"))
+    GraftSql.sql(spark, s"UPDATE '$t' SET cat = 9 WHERE d = 5").collect()
+    // two data dirs, both with a sidecar: the base dir's kept files and
+    // the dir the UPDATE wrote
+    val latest = VersionedTable.latestVersion(spark, t).get
+    val dirs = VersionedTable.history(spark, t)
+      .where(col("version") === latest).head().getString(1).split(';')
+      .map(_.takeWhile(_ != '!').split('/').take(2).mkString("/")).distinct
+    assert(dirs.length == 2 && dirs.forall(d =>
+      new java.io.File(s"$t/$d/_stats").isDirectory), dirs.mkString(";"))
+
+    val point = Seq(ColumnEquals("k", 1234L))
+    var pointDf: org.apache.spark.sql.DataFrame = null
+    val pointJobs = jobsOf {
+      pointDf = VersionedTable.readLatestPruned(spark, t, Nil, point) }
+    assert(pointJobs.size <= dirs.length && !pointJobs.exists(_._2),
+      s"point read built with ${pointJobs.size} jobs for ${dirs.length} " +
+        s"dirs: $pointJobs")
+    assert(pointDf.collect().map(_.getLong(0)).toSeq == Seq(1234L))
+
+    val range = Seq(ColumnBounds("d", Some(10L), Some(12L)))
+    val rangeJobs = jobsOf(VersionedTable.readVersionPruned(spark, t, 1L, range))
+    assert(rangeJobs.size <= 1 && !rangeJobs.exists(_._2),
+      s"one-dir range read built with ${rangeJobs.size} jobs: $rangeJobs")
+    val latestRangeJobs = jobsOf(VersionedTable.readLatestPruned(spark, t, range))
+    assert(latestRangeJobs.size <= dirs.length &&
+      !latestRangeJobs.exists(_._2), latestRangeJobs.toString)
+  }
+
+  test("Bloom probe hashes equal the executor's xxhash64 for each type") {
+    import graft.sources.VersionedTable
+    import graft.sources.VersionedTable.ColumnEquals
+    import org.apache.spark.sql.types.DecimalType
+    val t = tmp() + "/vt_bloom_types"
+    val cols = Seq("l", "i", "s", "dt", "ts", "dec", "dbl")
+    val df = spark.range(400).select((col("id") / 100).cast("int").as("g"),
+      col("id").as("l"), col("id").cast("int").as("i"),
+      concat(lit("s"), col("id")).as("s"),
+      date_add(lit(java.sql.Date.valueOf("2020-01-01")),
+        col("id").cast("int")).as("dt"),
+      timestamp_seconds(lit(1600000000L) + col("id") * 3600L).as("ts"),
+      (col("id") * 1.25).cast(DecimalType(12, 2)).as("dec"),
+      (col("id") * 0.5).as("dbl"))
+    VersionedTable.commitClustered(spark, df, t, clusterCols = Seq("g"),
+      numFiles = 4, bloomCols = cols)
+    val full = VersionedTable.readVersion(spark, t, 1L)
+    val row = full.where(col("l") === 237L).head()
+    val holder = full.where(col("l") === 237L)
+      .select(col("_metadata.file_name")).head().getString(0)
+    // the values as a caller passes them (the JVM types Spark returns),
+    // plus an Int value probing the bigint column
+    val probes: Seq[(String, Any)] =
+      cols.map(c => c -> row.getAs[Any](c)) :+ ("l" -> 237)
+    probes.foreach { case (c, v) =>
+      val dt = full.schema(c).dataType
+      val want = spark.range(1).select((0 until 7).map(s =>
+        xxhash64(lit(v).cast(dt), lit(s))): _*).head()
+      assert(VersionedTable.bloomHashes(spark, Seq(dt -> v)) ==
+        Seq((0 until 7).map(want.getLong)), s"$c ($dt) = $v")
+      val (kept, total) = prune(t, 1L, Nil, Seq(ColumnEquals(c, v))).get
+      assert(total == 4 && kept.map(_.split('/').last) == Seq(holder),
+        s"$c = $v kept $kept, the value lives in $holder")
+      assert(VersionedTable.readVersionPruned(spark, t, 1L, Nil,
+        Seq(ColumnEquals(c, v))).select("l").collect().map(_.getLong(0))
+        .toSeq == Seq(237L), s"$c = $v")
+    }
+  }
+
+  test("an unreadable sidecar degrades its dir to a full scan, never fails") {
+    import graft.sources.VersionedTable
+    import graft.sources.VersionedTable.{ColumnBounds, ColumnEquals}
+    val t = tmp() + "/vt_bad_stats"
+    VersionedTable.setSkippingPolicy(spark, t, Seq("id"), Seq("m"))
+    VersionedTable.commitClustered(spark,
+      spark.range(2000).select(col("id"), (col("id") % 7).as("m")), t,
+      Seq("id"), numFiles = 4)
+    VersionedTable.append(spark, t,
+      spark.range(2000, 3000).select(col("id"), (col("id") % 7).as("m"))
+        .repartitionByRange(2, col("id")))
+    val dirs = VersionedTable.history(spark, t)
+      .where(col("version") === 2L).head().getString(1).split(';').toSeq
+    assert(dirs.size == 2, dirs.mkString(";"))
+    // truncate the base dir's sidecar mid-file (and drop its checksum, so
+    // the parquet footer read itself is what fails)
+    val stats = new java.io.File(s"$t/${dirs.head}/_stats")
+    val part = stats.listFiles().filter(f =>
+      f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).head
+    val bytes = java.nio.file.Files.readAllBytes(part.toPath)
+    java.nio.file.Files.write(part.toPath,
+      java.util.Arrays.copyOf(bytes, bytes.length / 2))
+    new java.io.File(stats, s".${part.getName}.crc").delete()
+
+    val baseFiles = new java.io.File(s"$t/${dirs.head}").listFiles()
+      .map(_.getName).filter(_.endsWith(".parquet")).toSet
+    val full = VersionedTable.readLatest(spark, t)
+    Seq(
+      (Seq(ColumnBounds("id", Some(2100L), Some(2150L))), Nil,
+        col("id").between(2100L, 2150L)),
+      (Nil, Seq(ColumnEquals("m", 3L)), col("m") === 3L)
+    ).foreach { case (bounds, eqs, cond) =>
+      prune(t, 2L, bounds, eqs).foreach { case (kept, _) =>
+        val keptBase = kept.filter(_.startsWith(dirs.head + "/"))
+          .map(_.split('/').last).toSet
+        assert(keptBase == baseFiles,
+          s"the unreadable sidecar's dir pruned: $keptBase vs $baseFiles")
+      }
+      val got = VersionedTable.readLatestPruned(spark, t, bounds, eqs)
+      val want = full.where(cond)
+      assert(got.count() == want.count() &&
+        got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+    }
   }
 
   test("pruned-read law: random bounds always equal the filtered full read") {
@@ -750,7 +922,7 @@ class SinksSpec extends SparkSpec {
     VersionedTable.commitZordered(spark, grid, t, "x", "y", numFiles = 16)
     val full = VersionedTable.readVersion(spark, t, 1L)
     def kept(b: ColumnBounds) =
-      VersionedTable.pruneSelection(spark, t, 1L, Seq(b)).get._1.size
+      prune(t, 1L, Seq(b)).get._1.size
     val kx = kept(ColumnBounds("x", Some(0L), Some(12L)))
     val ky = kept(ColumnBounds("y", Some(0L), Some(12L)))
     assert(kx < 16 && kx <= 8, s"x-range kept $kx/16 files")
@@ -773,7 +945,7 @@ class SinksSpec extends SparkSpec {
       targetFileBytes = 1L << 9, zorderCols = Seq("x", "y"))
     assert(v3 == 3L)
     def kept3(b: ColumnBounds) =
-      VersionedTable.pruneSelection(spark, t, v3, Seq(b)).get match {
+      prune(t, v3, Seq(b)).get match {
         case (k, total) => (k.size, total)
       }
     val (k3x, tot) = kept3(ColumnBounds("x", Some(0L), Some(12L)))
@@ -802,15 +974,14 @@ class SinksSpec extends SparkSpec {
       concat(lit("u"), col("id")).as("name"))
       .repartitionByRange(4, col("k")).sortWithinPartitions(col("k"))
     VersionedTable.commit(spark, base, t)
-    assert(VersionedTable.pruneSelection(spark, t, 1L,
+    assert(prune(t, 1L,
       Seq(ColumnBounds("k", Some(0L), Some(10L)))).exists(_._2 == 4))
 
     // mergeInto writes v2 through the merge path — the sidecar must
     // follow, with both the zone map and the bloom filter intact
     VersionedTable.mergeInto(spark, t,
       Seq((99999L, "new-row")).toDF("k", "name"), key = "k")
-    val sel = VersionedTable.pruneSelection(spark, t, 2L,
-      Seq(ColumnBounds("k", Some(0L), Some(10L)))).get
+    val sel = prune(t, 2L, Seq(ColumnBounds("k", Some(0L), Some(10L)))).get
     assert(sel._2 >= 1, "merge commit lost the stats sidecar")
     val hit = VersionedTable.readLatestPruned(spark, t, Nil,
       Seq(ColumnEquals("name", "u1234")))
@@ -822,22 +993,19 @@ class SinksSpec extends SparkSpec {
     VersionedTable.setSkippingPolicy(spark, t2, statsCols = Seq("k"))
     VersionedTable.mergeBatchIfNew(spark, t2,
       Seq((1L, "a"), (2L, "b")).toDF("k", "name"), key = "k", batchId = 0L)
-    assert(VersionedTable.pruneSelection(spark, t2, 1L,
-      Seq(ColumnBounds("k", Some(1L), Some(1L)))).isDefined,
+    assert(prune(t2, 1L, Seq(ColumnBounds("k", Some(1L), Some(1L)))).isDefined,
       "first streaming batch lost the sidecar")
 
     // a policy column absent from the snapshot schema is skipped, not fatal
     val t3 = tmp() + "/vt_policy_evolve"
     VersionedTable.setSkippingPolicy(spark, t3, statsCols = Seq("k", "ghost"))
     VersionedTable.commit(spark, Seq((1L, "a")).toDF("k", "name"), t3)
-    assert(VersionedTable.pruneSelection(spark, t3, 1L,
-      Seq(ColumnBounds("k", Some(0L), Some(9L)))).isDefined)
+    assert(prune(t3, 1L, Seq(ColumnBounds("k", Some(0L), Some(9L)))).isDefined)
 
     // explicit columns override the policy for that commit
     VersionedTable.commit(spark, Seq((1L, "a")).toDF("k", "name"), t3,
       statsCols = Seq("name"))
-    val stats2 = VersionedTable.pruneSelection(spark, t3, 2L,
-      Seq(ColumnBounds("k", Some(0L), Some(0L))))
+    val stats2 = prune(t3, 2L, Seq(ColumnBounds("k", Some(0L), Some(0L))))
     assert(stats2.isDefined, "explicit-cols commit wrote a sidecar")
   }
 
@@ -1067,8 +1235,7 @@ class SinksSpec extends SparkSpec {
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
     assert(nFiles(1L) == before)
     // the rewrite clustered + wrote stats -> pruned reads work on v2
-    assert(VersionedTable.pruneSelection(spark, t, 2L,
-      Seq(ColumnBounds("id", Some(0L), Some(10L)))).isDefined)
+    assert(prune(t, 2L, Seq(ColumnBounds("id", Some(0L), Some(10L)))).isDefined)
     // statement spelling drives the same verb
     val v3 = graft.sources.GraftSql.sql(spark,
         s"OPTIMIZE '$t' TARGET 1024 MB CLUSTER BY (id)")
@@ -1208,20 +1375,17 @@ class SinksSpec extends SparkSpec {
       concat(lit("u"), col("id")).as("name"))
       .repartitionByRange(4, col("id")).sortWithinPartitions(col("id"))
     VersionedTable.commit(spark, df, t, statsCols = Seq("id"))
-    val before = VersionedTable.pruneSelection(spark, t, 1L,
-      Seq(ColumnBounds("id", Some(0L), Some(99L)))).get
+    val before = prune(t, 1L, Seq(ColumnBounds("id", Some(0L), Some(99L)))).get
     assert(before._1.size < before._2, "id pruned before the backfill")
     // backfilling a DIFFERENT column must union, not replace: the id
     // zone map survives the rewrite
     assert(VersionedTable.ensureStats(spark, t, 1L, Nil,
       bloomCols = Seq("name")))
-    val after = VersionedTable.pruneSelection(spark, t, 1L,
-      Seq(ColumnBounds("id", Some(0L), Some(99L)))).get
+    val after = prune(t, 1L, Seq(ColumnBounds("id", Some(0L), Some(99L)))).get
     assert(after._1.size == before._1.size && after._2 == before._2,
       s"id zone map lost by name backfill: $after vs $before")
     // and the new bloom column actually prunes too
-    val hit = VersionedTable.pruneSelection(spark, t, 1L, Nil,
-      Seq(ColumnEquals("name", "u6000"))).get
+    val hit = prune(t, 1L, Nil, Seq(ColumnEquals("name", "u6000"))).get
     assert(hit._1.size < hit._2, s"name bloom not pruning: $hit")
     // re-request of covered columns -> no rewrite
     assert(!VersionedTable.ensureStats(spark, t, 1L, Seq("id"),
@@ -1290,7 +1454,7 @@ class SinksSpec extends SparkSpec {
       .where(col("k") === 6000L).head().getString(1) == "late")
     // pruned reads span dirs: every dir carries the policy's sidecar, so
     // a narrow k range keeps a strict subset of ALL files
-    val sel = VersionedTable.pruneSelection(spark, t, 3L,
+    val sel = prune(t, 3L,
       Seq(VersionedTable.ColumnBounds("k", Some(0L), Some(10L)))).get
     assert(sel._1.size < sel._2, s"multi-dir prune kept ${sel._1.size}/${sel._2}")
     val pruned = VersionedTable.readVersionPruned(spark, t, 3L,
@@ -2268,7 +2432,7 @@ class SinksSpec extends SparkSpec {
         (col("id") % 7).as("v")),
       t, clusterCols = Seq("k"), numFiles = 8)
     VersionedTable.deleteWhereLazy(spark, t, "k % 2 = 0")
-    val sel = VersionedTable.pruneSelection(spark, t, 2L,
+    val sel = prune(t, 2L,
       Seq(VersionedTable.ColumnBounds("k", Some(100L), Some(299L))))
     assert(sel.exists { case (kept, total) => kept.size < total },
       s"bounds must actually prune files: $sel")

@@ -311,6 +311,7 @@ class StreamingSpec extends SparkSpec {
     // version carries a sidecar a pruned read can use
     val latest = VersionedTable.latestVersion(spark, table).get
     assert(VersionedTable.pruneSelection(spark, table, latest,
+      VersionedTable.readVersion(spark, table, latest).schema,
       Seq(ColumnBounds("id", Some(1L), Some(1L)))).isDefined,
       "streamed commit lost the skipping sidecar")
   }
