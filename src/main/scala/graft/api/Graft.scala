@@ -830,7 +830,9 @@ object Graft {
     * checkpointed round's halt runs a FULL action over the state (a
     * count, not an isEmpty/limit, which computes partitions partially);
     * callers whose halt is free (fixed-round loops) must keep the eager
-    * default or the lineage never truncates.
+    * default or the lineage never truncates. The loop enforces this: after
+    * the halt of a lazily checkpointed round, a state whose checkpoint is
+    * still unmaterialized throws (the check reads RDD state, no job).
     */
   def iterateUntilFixpoint(init: DataFrame, maxIter: Int,
       checkpointEvery: Int = 1, eagerCheckpoint: Boolean = true)(
@@ -845,10 +847,18 @@ object Graft {
     while (!done && i < maxIter) {
       val next = step(state, i)
       i += 1
-      state =
-        if (i % checkpointEvery == 0) next.localCheckpoint(eagerCheckpoint)
-        else next
+      val checkpointed = i % checkpointEvery == 0
+      state = if (checkpointed) next.localCheckpoint(eagerCheckpoint) else next
       done = halt(state, i)
+      if (checkpointed && !eagerCheckpoint) state.queryExecution.logical match {
+        case r: org.apache.spark.sql.execution.LogicalRDD
+            if r.rdd.isCheckpointed => ()
+        case _ => throw new IllegalStateException(
+          s"iterateUntilFixpoint(eagerCheckpoint = false): round $i's halt " +
+            "ran no full action over the state, so its lazy checkpoint " +
+            "never materialized and the lineage is not truncated — count " +
+            "the state in halt or use the eager checkpoint")
+      }
     }
     Fixpoint(state, i, done)
   }

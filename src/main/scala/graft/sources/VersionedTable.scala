@@ -43,6 +43,10 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *                               readers map each dir to the logical
   *                               schema, copy-on-write materializes)
   * }}}
+  * Every JSON file above is read and written only through [[MetaCodec]],
+  * the single owner of the metadata formats: one typed record per format,
+  * parsed once per read (a manifest is opened once per version lookup).
+  *
   * Underscore-prefixed paths are invisible to Spark's parquet file index,
   * so sidecars never leak into snapshot reads; everything under the uuid
   * dir becomes visible atomically with the manifest create.
@@ -95,87 +99,14 @@ object VersionedTable {
     (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
 
-  private def manifestName(v: Long) = f"v$v%08d.json"
-  private def checkpointName(v: Long) = f"checkpoint-v$v%08d.json"
+  import MetaCodec.{CheckpointEntry, Manifest, checkpointIds,
+    checkpointOf, checkpointPath, manifestOf, manifestPath}
 
-  // entries may carry the version's del-/schema-sidecar refs (r14): the
-  // checkpoint preserves them so compaction can retire sidecar-carrying
-  // manifests too — without the refs, retiring such a manifest would
-  // silently resurrect lazily-deleted rows / un-evolve the schema, which
-  // is why they used to be permanently compaction-exempt (an unbounded
-  // un-compactable listing on drip-append evolved tables). Old-format
-  // entries (no refs) still parse.
-  private val checkpointEntry =
-    ("""\{"v":(\d+),"dir":"([^"]+)"""" +
-      """(?:,"del":"([^"]+)")?(?:,"schema":"([^"]+)")?\}""").r
-
-  /** The newest checkpoint's folded (version → dir) map, or empty. One
-    * body read; see [[compactManifests]] for the write side. A racing
-    * compaction can retire the checkpoint between our listing and the
-    * open (each checkpoint is a superset of its predecessors, so the
-    * replacement answers every lookup the retired one did) — re-list and
-    * retry once on that window; compaction's keep-two retirement policy
-    * guarantees the second attempt's newest checkpoint outlives it.
-    */
-  /** The newest checkpoint's id, from one `_manifests` listing — split
-    * out of [[checkpointMap]] so [[publish]]'s post-claim verify can
-    * skip re-reading the checkpoint BODY when the id hasn't moved since
-    * its pre-claim read (the id is the cheap staleness token; a body is
-    * immutable once written, so same id ⇒ same map).
-    */
-  private def newestCheckpointId(hfs: FileSystem, root: Path): Option[Long] = {
-    val mDir = new Path(root, "_manifests")
-    if (!hfs.exists(mDir)) None
-    else hfs.listStatus(mDir).iterator
-      .map(_.getPath.getName)
-      .collect { case n if n.startsWith("checkpoint-v") && n.endsWith(".json") =>
-        n.stripPrefix("checkpoint-v").stripSuffix(".json").toLong
-      }.maxOption
-  }
-
-  /** Parse checkpoint `id`'s body into its version→dir map. */
-  private def checkpointBodyMap(hfs: FileSystem, root: Path,
-      id: Long): Map[Long, String] = {
-    val in = hfs.open(new Path(new Path(root, "_manifests"),
-      checkpointName(id)))
-    val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    checkpointEntry.findAllMatchIn(body)
-      .map(m => m.group(1).toLong -> m.group(2)).toMap
-  }
-
-  /** The newest checkpoint's folded version → (delRef, schemaRef) pairs
-    * — how [[delRefOf]]/[[schemaRefOf]] keep answering after
-    * [[compactManifests]] retires a sidecar-carrying manifest.
-    */
-  private def checkpointRefs(hfs: FileSystem, root: Path)
-      : Map[Long, (Option[String], Option[String])] = {
-    def attempt(): Map[Long, (Option[String], Option[String])] =
-      newestCheckpointId(hfs, root) match {
-        case None => Map.empty
-        case Some(id) =>
-          val in = hfs.open(new Path(new Path(root, "_manifests"),
-            checkpointName(id)))
-          val body = try scala.io.Source
-            .fromInputStream(in, "UTF-8").mkString finally in.close()
-          checkpointEntry.findAllMatchIn(body).map { m =>
-            m.group(1).toLong ->
-              (Option(m.group(3)), Option(m.group(4)))
-          }.toMap
-      }
-    try attempt()
-    catch { case _: java.io.FileNotFoundException => attempt() }
-  }
-
-  private def checkpointMap(hfs: FileSystem, root: Path): Map[Long, String] = {
-    def attempt(): Map[Long, String] =
-      newestCheckpointId(hfs, root) match {
-        case None => Map.empty
-        case Some(v) => checkpointBodyMap(hfs, root, v)
-      }
-    try attempt()
-    catch { case _: java.io.FileNotFoundException => attempt() }
-  }
+  /** Version `v`'s commit record; throws when it was never committed. */
+  private def commitOf(hfs: FileSystem, root: Path, table: String,
+      v: Long): Manifest =
+    manifestOf(hfs, root, v).getOrElse(throw new IllegalArgumentException(
+      s"version $v of $table was never committed"))
 
   /** Committed versions, ascending — the manifest listing, plus versions
     * folded into the newest checkpoint (whose per-version manifests
@@ -191,7 +122,7 @@ object VersionedTable {
         .collect { case n if n.startsWith("v") && n.endsWith(".json") =>
           n.stripPrefix("v").stripSuffix(".json").toLong
         }.toSet
-      (listed ++ checkpointMap(hfs, root).keySet).toSeq.sorted
+      (listed ++ checkpointOf(hfs, root).keySet).toSeq.sorted
     }
   }
 
@@ -257,7 +188,7 @@ object VersionedTable {
     if (statsCols.nonEmpty || bloomCols.nonEmpty)
       writeStatsSidecar(spark, dataDir, statsCols, bloomCols, bloomBitsPerRow)
     else skippingPolicy(spark, table) match {
-      case Some((pStats, pBloom, pBits)) =>
+      case Some(MetaCodec.SkippingPolicy(pStats, pBloom, pBits)) =>
         val have = footerSchema(spark, dataDir).fieldNames.toSet
         val (s2, b2) = (pStats.filter(have), pBloom.filter(have))
         if (s2.nonEmpty || b2.nonEmpty)
@@ -352,7 +283,7 @@ object VersionedTable {
       delRef: Option[String] = None,
       schemaRef: Option[String] = None): Unit = {
     val (hfs, root) = fs(spark, table)
-    val manifest = new Path(root, s"_manifests/${manifestName(version)}")
+    val manifest = manifestPath(root, version)
     hfs.mkdirs(manifest.getParent)
     // "batch": the writing stream's epoch id — the idempotence token
     // [[mergeBatchIfNew]] reads back to skip an already-applied replay;
@@ -362,22 +293,19 @@ object VersionedTable {
     // (which stored row the change replaced) from the v-1 snapshot;
     // "del": the del-state sidecar this version's deferred deletes live
     // in ([[deleteWhereLazy]]) — written complete BEFORE this publish,
-    // so a version is never visible without its delete filters
+    // so a version is never visible without its delete filters;
+    // "schema": the evolution-chain sidecar active at this version
+    // ([[addColumn]]/[[renameColumn]]/[[dropColumn]]) — like "del",
+    // written complete BEFORE this publish and propagated by the
+    // dir-reusing verbs (append/clone), dropped by materializing ones;
     // "ts": the writer's commit wall-clock (epoch ms) — what TIMESTAMP
     // AS OF time travel resolves against; clock skew between writers can
     // reorder it vs the version sequence, so [[readAsOf]] resolves
     // order-safely (see there)
-    val body = s"""{"version":$version,"dir":"$dataDirName",""" +
-      s""""ts":${System.currentTimeMillis()},""" +
-      batchId.map(b => s""""batch":$b,""").getOrElse("") +
-      mergeKey.map(k => s""""key":"$k",""").getOrElse("") +
-      delRef.map(r => s""""del":"$r",""").getOrElse("") +
-      // "schema": the evolution-chain sidecar active at this version
-      // ([[addColumn]]/[[renameColumn]]/[[dropColumn]]) — like "del",
-      // written complete BEFORE this publish and propagated by the
-      // dir-reusing verbs (append/clone), dropped by materializing ones
-      schemaRef.map(r => s""""schema":"$r",""").getOrElse("") +
-      s""""op":"$op","writer":"${UUID.randomUUID}"}"""
+    val body = MetaCodec.encodeManifest(Manifest(version, Some(dataDirName),
+      ts = Some(System.currentTimeMillis()), batch = batchId, key = mergeKey,
+      del = delRef, schema = schemaRef, op = Some(op),
+      writer = Some(UUID.randomUUID.toString)))
     // Two-phase atomic publish (the Delta LogStore recipe, one impl per
     // store class): write the FULL body to a writer-unique temp, then
     // promote it to the manifest name with an ATOMIC PUT-IF-ABSENT, so
@@ -433,7 +361,7 @@ object VersionedTable {
     def listCheckpointId(): Option[Long] = {
       var attempt = 0
       while (true) {
-        try return newestCheckpointId(hfs, root)
+        try return checkpointIds(hfs, root).lastOption
         catch {
           case e: java.io.FileNotFoundException =>
             attempt += 1
@@ -448,15 +376,15 @@ object VersionedTable {
       if (pdbg) System.err.println(
         s"[publish ${Thread.currentThread().getName}] $msg")
     val preId = listCheckpointId()
-    def mapOf(id: Option[Long]): Map[Long, String] = id match {
+    def mapOf(id: Option[Long]): Map[Long, CheckpointEntry] = id match {
       case None => Map.empty
       case Some(i) =>
         var attempt = 0
         while (true) {
-          (try Some(checkpointBodyMap(hfs, root, i))
+          (try Some(MetaCodec.checkpointAt(hfs, root, i))
           catch { case _: java.io.FileNotFoundException => None }) match {
             case Some(m) if m.nonEmpty => return m
-            case None => return checkpointMap(hfs, root) // retired: re-resolve
+            case None => return checkpointOf(hfs, root) // retired: re-resolve
             case Some(_) =>
               // an EMPTY checkpoint body is never legitimate (compaction
               // folds ≥1 version, expiry keeps ≥1): it is a half-written
@@ -465,7 +393,7 @@ object VersionedTable {
               // read as horizon 0 and disarm the recycled-slot guard
               attempt += 1
               if (attempt >= 50) throw new IllegalStateException(
-                s"checkpoint ${checkpointName(i)} of $root parses to an " +
+                s"checkpoint ${checkpointPath(root, i)} parses to an " +
                   "empty version map — corrupt or half-written; refusing " +
                   "to publish with a disarmed folded-horizon guard")
               Thread.sleep(2L)
@@ -494,7 +422,7 @@ object VersionedTable {
     // the body re-read and miss the fold that just happened.
     val postId = listCheckpointId()
     val after = if (postId == preId) preMap else mapOf(postId)
-    if (after.get(version).exists(_ != dataDirName)) {
+    if (after.get(version).exists(_.dir != dataDirName)) {
       ptrace(s"UNDO v=$version op=$op postId=$postId")
       hfs.delete(manifest, false)
       throw foldedConflict(
@@ -548,47 +476,6 @@ object VersionedTable {
     }
   }
 
-  private val dirField = """"dir"\s*:\s*"([^"]+)"""".r
-
-  /** Resolve `version` → its data dir: the per-version manifest body when
-    * present, else the newest checkpoint (where [[compactManifests]] may
-    * have folded it). None = never committed.
-    */
-  private def resolveDir(hfs: FileSystem, root: Path,
-      version: Long): Option[String] =
-    resolveDirWith(hfs, root, version, () => checkpointMap(hfs, root))
-
-  /** `cp` is by-need so the common case (manifest present) never pays the
-    * checkpoint read; batch callers (vacuum, compaction) preload one map
-    * and share it across versions.
-    */
-  private def resolveDirWith(hfs: FileSystem, root: Path, version: Long,
-      cp: () => Map[Long, String]): Option[String] = {
-    val manifest = new Path(root, s"_manifests/${manifestName(version)}")
-    if (hfs.exists(manifest)) {
-      val in = hfs.open(manifest)
-      val body =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      dirField.findFirstMatchIn(body) match {
-        case Some(m) => Some(m.group(1))
-        // the two-phase publish makes a partial body impossible, so a
-        // manifest without a dir field is a corrupt or foreign file —
-        // UNLESS a pre-writer-unique-layout build committed it, whose
-        // fixed `data/v=N` dir we can verify on disk: degrade to that
-        // layout when the dir actually exists, fail loud otherwise
-        // (never guess at a dir that isn't there)
-        case None =>
-          val legacy = s"data/v=$version"
-          if (hfs.exists(new Path(root, legacy))) Some(legacy)
-          else throw new IllegalStateException(
-            s"manifest for version $version of $root names no data dir " +
-              "and no legacy data/v=N dir exists — corrupt or foreign " +
-              "file in _manifests/")
-      }
-    } else cp().get(version)
-  }
-
   /** Time-travel read: snapshot `version` exactly as committed — the data
     * dir is resolved from the manifest body (or the checkpoint that
     * folded it). Throws if the version was never COMMITTED — data files
@@ -597,22 +484,27 @@ object VersionedTable {
     */
   def readVersion(spark: SparkSession, table: String, version: Long): DataFrame = {
     val (hfs, root) = fs(spark, table)
-    val dir = resolveDir(hfs, root, version).getOrElse(
-      throw new IllegalArgumentException(
-        s"version $version of $table was never committed"))
+    snapshotOf(spark, hfs, root, commitOf(hfs, root, table, version))
+  }
+
+  /** The snapshot commit record `m` names, read through its deferred
+    * deletes and schema chain.
+    */
+  private def snapshotOf(spark: SparkSession, hfs: FileSystem, root: Path,
+      m: Manifest): DataFrame = {
     // appended versions name several dirs (`;`-joined); all dirs of one
     // version share an identical schema (append enforces it), so the
     // multi-path read needs no schema merging. File-granular CoW versions
     // additionally name kept FILES of partially-rewritten dirs — grouped
     // back under their dir scope here, so per-dir metadata binds once and
     // one dir's kept files read as ONE multi-path scan, not one per file.
-    val groups = groupTokensByScope(splitDirs(dir))
+    val groups = groupTokensByScope(splitDirs(m.dataDir))
     // deferred deletes ([[deleteWhereLazy]]): each dir takes the keep
     // filter of the predicates scoped to it — a codegen'd filter pushed
     // into the scans, so the merge-on-read price is predicate evaluation,
     // never an extra pass. Dirs one version shares have one column order
     // (the append contract), so the positional union is sound.
-    val preds = delStateOf(spark, table, version)
+    val preds = delStateOf(hfs, root, m)
     // schema evolution ([[addColumn]]/[[renameColumn]]/[[dropColumn]]):
     // the chain applies PER DIR, leniently — dirs written after an op
     // already have the target shape and pass through. Filter-then-map
@@ -623,7 +515,7 @@ object VersionedTable {
     // it, because NEW deferred deletes are still refused while a chain
     // is active ([[deleteWhereLazy]]'s guard), so recorded predicates
     // always bind to their dirs' physical column names.
-    val chain = schemaStateOf(spark, table, version)
+    val chain = schemaStateOf(hfs, root, m)
     if (preds.isEmpty && chain.isEmpty)
       parquetOf(spark, groups.flatMap { case (scope, toks) =>
         groupReadPaths(hfs, root, scope, toks) }: _*)
@@ -686,17 +578,14 @@ object VersionedTable {
     val (hfs, root) = fs(spark, table)
     val vs = versions(spark, table)
     require(vs.nonEmpty, s"$table has no committed versions")
-    def stampOf(v: Long): Long = {
-      val m = new Path(root, s"_manifests/${manifestName(v)}")
-      if (!hfs.exists(m)) 0L // folded = among the oldest kept
-      else {
-        val in = hfs.open(m)
-        val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        tsField.findFirstMatchIn(body).map(_.group(1).toLong)
-          .getOrElse(hfs.getFileStatus(m).getModificationTime)
+    lazy val cp = checkpointOf(hfs, root)
+    // folded = among the oldest kept; a ts-less (pre-field) manifest
+    // falls back to its file mtime
+    def stampOf(v: Long): Long =
+      manifestOf(hfs, root, v, cp).flatMap(_.ts).getOrElse {
+        try hfs.getFileStatus(manifestPath(root, v)).getModificationTime
+        catch { case _: java.io.FileNotFoundException => 0L }
       }
-    }
     val monotone = vs.map(stampOf).scanLeft(0L)(math.max).drop(1)
     vs.zip(monotone).takeWhile(_._2 <= tsMillis).lastOption match {
       case Some((v, _)) => v
@@ -708,58 +597,20 @@ object VersionedTable {
 
   // -------------------------------------------- merge-on-read del state
 
-  private val delField = """"del"\s*:\s*"([^"]+)"""".r
-
   /** One deferred-delete predicate: SQL text (re-parsed at read time)
     * scoped to the data dirs that existed when the delete committed —
     * later-appended dirs are out of scope, so a lazy delete never touches
     * rows inserted after it (exactly what a CoW delete at the same point
     * would have removed, no more).
     */
-  private final case class DelPred(pred: String, dirs: Set[String])
+  private[graft] final case class DelPred(pred: String, dirs: Set[String])
 
-  /** The del-sidecar name `version`'s manifest references — None for
-    * del-free versions, including versions whose per-version manifest a
-    * checkpoint folded ([[compactManifests]] never retires a del-carrying
-    * manifest, so manifest-absent implies del-free).
-    */
-  private def delRefOf(spark: SparkSession, table: String,
-      version: Long): Option[String] = {
-    val (hfs, root) = fs(spark, table)
-    val m = new Path(root, s"_manifests/${manifestName(version)}")
-    // manifest-absent (or retired between exists and open — a racing
-    // compaction): the newest checkpoint carries the folded refs
-    if (!hfs.exists(m))
-      checkpointRefs(hfs, root).get(version).flatMap(_._1)
-    else
-      try {
-        val in = hfs.open(m)
-        val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        delField.findFirstMatchIn(body).map(_.group(1))
-      } catch { case _: java.io.FileNotFoundException =>
-        checkpointRefs(hfs, root).get(version).flatMap(_._1)
-      }
-  }
-
-  private val delEntryRe =
-    """\{"p":"((?:[^"\\]|\\.)*)","d":\[([^\]]*)\]\}""".r
-  private val delDirRe = """"([^"]+)"""".r
-
-  /** The accumulated deferred-delete predicates active at `version`. */
-  private def delStateOf(spark: SparkSession, table: String,
-      version: Long): Seq[DelPred] =
-    delRefOf(spark, table, version).map { ref =>
-      val (hfs, root) = fs(spark, table)
-      val in = hfs.open(new Path(root, s"_manifests/$ref"))
-      val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      def unesc(v: String) = v.replace("\\\"", "\"").replace("\\\\", "\\")
-      delEntryRe.findAllMatchIn(body).map { m =>
-        DelPred(unesc(m.group(1)),
-          delDirRe.findAllMatchIn(m.group(2)).map(_.group(1)).toSet)
-      }.toSeq
-    }.getOrElse(Nil)
+  /** The accumulated deferred-delete predicates active at commit `m`. */
+  private def delStateOf(hfs: FileSystem, root: Path,
+      m: Manifest): Seq[DelPred] =
+    m.del.map(ref => MetaCodec.decodeDel(
+      MetaCodec.readBody(hfs, new Path(root, s"_manifests/$ref"))))
+      .getOrElse(Nil)
 
   /** Persist a del-state sidecar (immutable, writer-unique name) under
     * `_manifests/`; returns the name manifests reference it by. Several
@@ -772,16 +623,9 @@ object VersionedTable {
   private def writeDelSidecar(spark: SparkSession, table: String,
       state: Seq[DelPred]): String = {
     val (hfs, root) = fs(spark, table)
-    def esc(v: String) = v.replace("\\", "\\\\").replace("\"", "\\\"")
-    val body = state.map { p =>
-      s"""{"p":"${esc(p.pred)}","d":[${p.dirs.toSeq.sorted
-        .map(d => s""""$d"""").mkString(",")}]}"""
-    }.mkString("[", ",", "]")
     val name = s"del-${UUID.randomUUID}.json"
-    hfs.mkdirs(new Path(root, "_manifests"))
-    val out = hfs.create(new Path(root, s"_manifests/$name"),
-      /* overwrite = */ false)
-    try out.write(body.getBytes(StandardCharsets.UTF_8)) finally out.close()
+    MetaCodec.createNew(hfs, new Path(root, s"_manifests/$name"),
+      MetaCodec.encodeDel(state))
     name
   }
 
@@ -818,7 +662,7 @@ object VersionedTable {
     * string; `default` = add's SQL expression backfilling EXISTING rows
     * (absent = NULL).
     */
-  private final case class SchemaOp(kind: String, name: String,
+  private[graft] final case class SchemaOp(kind: String, name: String,
       to: String = "", tpe: String = "", default: Option[String] = None)
 
   /** The full evolution state at one version: the op chain plus each
@@ -847,7 +691,7 @@ object VersionedTable {
     * exact on-disk difference: a pinning writer always pins the base
     * snapshot's dirs, so marker-less + empty pos map ⇒ legacy.
     */
-  private final case class SchemaChain(ops: Seq[SchemaOp],
+  private[graft] final case class SchemaChain(ops: Seq[SchemaOp],
       pos: Map[String, Int], fmt: Int = 2) {
     def isEmpty: Boolean = ops.isEmpty
     def nonEmpty: Boolean = ops.nonEmpty
@@ -857,70 +701,18 @@ object VersionedTable {
   }
   private val emptyChain = SchemaChain(Nil, Map.empty)
 
-  private val schemaField = """"schema"\s*:\s*"([^"]+)"""".r
-  // writer emits fields in exactly this order: k, n, [r], [t], [d]
-  private val schemaEntryRe =
-    ("""\{"k":"(add|rename|drop|widen)","n":"((?:[^"\\]|\\.)+)"""" +
-      """(?:,"r":"((?:[^"\\]|\\.)+)")?""" +
-      """(?:,"t":"((?:[^"\\]|\\.)+)")?""" +
-      """(?:,"d":"((?:[^"\\]|\\.)*)")?\}""").r
-  private val schemaPosBlockRe = """"pos":\{([^}]*)\}""".r
-  private val schemaPosEntryRe = """"((?:[^"\\]|\\.)+)"\s*:\s*(\d+)""".r
-  private val schemaFmtRe = """"fmt"\s*:\s*(\d+)""".r
-
-  /** The schema-sidecar name `version`'s manifest references — None for
-    * unmapped versions. A retired manifest (compaction folds sidecar
-    * refs into the checkpoint, r14) answers from the newest checkpoint.
-    */
-  private def schemaRefOf(spark: SparkSession, table: String,
-      version: Long): Option[String] = {
-    val (hfs, root) = fs(spark, table)
-    val m = new Path(root, s"_manifests/${manifestName(version)}")
-    if (!hfs.exists(m))
-      checkpointRefs(hfs, root).get(version).flatMap(_._2)
-    else
-      try {
-        val in = hfs.open(m)
-        val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        schemaField.findFirstMatchIn(body).map(_.group(1))
-      } catch { case _: java.io.FileNotFoundException =>
-        checkpointRefs(hfs, root).get(version).flatMap(_._2)
-      }
-  }
-
-  /** The accumulated evolution chain active at `version` (empty for
+  /** The accumulated evolution chain active at commit `m` (empty for
     * unmapped versions — including every version after a copy-on-write
     * verb, which materializes the mapping into real parquet columns).
-    * Sidecar body: `{"ops":[...],"pos":{"<dir>":k,...}}`. Every dir
-    * that must replay at least one op has an explicit entry (pinned by
-    * the ALTER that added the op); absent dirs sit at the chain tip.
+    * Sidecar body: `{"fmt":2,"ops":[...],"pos":{"<dir>":k,...}}`. Every
+    * dir that must replay at least one op has an explicit entry (pinned
+    * by the ALTER that added the op); absent dirs sit at the chain tip.
     */
-  private def schemaStateOf(spark: SparkSession, table: String,
-      version: Long): SchemaChain =
-    schemaRefOf(spark, table, version).map { ref =>
-      val (hfs, root) = fs(spark, table)
-      val in = hfs.open(new Path(root, s"_manifests/$ref"))
-      val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      def unesc(v: String) = v.replace("\\\"", "\"").replace("\\\\", "\\")
-      val ops = schemaEntryRe.findAllMatchIn(body).map { m =>
-        SchemaOp(m.group(1), unesc(m.group(2)),
-          to = Option(m.group(3)).map(unesc).getOrElse(""),
-          tpe = Option(m.group(4)).map(unesc).getOrElse(""),
-          default = Option(m.group(5)).map(unesc))
-      }.toSeq
-      val pos = schemaPosBlockRe.findFirstMatchIn(body).map { b =>
-        schemaPosEntryRe.findAllMatchIn(b.group(1))
-          .map(m => unesc(m.group(1)) -> m.group(2).toInt).toMap
-      }.getOrElse(Map.empty[String, Int])
-      // marker-less sidecars: a pinning (r14) writer always pinned the
-      // base dirs, so an empty pos map identifies a true legacy sidecar
-      // whose readers replayed the full chain on every dir (default 0)
-      val fmt = schemaFmtRe.findFirstMatchIn(body).map(_.group(1).toInt)
-        .getOrElse(if (pos.isEmpty) 1 else 2)
-      SchemaChain(ops, pos, fmt)
-    }.getOrElse(emptyChain)
+  private def schemaStateOf(hfs: FileSystem, root: Path,
+      m: Manifest): SchemaChain =
+    m.schema.map(ref => MetaCodec.decodeSchema(
+      MetaCodec.readBody(hfs, new Path(root, s"_manifests/$ref"))))
+      .getOrElse(emptyChain)
 
   /** Persist an evolution-chain sidecar (immutable, writer-unique name,
     * the [[writeDelSidecar]] pattern: matches neither the version nor
@@ -930,24 +722,11 @@ object VersionedTable {
   private def writeSchemaSidecar(spark: SparkSession, table: String,
       chain: SchemaChain): String = {
     val (hfs, root) = fs(spark, table)
-    def esc(v: String) = v.replace("\\", "\\\\").replace("\"", "\\\"")
-    val opsBody = chain.ops.map { o =>
-      s"""{"k":"${o.kind}","n":"${esc(o.name)}"""" +
-        (if (o.kind == "rename") s""","r":"${esc(o.to)}"""" else "") +
-        (if (o.kind == "add" || o.kind == "widen")
-          s""","t":"${esc(o.tpe)}"""" else "") +
-        o.default.map(d => s""","d":"${esc(d)}"""").getOrElse("") + "}"
-    }.mkString("[", ",", "]")
-    val posBody = chain.pos.toSeq.sortBy(_._1)
-      .map { case (d, k) => s""""${esc(d)}":$k""" }.mkString("{", ",", "}")
     // fmt: default-position semantics marker (see [[SchemaChain]]) —
     // preserved verbatim so cloning a legacy chain stays legacy
-    val body = s"""{"fmt":${chain.fmt},"ops":$opsBody,"pos":$posBody}"""
     val name = s"schema-${UUID.randomUUID}.json"
-    hfs.mkdirs(new Path(root, "_manifests"))
-    val out = hfs.create(new Path(root, s"_manifests/$name"),
-      /* overwrite = */ false)
-    try out.write(body.getBytes(StandardCharsets.UTF_8)) finally out.close()
+    MetaCodec.createNew(hfs, new Path(root, s"_manifests/$name"),
+      MetaCodec.encodeSchema(chain))
     name
   }
 
@@ -1066,10 +845,9 @@ object VersionedTable {
         s"$table has no committed versions"))
     validate(readVersion(spark, table, base))
     val (hfs, root) = fs(spark, table)
-    val dirs = resolveDir(hfs, root, base).getOrElse(
-      throw new IllegalArgumentException(
-        s"version $base of $table was never committed"))
-    val prior = schemaStateOf(spark, table, base)
+    val baseM = commitOf(hfs, root, table, base)
+    val dirs = baseM.dataDir
+    val prior = schemaStateOf(hfs, root, baseM)
     // positions are recorded HERE, by the ALTER that makes them matter:
     // any base dir without an entry joined while the chain was at its
     // current length (pre-chain dirs when the chain is empty; otherwise
@@ -1087,7 +865,7 @@ object VersionedTable {
     val ref = writeSchemaSidecar(spark, table,
       SchemaChain(prior.ops :+ op, pinned))
     publish(spark, table, base + 1L, dirs, op = "schema",
-      schemaRef = Some(ref), delRef = delRefOf(spark, table, base))
+      schemaRef = Some(ref), delRef = baseM.del)
     base + 1L
   }
 
@@ -1133,7 +911,8 @@ object VersionedTable {
         "constraint first")
     val top = colName.split('.').head
     val inPolicy = skippingPolicy(spark, table).exists {
-      case (s, b, _) => s.contains(colName) || b.contains(colName) ||
+      case MetaCodec.SkippingPolicy(s, b, _) =>
+        s.contains(colName) || b.contains(colName) ||
         // a nested op under a policy-indexed top-level column would
         // change the very values the sidecars summarize — refuse
         (colName != top && (s.contains(top) || b.contains(top)))
@@ -1502,32 +1281,19 @@ object VersionedTable {
     diffVersions(spark, table, fromVersion, to, key, hashCols)
   }
 
-  private val writerField = """"writer"\s*:\s*"([^"]+)"""".r
-  private val opField = """"op"\s*:\s*"([^"]+)"""".r
-  private val tsField = """"ts"\s*:\s*(\d+)""".r
-
   /** One row per committed version, ascending: (version, data_dir,
-    * writer, batch) — writer/batch null for versions whose per-version
-    * manifest [[compactManifests]] retired (the checkpoint folds only the
-    * version→dir pairs; the tail keeps full provenance). Metadata-only:
-    * one listing + one body read per surviving manifest.
+    * writer, batch, op, commit_ts) — writer, batch, op and commit_ts are
+    * null for versions whose per-version manifest [[compactManifests]]
+    * retired (the checkpoint folds only each version's dir and sidecar
+    * refs; the tail keeps full provenance). Metadata-only: one listing +
+    * one body read per surviving manifest.
     */
   def history(spark: SparkSession, table: String): DataFrame = {
     val (hfs, root) = fs(spark, table)
-    val cp = checkpointMap(hfs, root)
+    val cp = checkpointOf(hfs, root)
     val rows = versions(spark, table).map { v =>
-      val m = new Path(root, s"_manifests/${manifestName(v)}")
-      if (hfs.exists(m)) {
-        val in = hfs.open(m)
-        val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        (v,
-          dirField.findFirstMatchIn(body).map(_.group(1)).getOrElse(""),
-          writerField.findFirstMatchIn(body).map(_.group(1)),
-          batchField.findFirstMatchIn(body).map(_.group(1).toLong),
-          opField.findFirstMatchIn(body).map(_.group(1)),
-          tsField.findFirstMatchIn(body).map(_.group(1).toLong))
-      } else (v, cp.getOrElse(v, ""), None, None, None, None)
+      val m = manifestOf(hfs, root, v, cp).getOrElse(Manifest(v, None))
+      (v, m.dir.getOrElse(""), m.writer, m.batch, m.op, m.ts)
     }
     import spark.implicits._
     rows.toDF("version", "data_dir", "writer", "batch", "op", "commit_ts")
@@ -1612,7 +1378,9 @@ object VersionedTable {
       maxRecordsPerFile: Long = 5000000L,
       batchId: Option[Long] = None,
       probeScope: Option[Seq[(String, Seq[String])]] = None): Long = {
-    val base = readVersion(spark, table, baseVersion)
+    val (hfs, root) = fs(spark, table)
+    val baseM = commitOf(hfs, root, table, baseVersion)
+    val base = snapshotOf(spark, hfs, root, baseM)
     // the version/op names partition `changes` into metadata vs data
     // columns; a BASE data column with one of those names would make that
     // partition ambiguous (its updates would be stripped as metadata and
@@ -1662,7 +1430,7 @@ object VersionedTable {
     // deleteWhere gate is root-only by construction: cond sits wholly
     // in the root Filter it builds.)
     val granularEligible = added.isEmpty &&
-      schemaStateOf(spark, table, baseVersion).isEmpty &&
+      schemaStateOf(hfs, root, baseM).isEmpty &&
       changes.queryExecution.analyzed.find(
         p => p.expressions.exists(!_.deterministic)).isEmpty
     // resolve the base's token layout only when eligible; grammar-unsafe
@@ -1671,22 +1439,18 @@ object VersionedTable {
     // representable kept token / the probe cannot pay for itself, and a
     // stale-pinned base must keep granularity for the internal rebase)
     val granularCtx = if (!granularEligible) None else {
-      val (hfs, root) = fs(spark, table)
-      val dirStr = resolveDir(hfs, root, baseVersion).getOrElse(
-        throw new IllegalArgumentException(
-          s"version $baseVersion of $table was never committed"))
-      val groups = groupTokensByScope(splitDirs(dirStr))
+      val groups = groupTokensByScope(splitDirs(baseM.dataDir))
       val perScope = enumerateTokens(hfs, root, groups)
       val bypass =
         perScope.iterator.map(_._3.size).sum <= granularBypassMaxFiles &&
           latestVersion(spark, table).contains(baseVersion)
       if (!grammarSafeNames(perScope) || bypass) None
-      else Some((hfs, root, groups, perScope))
+      else Some((groups, perScope))
     }
     val committed: Long = if (granularCtx.isDefined) {
         import org.apache.spark.sql.functions.col
-        val (hfs, root, groups, perScope) = granularCtx.get
-        val preds = delStateOf(spark, table, baseVersion)
+        val (groups, perScope) = granularCtx.get
+        val preds = delStateOf(hfs, root, baseM)
         // probe: files holding any change key (see [[probeKeyTouchedRaw]])
         val keyFrame = changesCached
           .select(keys.map(org.apache.spark.sql.functions.col): _*)
@@ -1720,7 +1484,7 @@ object VersionedTable {
         // semi-join the probe used (sound for rollup pre-image recovery
         // too: guards 1+2 make our keys' pre-images in the winner's
         // snapshot identical to our base's)
-        publishCowRebasingWith(spark, table, baseVersion, "merge",
+        publishCowRebasingWith(spark, table, baseM, "merge",
           perScope, touched, Some(d), batchId,
           mergeKey = if (keys.size == 1) Some(keys.head) else None)(
           paths => parquetOf(spark, paths: _*).alias("b")
@@ -1758,8 +1522,7 @@ object VersionedTable {
     // above STANDS regardless — a mirror failure here self-heals on the
     // next merge or an explicit mirrorChangeFeed call, so it must not
     // surface as a (false) commit failure
-    val (cdfFs, cdfRoot) = fs(spark, table)
-    if (cdfFs.exists(new Path(cdfRoot, cdfDirName)))
+    if (hfs.exists(new Path(root, cdfDirName)))
       try mirrorChangeFeed(spark, table)
       catch { case scala.util.control.NonFatal(_) => () }
     committed
@@ -1779,13 +1542,15 @@ object VersionedTable {
     */
   def readChanges(spark: SparkSession, table: String,
       version: Long): DataFrame = {
+    val (hfs, root) = fs(spark, table)
+    val op = manifestOf(hfs, root, version).flatMap(_.op)
     // a deferred delete wrote NO dir (its last dir is the base's, whose
     // _changes — if any — belongs to an EARLIER merge); its change batch
     // is nonetheless fully DERIVABLE: the rows its new predicate removed
     // from the predecessor snapshot. Synthesize them so CDC consumers
     // (replica sink, incremental rollup, the _cdf mirror) ride through
     // DELETE ... DEFERRED instead of stalling until a CoW verb lands.
-    if (opOf(spark, table, version).contains("lazydelete"))
+    if (op.contains("lazydelete"))
       return lazyDeleteChanges(spark, table, version)
     // a schema-evolution version changed METADATA only — zero rows. An
     // empty batch (in the POST-evolution logical schema) keeps CDC
@@ -1793,7 +1558,7 @@ object VersionedTable {
     // would otherwise misattribute an older merge's _changes sidecar
     // (the clone hazard), since a schema version writes no dir of its
     // own.
-    if (opOf(spark, table, version).contains("schema")) {
+    if (op.contains("schema")) {
       import org.apache.spark.sql.functions.lit
       return readVersion(spark, table, version).limit(0)
         .withColumn("__op", lit("u")).withColumn("__ver", lit(1L))
@@ -1802,10 +1567,10 @@ object VersionedTable {
     // references the SOURCE's dirs, and a _changes sidecar found there
     // belongs to a SOURCE merge — returning it would double-apply that
     // batch to any CDC consumer polling the clone. Same refusal shape.
-    if (opOf(spark, table, version).exists(o => o == "clone" || o == "convert"))
+    if (op.exists(o => o == "clone" || o == "convert"))
       throw new IllegalArgumentException(
-        s"version $version of $table is a zero-copy ${opOf(spark, table,
-          version).get} bootstrap — its referenced dirs (and any _changes " +
+        s"version $version of $table is a zero-copy ${op.get} bootstrap " +
+          "— its referenced dirs (and any _changes " +
           "sidecar in them) belong to the source table; it has no change " +
           "log of its own; use diffVersions")
     // an appended version's change batch IS its newly written dir (the
@@ -1814,7 +1579,7 @@ object VersionedTable {
     // insert-only ingest streams feed replicas without ever diffing.
     // Keyed consumers inherit replicaBatchIfNew's contract: append
     // batches must be key-unique for the upsert interpretation to hold.
-    if (opOf(spark, table, version).contains("insert")) {
+    if (op.contains("insert")) {
       import org.apache.spark.sql.functions.lit
       val df =
         parquetOf(spark, dataPathsOf(spark, table, version).last.toString)
@@ -1827,7 +1592,6 @@ object VersionedTable {
     // commit put its change log (merge versions are single-dir anyway;
     // for append/snapshot versions the probe correctly finds nothing)
     val dataDir = dataPathsOf(spark, table, version).last
-    val (hfs, _) = fs(spark, table)
     val p = new Path(dataDir, changesDirName)
     if (!hfs.exists(p)) throw new IllegalArgumentException(
       s"version $version of $table has no change log (full-snapshot " +
@@ -1879,14 +1643,14 @@ object VersionedTable {
       val mirrored = new Path(new Path(root, cdfDirName), cdfVersionDirName(v))
       if (hfs.exists(mirrored))
         Some(parquetOf(spark, mirrored.toString).drop("_commit_version"))
-      else opOf(spark, table, v) match {
+      else manifestOf(hfs, root, v).flatMap(_.op) match {
         case Some("lazydelete") =>
           // an unmirrored deferred delete synthesizes its batch from the
           // PREDECESSOR snapshot — at the oldest surviving version that
           // predecessor may itself be expired, and the read would
           // otherwise surface a raw "never committed" error; raise the
           // same mirror/remedy message the folded case gets
-          if (resolveDir(hfs, root, v - 1L).isEmpty)
+          if (manifestOf(hfs, root, v - 1L).isEmpty)
             throw new IllegalArgumentException(
               s"version $v of $table is a deferred delete whose " +
                 s"predecessor ${v - 1} is expired and no _cdf mirror " +
@@ -1932,17 +1696,18 @@ object VersionedTable {
       version: Long): DataFrame = {
     import org.apache.spark.sql.functions.{lit, not}
     val (hfs, root) = fs(spark, table)
-    val dirStr = resolveDir(hfs, root, version - 1L).getOrElse(
+    val prev = manifestOf(hfs, root, version - 1L).getOrElse(
       throw new IllegalArgumentException(
         s"predecessor version ${version - 1} of $table is expired — the " +
           "deferred delete's rows can no longer be enumerated; use " +
           "diffVersions over surviving versions"))
-    val oldState = delStateOf(spark, table, version - 1L)
+    val oldState = delStateOf(hfs, root, prev)
     // del-state is append-only between consecutive versions (a CoW verb
     // that resets it also changes the op away from "lazydelete"), so the
     // suffix beyond the predecessor's entries is exactly what v added
-    val added = delStateOf(spark, table, version).drop(oldState.size)
-    val deleted = groupTokensByScope(splitDirs(dirStr)).map {
+    val added = delStateOf(hfs, root, commitOf(hfs, root, table, version))
+      .drop(oldState.size)
+    val deleted = groupTokensByScope(splitDirs(prev.dataDir)).map {
       case (scope, toks) =>
         val df = parquetOf(spark, groupReadPaths(hfs, root, scope, toks): _*)
         val visible = delKeepFilter(oldState, scope)
@@ -2011,8 +1776,9 @@ object VersionedTable {
       // mirror their synthesized delete rows (readChanges derives them
       // from the predecessor snapshot); appends mirror their new dir as
       // upserts — so neither a DELETE ... DEFERRED nor an INSERT INTO
-      // silently vanishes from a downstream subscription
-      opOf(spark, table, v).exists(o =>
+      // silently vanishes from a downstream subscription (a folded
+      // version's op is gone with its manifest: no checkpoint read)
+      manifestOf(hfs, root, v, Map.empty).flatMap(_.op).exists(o =>
         o == "merge" || o == "lazydelete" || o == "insert") && {
         val target = new Path(cdfRoot, cdfVersionDirName(v))
         !hfs.exists(target) && {
@@ -2158,7 +1924,9 @@ object VersionedTable {
     import org.apache.spark.sql.functions.{col, lit}
     require(keys.nonEmpty, "mergeUpdateKeys needs at least one key column")
     require(set.nonEmpty, "mergeUpdateKeys needs at least one assignment")
-    val cur = readVersion(spark, table, base)
+    val (hfs, root) = fs(spark, table)
+    val baseM = commitOf(hfs, root, table, base)
+    val cur = snapshotOf(spark, hfs, root, baseM)
     // name checks are CASE-INSENSITIVE like Spark's own resolution (and
     // the documented GraftSql grammar); assignments rebind to the
     // table's canonical spelling so the composed projection looks up
@@ -2187,12 +1955,10 @@ object VersionedTable {
     // batch — the merge's own probe, applyChanges, the CDC write, the
     // rebase guard — then opens only those files
     val (restricted, sourceProbeScope) =
-      if (schemaStateOf(spark, table, base).nonEmpty) (cur, None)
+      if (schemaStateOf(hfs, root, baseM).nonEmpty) (cur, None)
       else {
-        val (hfs, root) = fs(spark, table)
-        val dirStr = resolveDir(hfs, root, base).get
-        val preds = delStateOf(spark, table, base)
-        val groups = groupTokensByScope(splitDirs(dirStr))
+        val preds = delStateOf(hfs, root, baseM)
+        val groups = groupTokensByScope(splitDirs(baseM.dataDir))
         val keyFrame = source
           .select(keys.map(col): _*).distinct().alias("c")
         val touchedRaw = probeKeyTouchedRaw(spark, hfs, root, preds,
@@ -2409,89 +2175,37 @@ object VersionedTable {
   private def publishAppendRebasing(spark: SparkSession, table: String,
       base: Long, dirName: String, batchId: Option[Long]): Long = {
     val (hfs, root) = fs(spark, table)
-    val baseSchemaRef = schemaRefOf(spark, table, base)
-    var attempt = base
+    var at = commitOf(hfs, root, table, base)
+    val baseSchemaRef = at.schema
     while (true) {
-      val baseDirs = resolveDir(hfs, root, attempt).getOrElse(
-        throw new IllegalArgumentException(
-          s"version $attempt of $table was never committed"))
       try {
-        publish(spark, table, attempt + 1L, s"$baseDirs;$dirName", batchId,
-          op = "insert", delRef = delRefOf(spark, table, attempt),
-          schemaRef = schemaRefOf(spark, table, attempt))
-        return attempt + 1L
+        publish(spark, table, at.version + 1L, s"${at.dataDir};$dirName",
+          batchId, op = "insert", delRef = at.del, schemaRef = at.schema)
+        return at.version + 1L
       } catch {
         case e: CommitConflictException =>
-          val cur = latestVersion(spark, table).getOrElse(attempt)
-          val schemaChanged =
-            schemaRefOf(spark, table, cur) != baseSchemaRef
-          val batchTaken =
-            batchId.isDefined && lastBatchId(spark, table) == batchId
-          if (cur <= attempt || schemaChanged || batchTaken) throw e
+          val cur =
+            latestVersion(spark, table).flatMap(manifestOf(hfs, root, _))
+          val rebasable = cur.exists(c => c.version > at.version &&
+            c.schema == baseSchemaRef &&
+            !(batchId.isDefined && c.batch == batchId))
+          if (!rebasable) throw e
           appendRebases.incrementAndGet()
-          attempt = cur
+          at = cur.get
       }
     }
     throw new IllegalStateException("unreachable")
   }
-
-  private val batchField = """"batch"\s*:\s*(-?\d+)""".r
 
   /** The batch token the LATEST version was committed with (None for
     * non-stream commits). Read from the latest per-version manifest —
     * which always exists, because [[compactManifests]] keeps a hot tail
     * of ≥ 1 manifest.
     */
-  def lastBatchId(spark: SparkSession, table: String): Option[Long] =
-    latestVersion(spark, table).flatMap { v =>
-      val (hfs, root) = fs(spark, table)
-      val m = new Path(root, s"_manifests/${manifestName(v)}")
-      if (!hfs.exists(m)) None
-      else {
-        val in = hfs.open(m)
-        val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        batchField.findFirstMatchIn(body).map(_.group(1).toLong)
-      }
-    }
-
-  private val keyField = """"key"\s*:\s*"([^"]+)"""".r
-
-  /** The merge key `version` was committed with (None for non-merge
-    * commits, and for merge versions whose per-version manifest
-    * [[compactManifests]] has retired — the checkpoint folds only
-    * version→dir pairs, so a consumer that needs the key must read it
-    * before compaction or fall back to whole-range semantics, as
-    * [[refreshRollup]] does).
-    */
-  private[graft] def mergeKeyOf(spark: SparkSession, table: String,
-      version: Long): Option[String] = {
+  def lastBatchId(spark: SparkSession, table: String): Option[Long] = {
     val (hfs, root) = fs(spark, table)
-    val m = new Path(root, s"_manifests/${manifestName(version)}")
-    if (!hfs.exists(m)) None
-    else {
-      val in = hfs.open(m)
-      val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      keyField.findFirstMatchIn(body).map(_.group(1))
-    }
-  }
-
-  /** The op `version` was committed with, from its per-version manifest
-    * (None once [[compactManifests]] retired it — consumers needing the
-    * op long-term should read [[history]] before compacting).
-    */
-  private[graft] def opOf(spark: SparkSession, table: String,
-      version: Long): Option[String] = {
-    val (hfs, root) = fs(spark, table)
-    val m = new Path(root, s"_manifests/${manifestName(version)}")
-    if (!hfs.exists(m)) None
-    else {
-      val in = hfs.open(m)
-      val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      opField.findFirstMatchIn(body).map(_.group(1))
-    }
+    latestVersion(spark, table)
+      .flatMap(manifestOf(hfs, root, _, Map.empty)).flatMap(_.batch)
   }
 
   /** Exactly-once micro-batch upsert — the `foreachBatch` body of the
@@ -2590,10 +2304,10 @@ object VersionedTable {
       // one checkpoint read per pass, shared across versions; re-loaded
       // on the second pass so a compaction racing the vacuum cannot hide
       // a version behind a manifest it just retired
-      val cp = checkpointMap(hfs, root)
+      val cp = checkpointOf(hfs, root)
       versions(spark, table)
-        .flatMap(v => resolveDirWith(hfs, root, v, () => cp))
-        .flatMap(splitDirs)
+        .flatMap(v => manifestOf(hfs, root, v, cp))
+        .flatMap(m => splitDirs(m.dataDir))
         // a dir referenced only through kept-FILE tokens (file-granular
         // CoW) is referenced, full stop — normalizing to the scope keeps
         // it out of the reclaim candidates
@@ -2697,12 +2411,12 @@ object VersionedTable {
     // scope here) | Some(files some live version resolves to)
     val listCache = scala.collection.mutable.Map.empty[String, Seq[String]]
     def liveRefs(): Map[String, Option[Set[String]]] = {
-      val cp = checkpointMap(hfs, root)
+      val cp = checkpointOf(hfs, root)
       val acc =
         scala.collection.mutable.Map.empty[String, Option[Set[String]]]
       versions(spark, table).foreach { v =>
-        resolveDirWith(hfs, root, v, () => cp).foreach { dirStr =>
-          groupTokensByScope(splitDirs(dirStr)).foreach {
+        manifestOf(hfs, root, v, cp).foreach { m =>
+          groupTokensByScope(splitDirs(m.dataDir)).foreach {
             case (scope, toks) =>
               if (!acc.get(scope).contains(None)) {
                 groupRestriction(hfs, root, scope, toks, listCache) match {
@@ -2754,7 +2468,7 @@ object VersionedTable {
     * version discovery and vacuum read ONE checkpoint body + the recent
     * tail instead of one body per version — a million-commit table's
     * metadata ops stay O(tail), and time travel still reaches every
-    * version ([[resolveDir]] falls back to the checkpoint).
+    * version ([[MetaCodec.manifestOf]] falls back to the checkpoint).
     *
     * Concurrency, by the same put-if-absent primitive as [[publish]]:
     * the checkpoint is created with overwrite=false at the CURRENT latest
@@ -2775,22 +2489,9 @@ object VersionedTable {
     val vs = versions(spark, table)
     if (vs.isEmpty) return 0
     val latest = vs.last
-    val target = new Path(root, s"_manifests/${checkpointName(latest)}")
+    val target = checkpointPath(root, latest)
     if (hfs.exists(target)) return 0 // already compacted at this version
-    val cp = checkpointMap(hfs, root)
-    val pairs = vs.flatMap(v =>
-      resolveDirWith(hfs, root, v, () => cp).map(v -> _))
-    // fold each version's sidecar refs alongside its dir (delRefOf/
-    // schemaRefOf answer from the live manifest or, for already-folded
-    // versions, from the prior checkpoint — so refs survive every
-    // compaction generation)
-    val body = pairs.map { case (v, d) =>
-      val del = delRefOf(spark, table, v)
-        .map(r => s""","del":"$r"""").getOrElse("")
-      val sch = schemaRefOf(spark, table, v)
-        .map(r => s""","schema":"$r"""").getOrElse("")
-      s"""{"v":$v,"dir":"$d"$del$sch}"""
-    }.mkString("[", ",", "]")
+    val body = checkpointBody(hfs, root, vs)
     // TWO-PHASE atomic promote, exactly like the manifest publish: the
     // old create-then-write exposed a zero-byte window a concurrent
     // publish's folded-horizon read could OPEN — an empty checkpoint map
@@ -2802,20 +2503,10 @@ object VersionedTable {
     if (!putIfAbsentFile(spark, hfs, cpTmp, target,
         body.getBytes(StandardCharsets.UTF_8)))
       return 0 // racing compaction won — no-op
-    // the checkpoint is durable: retire what it folded. Keep the single
-    // most recent predecessor alongside the new checkpoint — a reader
-    // that listed just before this compaction may be about to open it
-    // (checkpointMap's retry then covers the pathological double-race)
-    val oldCheckpoints = hfs.listStatus(new Path(root, "_manifests"))
-      .iterator.map(_.getPath.getName)
-      .collect { case n if n.startsWith("checkpoint-v") &&
-          n.endsWith(".json") && n != target.getName =>
-        n.stripPrefix("checkpoint-v").stripSuffix(".json").toLong
-      }.toSeq.sorted
-    oldCheckpoints.dropRight(1).foreach(v =>
-      hfs.delete(new Path(root, s"_manifests/${checkpointName(v)}"), false))
+    // the checkpoint is durable: retire what it folded
+    retireCheckpoints(hfs, root, latest)
     vs.dropRight(keepRecent).count { v =>
-      val m = new Path(root, s"_manifests/${manifestName(v)}")
+      val m = manifestPath(root, v)
       // del-/schema-carrying manifests retire like any other (r14): the
       // checkpoint written above folded their sidecar REFS next to the
       // dirs, so delStateOf/schemaStateOf keep answering for folded
@@ -2826,6 +2517,26 @@ object VersionedTable {
       hfs.exists(m) && hfs.delete(m, false)
     }
   }
+
+  /** The checkpoint body folding versions `vs`: each one's dir and
+    * sidecar refs, from its live manifest or — already folded — from
+    * the newest checkpoint, so refs survive every compaction generation.
+    */
+  private def checkpointBody(hfs: FileSystem, root: Path,
+      vs: Seq[Long]): String = {
+    val cp = checkpointOf(hfs, root)
+    MetaCodec.encodeCheckpoint(vs.flatMap(v => manifestOf(hfs, root, v, cp)
+      .map(m => CheckpointEntry(v, m.dataDir, m.del, m.schema))))
+  }
+
+  /** Delete the checkpoints older than `keep`, except the newest of them:
+    * a reader that listed just before `keep` landed may be about to open
+    * it ([[MetaCodec.checkpointOf]]'s retry covers the double race).
+    */
+  private def retireCheckpoints(hfs: FileSystem, root: Path,
+      keep: Long): Unit =
+    checkpointIds(hfs, root).filter(_ != keep).dropRight(1)
+      .foreach(id => hfs.delete(checkpointPath(root, id), false))
 
   /** Incrementally maintain a keyed COUNT/SUM rollup of `baseTable` in
     * `targetTable` (columns: keys…, `n`, `sum_<c>`…), driven by the
@@ -2913,20 +2624,21 @@ object VersionedTable {
     // never trust a feed that does not cover the range.
     val deltaInfo: Seq[Option[(Long, RollupDelta)]] =
       pending.map { v =>
-        resolveDir(hfs, baseRoot, v).flatMap { dirStr =>
-          val newDir = splitDirs(dirStr).last
-          if (opOf(spark, baseTable, v).contains("insert")) {
+        manifestOf(hfs, baseRoot, v).flatMap { m =>
+          val newDir = splitDirs(m.dataDir).last
+          lazy val prev = manifestOf(hfs, baseRoot, v - 1L)
+          if (m.op.contains("insert")) {
             val cols = footerSchema(spark,
               new Path(baseRoot, newDir)).fieldNames.toSet
             if (keys.forall(cols.contains)) Some((v, AppendDelta(newDir)))
             else None
-          } else if (opOf(spark, baseTable, v).contains("lazydelete")) {
-            if (resolveDir(hfs, baseRoot, v - 1L).isDefined &&
+          } else if (m.op.contains("lazydelete")) {
+            if (prev.isDefined &&
                 !snapshot.columns.contains("__ver") &&
                 !snapshot.columns.contains("__op"))
               Some((v, LazyDeleteDelta))
             else None
-          } else if (opOf(spark, baseTable, v).contains("schema")) {
+          } else if (m.op.contains("schema")) {
             // a schema-evolution version changed ZERO rows — an empty
             // delta keeps the refresh incremental, provided the op(s) it
             // added leave the rollup's own columns untouched (a
@@ -2935,8 +2647,9 @@ object VersionedTable {
             // absorbs the new names). An expired predecessor makes the
             // added-suffix read conservative (the whole chain), which
             // can only widen the fallback, never miss a touched column.
-            val prior = schemaStateOf(spark, baseTable, v - 1L).ops.length
-            val added = schemaStateOf(spark, baseTable, v).ops.drop(prior)
+            val prior = prev.map(schemaStateOf(hfs, baseRoot, _))
+              .getOrElse(emptyChain).ops.length
+            val added = schemaStateOf(hfs, baseRoot, m).ops.drop(prior)
             val watched = (keys ++ sumCols ++ minCols ++ maxCols).toSet
             if (added.forall(o =>
                 !watched.contains(o.name) && !watched.contains(o.to)))
@@ -2944,13 +2657,12 @@ object VersionedTable {
             else None
           } else if (!hfs.exists(
               new Path(new Path(baseRoot, newDir), changesDirName))) None
-          else mergeKeyOf(spark, baseTable, v).flatMap { mk =>
+          else m.key.flatMap { mk =>
             val feedCols = readChanges(spark, baseTable, v).columns.toSet
             // pre-image recovery is unnecessary exactly when the rollup
             // is keyed by the merge identity itself (a row can then
             // never change group without being a feed post-image)
-            val preOk = keys == Seq(mk) || (resolveDir(hfs, baseRoot, v - 1L)
-              .isDefined && {
+            val preOk = keys == Seq(mk) || (prev.isDefined && {
                 val prevCols =
                   readVersion(spark, baseTable, v - 1L).columns.toSet
                 prevCols.contains(mk) && keys.forall(prevCols.contains)
@@ -3094,27 +2806,14 @@ object VersionedTable {
     val vs = versions(spark, table)
     val dropped = vs.dropRight(keepLast)
     if (dropped.isEmpty) return Seq.empty
-    val cp = checkpointMap(hfs, root)
-    val kept = vs.takeRight(keepLast)
-      .flatMap(v => resolveDirWith(hfs, root, v, () => cp).map(v -> _))
     // kept versions carry their sidecar refs into the expiry checkpoint,
     // same as compaction's (a kept version may itself be folded later)
-    val body = kept.map { case (v, d) =>
-      val del = delRefOf(spark, table, v)
-        .map(r => s""","del":"$r"""").getOrElse("")
-      val sch = schemaRefOf(spark, table, v)
-        .map(r => s""","schema":"$r"""").getOrElse("")
-      s"""{"v":$v,"dir":"$d"$del$sch}"""
-    }.mkString("[", ",", "]")
-    val existingStamps = hfs.listStatus(new Path(root, "_manifests"))
-      .iterator.map(_.getPath.getName)
-      .collect { case n if n.startsWith("checkpoint-v") && n.endsWith(".json") =>
-        n.stripPrefix("checkpoint-v").stripSuffix(".json").toLong
-      }.maxOption.getOrElse(0L)
+    val body = checkpointBody(hfs, root, vs.takeRight(keepLast))
+    val existingStamps = checkpointIds(hfs, root).lastOption.getOrElse(0L)
     var stamp = math.max(vs.last, existingStamps) + 1L
     var written = false
     while (!written) {
-      val target = new Path(root, s"_manifests/${checkpointName(stamp)}")
+      val target = checkpointPath(root, stamp)
       // two-phase atomic promote (the compactManifests fix applies here
       // too): an expiry checkpoint must never be readable half-written —
       // its body IS the surviving version set
@@ -3125,7 +2824,7 @@ object VersionedTable {
       else stamp += 1L // racing stamper — bump
     }
     dropped.foreach { v =>
-      val m = new Path(root, s"_manifests/${manifestName(v)}")
+      val m = manifestPath(root, v)
       if (hfs.exists(m)) hfs.delete(m, false)
       // the expired version's _cdf mirror dir is deliberately NOT
       // deleted here (r15): expiry is the LOGICAL retirement — a feed
@@ -3137,14 +2836,7 @@ object VersionedTable {
       // expire-THEN-vacuum pairing: vacuum reclaims feed dirs of
       // no-longer-committed versions past its grace.
     }
-    val oldCheckpoints = hfs.listStatus(new Path(root, "_manifests"))
-      .iterator.map(_.getPath.getName)
-      .collect { case n if n.startsWith("checkpoint-v") &&
-          n.endsWith(".json") && n != checkpointName(stamp) =>
-        n.stripPrefix("checkpoint-v").stripSuffix(".json").toLong
-      }.toSeq.sorted
-    oldCheckpoints.dropRight(1).foreach(v =>
-      hfs.delete(new Path(root, s"_manifests/${checkpointName(v)}"), false))
+    retireCheckpoints(hfs, root, stamp)
     dropped
   }
 
@@ -3251,7 +2943,7 @@ object VersionedTable {
         !d.stripSuffix("/").endsWith(".parquet")),
       "source whole-dir token names must not end in '.parquet'")
     val (hfs, tgtRoot) = fs(spark, targetTable)
-    val (_, srcRoot) = fs(spark, sourceTable)
+    val (srcFs, srcRoot) = fs(spark, sourceTable)
     require(tgtRoot.toString != srcRoot.toString,
       s"cannot clone a table onto itself: $srcRoot")
     // same reclaim argument as [[convert]]: the clone must not live
@@ -3288,7 +2980,8 @@ object VersionedTable {
     // deferred deletes travel with the clone, rewritten to the ABSOLUTE
     // dir names this manifest uses (the source recorded them relative to
     // ITS root — the raw strings must match what splitDirs yields here)
-    val srcState = delStateOf(spark, sourceTable, v)
+    val srcM = commitOf(srcFs, srcRoot, sourceTable, v)
+    val srcState = delStateOf(srcFs, srcRoot, srcM)
     val delRef =
       if (srcState.isEmpty) None
       else Some(writeDelSidecar(spark, targetTable, srcState.map(p =>
@@ -3297,7 +2990,7 @@ object VersionedTable {
     // OWN sidecar (the source's lives under its _manifests/) — with the
     // position keys rewritten to the ABSOLUTE dir names this manifest
     // uses, exactly like the del-state dirs above
-    val srcChain = schemaStateOf(spark, sourceTable, v)
+    val srcChain = schemaStateOf(srcFs, srcRoot, srcM)
     val schemaRef =
       if (srcChain.isEmpty) None
       else Some(writeSchemaSidecar(spark, targetTable,
@@ -3327,7 +3020,7 @@ object VersionedTable {
     if (vs.size <= 1) return Seq.empty
     val cutoff = System.currentTimeMillis() - maxAgeMs
     def isOld(v: Long): Boolean = {
-      val m = new Path(root, s"_manifests/${manifestName(v)}")
+      val m = manifestPath(root, v)
       if (hfs.exists(m)) hfs.getFileStatus(m).getModificationTime < cutoff
       else true // checkpoint-folded = oldest of the chain
     }
@@ -3469,19 +3162,17 @@ object VersionedTable {
       transform: DataFrame => DataFrame): Long = {
     import org.apache.spark.sql.functions.{coalesce, col, lit}
     val (hfs, root) = fs(spark, table)
-    val dirStr = resolveDir(hfs, root, base).getOrElse(
-      throw new IllegalArgumentException(
-        s"version $base of $table was never committed"))
-    val cur = readVersion(spark, table, base)
+    val baseM = commitOf(hfs, root, table, base)
+    val cur = snapshotOf(spark, hfs, root, baseM)
     val deterministic = cur.where(coalesce(cond, lit(false)))
       .queryExecution.analyzed.expressions.forall(_.deterministic)
-    if (schemaStateOf(spark, table, base).nonEmpty || !deterministic)
+    if (schemaStateOf(hfs, root, baseM).nonEmpty || !deterministic)
       // whole-snapshot fallback: materializes the mapping / evaluates a
       // nondeterministic predicate exactly once, as before
       return commitPinned(spark, transform(cur), table, base, op = op,
         maxRecordsPerFile = maxRecordsPerFile)
-    val preds = delStateOf(spark, table, base)
-    val groups = groupTokensByScope(splitDirs(dirStr))
+    val preds = delStateOf(hfs, root, baseM)
+    val groups = groupTokensByScope(splitDirs(baseM.dataDir))
     val perScope = enumerateTokens(hfs, root, groups)
     // grammar-unsafe file names ('!' in an adopted foreign dir) have no
     // representable kept-token form — whole-snapshot, like a mapping
@@ -3532,7 +3223,7 @@ object VersionedTable {
     // "dir this version itself wrote" convention), publishing with the
     // DISJOINT REBASE tail: a racing commit whose reference set provably
     // does not intersect this verb's touched rows resolves internally
-    publishCowRebasing(spark, table, base, cond, op, perScope, touched,
+    publishCowRebasing(spark, table, baseM, cond, op, perScope, touched,
       newDir)
   }
 
@@ -3689,12 +3380,12 @@ object VersionedTable {
     * clustered table therefore both land first-try (hammer phase 7).
     */
   private def publishCowRebasing(spark: SparkSession, table: String,
-      base: Long, cond: org.apache.spark.sql.Column, op: String,
+      baseM: Manifest, cond: org.apache.spark.sql.Column, op: String,
       basePerScope: Seq[(String, Seq[String], Seq[String])],
       touched: Map[String, Set[String]],
       newDir: Option[String]): Long = {
     import org.apache.spark.sql.functions.{coalesce, lit}
-    publishCowRebasingWith(spark, table, base, op, basePerScope, touched,
+    publishCowRebasingWith(spark, table, baseM, op, basePerScope, touched,
       newDir)(paths =>
       parquetOf(spark, paths: _*)
         .where(coalesce(cond, lit(false))).limit(1).count() > 0)
@@ -3710,7 +3401,7 @@ object VersionedTable {
     * the [[publishAppendRebasing]] rule).
     */
   private def publishCowRebasingWith(spark: SparkSession, table: String,
-      base: Long, op: String,
+      baseM: Manifest, op: String,
       basePerScope: Seq[(String, Seq[String], Seq[String])],
       touched: Map[String, Set[String]],
       newDir: Option[String],
@@ -3722,8 +3413,7 @@ object VersionedTable {
     def trace(msg: => String): Unit =
       if (dbg) System.err.println(
         s"[rebase ${Thread.currentThread().getName}] $msg")
-    val delRefAtBase = delRefOf(spark, table, base)
-    val schemaRefAtBase = schemaRefOf(spark, table, base)
+    val base = baseM.version
     val consAtBase = latestConstraintGen(hfs, root)
     val baseFiles: Set[String] = basePerScope.iterator.flatMap {
       case (scope, _, referenced) => referenced.map(n => s"$scope/$n")
@@ -3745,7 +3435,7 @@ object VersionedTable {
         val toks = (keptTokens ++ newDir).mkString(";")
         publish(spark, table, attempt + 1L, toks, batchId, op = op,
           mergeKey = mergeKey,
-          delRef = delRefAtBase, schemaRef = schemaRefAtBase)
+          delRef = baseM.del, schemaRef = baseM.schema)
         trace(s"PUBLISHED op=$op base=$base attempt=$attempt " +
           s"v=${attempt + 1} toks=$toks")
         return attempt + 1L
@@ -3758,18 +3448,16 @@ object VersionedTable {
               Seq[(String, Seq[String], Seq[String])])] = {
             val cur = latestVersion(spark, table).getOrElse(attempt)
             if (cur <= attempt) return None // foreign slot, not a race
+            val curM = manifestOf(hfs, root, cur).getOrElse(return None)
             // batch-token guard: the exactly-once check must re-run
             // against what actually won
-            if (batchId.isDefined && lastBatchId(spark, table) == batchId)
-              return None
+            if (batchId.isDefined && curM.batch == batchId) return None
             // guard 3: table-level semantics unchanged
-            if (delRefOf(spark, table, cur) != delRefAtBase ||
-                schemaRefOf(spark, table, cur) != schemaRefAtBase ||
+            if (curM.del != baseM.del || curM.schema != baseM.schema ||
                 latestConstraintGen(hfs, root) != consAtBase)
               return None
-            val curPerScope = enumerateTokens(hfs, root, groupTokensByScope(
-              splitDirs(resolveDir(hfs, root, cur).getOrElse(
-                return None))))
+            val curPerScope = enumerateTokens(hfs, root,
+              groupTokensByScope(splitDirs(curM.dataDir)))
             val curFilesByScope = curPerScope.iterator.map {
               case (scope, _, referenced) => scope -> referenced.toSet
             }.toMap
@@ -3866,21 +3554,20 @@ object VersionedTable {
       base: Long, predicate: String): Long = {
     import org.apache.spark.sql.functions.expr
     val (hfs, root) = fs(spark, table)
-    val baseDirs = resolveDir(hfs, root, base).getOrElse(
-      throw new IllegalArgumentException(
-        s"version $base of $table was never committed"))
+    val baseM = commitOf(hfs, root, table, base)
+    val baseDirs = baseM.dataDir
     // a deferred predicate binds to LOGICAL names at read time but is
     // evaluated against each dir's RAW frame — under an active schema
     // mapping the two disagree, so refuse until a copy-on-write verb
     // materializes the mapping (the dual of [[publishSchemaOp]]'s guard)
-    require(schemaStateOf(spark, table, base).isEmpty,
+    require(schemaStateOf(hfs, root, baseM).isEmpty,
       s"$table carries an active schema mapping at version $base — " +
         "deferred predicates cannot bind across it; run a copy-on-write " +
         "verb (OPTIMIZE, UPDATE, DELETE) to materialize the mapping first")
     // validate BEFORE any write: unresolvable columns fail analysis here
     // (AnalysisException), and a nondeterministic predicate would delete
     // DIFFERENT rows on every read — refuse both up front
-    val probe = readVersion(spark, table, base).where(expr(predicate))
+    val probe = snapshotOf(spark, hfs, root, baseM).where(expr(predicate))
     require(probe.queryExecution.analyzed.expressions.forall(_.deterministic),
       s"lazy-delete predicate must be deterministic (it re-evaluates at " +
         s"every read): $predicate")
@@ -3888,7 +3575,7 @@ object VersionedTable {
     // normalize to their parent): visibility only ever shrinks within a
     // dir — later versions reference the same or fewer of its files — so
     // a dir-level scope is exactly the rows visible at delete time
-    val state = delStateOf(spark, table, base) :+
+    val state = delStateOf(hfs, root, baseM) :+
       DelPred(predicate, splitDirs(baseDirs).map(dirScopeOf).toSet)
     val ref = writeDelSidecar(spark, table, state)
     publish(spark, table, base + 1L, baseDirs, op = "lazydelete",
@@ -4053,7 +3740,6 @@ object VersionedTable {
     val (hfs, root) = fs(spark, table)
     val dir = new Path(root, constraintsDirName)
     hfs.mkdirs(dir)
-    def esc(v: String) = v.replace("\\", "\\\\").replace("\"", "\\\"")
     var done = false
     while (!done) {
       val gen = latestConstraintGen(hfs, root).getOrElse(0L)
@@ -4061,13 +3747,10 @@ object VersionedTable {
       require(merged.nonEmpty, "constraint state must not become empty")
       require(merged.keys.forall(_.matches("[A-Za-z0-9_]+")),
         "constraint names must be simple identifiers")
-      val body = merged.toSeq.sortBy(_._1)
-        .map { case (n, e) => s"""\"${esc(n)}\":\"${esc(e)}\"""" }
-        .mkString("{", ",", "}")
       done = putIfAbsentFile(spark, hfs,
         new Path(dir, s".tmp-${UUID.randomUUID}"),
         new Path(dir, constraintGenName(gen + 1L)),
-        body.getBytes(StandardCharsets.UTF_8))
+        MetaCodec.encodeConstraints(merged).getBytes(StandardCharsets.UTF_8))
     }
   }
 
@@ -4079,9 +3762,6 @@ object VersionedTable {
       case constraintGenRe(n) => n.toLong
     }.maxOption
   }
-
-  private val constraintEntry =
-    """"((?:[^"\\]|\\.)+)"\s*:\s*"((?:[^"\\]|\\.)*)"""".r
 
   /** The persisted constraints, name-ascending; empty when none set.
     * Reads the newest generation file, falling back to the legacy
@@ -4095,13 +3775,8 @@ object VersionedTable {
         new Path(new Path(root, constraintsDirName), constraintGenName(g))
       case None => new Path(root, "_constraints.json")
     }
-    if (!hfs.exists(p)) return Nil
-    val in = hfs.open(p)
-    val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    def unesc(v: String) = v.replace("\\\"", "\"").replace("\\\\", "\\")
-    constraintEntry.findAllMatchIn(body)
-      .map(m => unesc(m.group(1)) -> unesc(m.group(2))).toSeq
+    if (!hfs.exists(p)) Nil
+    else MetaCodec.decodeConstraints(MetaCodec.readBody(hfs, p))
   }
 
   /** One aggregation pass counting FALSE rows per constraint over the
@@ -4151,9 +3826,8 @@ object VersionedTable {
       "policy column names must be simple identifiers")
     val (hfs, root) = fs(spark, table)
     hfs.mkdirs(root)
-    val body = s"""{"stats":${statsCols.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
-      s""""bloom":${bloomCols.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
-      s""""bitsPerRow":$bloomBitsPerRow}"""
+    val body = MetaCodec.encodeSkipping(
+      MetaCodec.SkippingPolicy(statsCols, bloomCols, bloomBitsPerRow))
     val out = hfs.create(new Path(root, "_skipping.json"), /* overwrite */ true)
     try out.write(body.getBytes(StandardCharsets.UTF_8)) finally out.close()
   }
@@ -4166,14 +3840,14 @@ object VersionedTable {
   def describeSkipping(spark: SparkSession, table: String): DataFrame = {
     val (hfs, root) = fs(spark, table)
     val pol = skippingPolicy(spark, table)
-    val cp = checkpointMap(hfs, root)
+    val cp = checkpointOf(hfs, root)
     val rows = versions(spark, table).map { v =>
       // a multi-dir (appended) version honestly prunes a column only if
       // EVERY dir covers it — report the intersection. Kept-file and
       // exclusion tokens (file-granular CoW) read their PARENT dir's
       // sidecar, the one pruned reads consult for them.
-      val perDir = resolveDirWith(hfs, root, v, () => cp).toSeq
-        .flatMap(splitDirs).map(dirScopeOf).distinct
+      val perDir = manifestOf(hfs, root, v, cp).toSeq
+        .flatMap(m => splitDirs(m.dataDir)).map(dirScopeOf).distinct
         .map(d => new Path(new Path(root, d), statsDirName))
         .map { p =>
           if (!hfs.exists(p)) Seq.empty[String]
@@ -4188,34 +3862,21 @@ object VersionedTable {
           .map(_.stripPrefix("min__")).mkString(","),
         cols.filter(_.startsWith("bloom_m__"))
           .map(_.stripPrefix("bloom_m__")).mkString(","),
-        pol.map(_._1.mkString(",")).getOrElse(""),
-        pol.map(_._2.mkString(",")).getOrElse(""))
+        pol.map(_.stats.mkString(",")).getOrElse(""),
+        pol.map(_.bloom.mkString(",")).getOrElse(""))
     }
     import spark.implicits._
     rows.toDF("version", "sidecar", "stats_cols", "bloom_cols",
       "policy_stats", "policy_bloom")
   }
 
-  private val skipStatsField = """"stats"\s*:\s*\[([^\]]*)\]""".r
-  private val skipBloomField = """"bloom"\s*:\s*\[([^\]]*)\]""".r
-  private val skipBitsField = """"bitsPerRow"\s*:\s*(\d+)""".r
-
   /** The persisted policy, or None. */
   private def skippingPolicy(spark: SparkSession,
-      table: String): Option[(Seq[String], Seq[String], Int)] = {
+      table: String): Option[MetaCodec.SkippingPolicy] = {
     val (hfs, root) = fs(spark, table)
     val p = new Path(root, "_skipping.json")
-    if (!hfs.exists(p)) return None
-    val in = hfs.open(p)
-    val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    def cols(m: Option[scala.util.matching.Regex.Match]) =
-      m.map(_.group(1)).getOrElse("").split(",").iterator
-        .map(_.trim.stripPrefix("\"").stripSuffix("\"")).filter(_.nonEmpty)
-        .toSeq
-    Some((cols(skipStatsField.findFirstMatchIn(body)),
-      cols(skipBloomField.findFirstMatchIn(body)),
-      skipBitsField.findFirstMatchIn(body).map(_.group(1).toInt).getOrElse(10)))
+    if (!hfs.exists(p)) None
+    else Some(MetaCodec.decodeSkipping(MetaCodec.readBody(hfs, p)))
   }
 
   /** The zone-map sidecar's dir name inside a snapshot's data dir. The
@@ -4326,9 +3987,7 @@ object VersionedTable {
     // tokens (file-granular CoW) backfill their PARENT dir's sidecar —
     // per-file stats rows for files this version no longer references
     // are inert (pruned reads intersect with the referenced set)
-    resolveDir(hfs, root, version).map(splitDirs).getOrElse(
-        throw new IllegalArgumentException(
-          s"version $version of $table was never committed"))
+    splitDirs(commitOf(hfs, root, table, version).dataDir)
       .map(dirScopeOf).distinct.map(rel => new Path(root, rel)).map { dataDir =>
       val statsPath = new Path(dataDir, statsDirName)
       val (haveStats, haveBloom): (Seq[String], Seq[String]) =
@@ -4358,10 +4017,8 @@ object VersionedTable {
   private def dataPathsOf(spark: SparkSession, table: String,
       version: Long): Seq[Path] = {
     val (hfs, root) = fs(spark, table)
-    val dir = resolveDir(hfs, root, version).getOrElse(
-      throw new IllegalArgumentException(
-        s"version $version of $table was never committed"))
-    splitDirs(dir).map(new Path(root, _))
+    splitDirs(commitOf(hfs, root, table, version).dataDir)
+      .map(new Path(root, _))
   }
 
   /** File-level selection for `bounds` against the version's sidecar(s):
@@ -4383,9 +4040,16 @@ object VersionedTable {
       equalities: Seq[ColumnEquals] = Nil,
       inLists: Seq[ColumnIn] = Nil): Option[(Seq[String], Int)] = {
     val (hfs, root) = fs(spark, table)
-    val tokens = resolveDir(hfs, root, version).map(splitDirs).getOrElse(
-      throw new IllegalArgumentException(
-        s"version $version of $table was never committed"))
+    pruneDirs(spark, hfs, root, commitOf(hfs, root, table, version),
+      schema, bounds, equalities, inLists)
+  }
+
+  /** [[pruneSelection]] over the commit record `m` already in hand. */
+  private def pruneDirs(spark: SparkSession, hfs: FileSystem, root: Path,
+      m: Manifest, schema: org.apache.spark.sql.types.StructType,
+      bounds: Seq[ColumnBounds], equalities: Seq[ColumnEquals],
+      inLists: Seq[ColumnIn]): Option[(Seq[String], Int)] = {
+    val tokens = splitDirs(m.dataDir)
     // point predicates (equalities + size-capped IN-lists), unified: a
     // file survives an IN-list iff ANY value could be present
     val pointPreds: Seq[(String, Seq[Any])] =
@@ -4535,7 +4199,9 @@ object VersionedTable {
       equalities: Seq[ColumnEquals] = Nil,
       inLists: Seq[ColumnIn] = Nil): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
-    val full = readVersion(spark, table, version)
+    val (hfs, root) = fs(spark, table)
+    val m = commitOf(hfs, root, table, version)
+    val full = snapshotOf(spark, hfs, root, m)
     val residual = (bounds.flatMap { b =>
       b.lower.map(l => col(b.column) >= lit(l)).toSeq ++
         b.upper.map(u => col(b.column) <= lit(u)).toSeq
@@ -4547,9 +4213,9 @@ object VersionedTable {
     // PHYSICAL column names the mapping may have renamed away — degrade
     // to the full (correct, mapped) scan until a copy-on-write verb
     // materializes the mapping
-    if (schemaStateOf(spark, table, version).nonEmpty)
+    if (schemaStateOf(hfs, root, m).nonEmpty)
       return full.where(residual)
-    pruneSelection(spark, table, version, full.schema, bounds, equalities,
+    pruneDirs(spark, hfs, root, m, full.schema, bounds, equalities,
         inLists) match {
       case None => full.where(residual)
       case Some((kept, total)) if kept.size == total => full.where(residual)
@@ -4558,8 +4224,7 @@ object VersionedTable {
       case Some((kept, _)) =>
         // kept entries are table-root-relative (they may span several
         // dirs for appended versions)
-        val (_, root) = fs(spark, table)
-        val preds = delStateOf(spark, table, version)
+        val preds = delStateOf(hfs, root, m)
         if (preds.isEmpty)
           spark.read.schema(full.schema)
             .parquet(kept.map(f => new Path(root, f).toString): _*)
@@ -4652,17 +4317,15 @@ object VersionedTable {
     require(targetFileBytes >= minFileBytes,
       s"targetFileBytes ($targetFileBytes) must be >= minFileBytes " +
         s"($minFileBytes)")
-    if (schemaStateOf(spark, table, base).nonEmpty)
-      return optimizeFrom(spark, table, base, targetFileBytes, Nil, Nil)
     val (hfs, root) = fs(spark, table)
-    val dirStr = resolveDir(hfs, root, base).getOrElse(
-      throw new IllegalArgumentException(
-        s"version $base of $table was never committed"))
-    val groups = groupTokensByScope(splitDirs(dirStr))
+    val baseM = commitOf(hfs, root, table, base)
+    if (schemaStateOf(hfs, root, baseM).nonEmpty)
+      return optimizeFrom(spark, table, base, targetFileBytes, Nil, Nil)
+    val groups = groupTokensByScope(splitDirs(baseM.dataDir))
     val perScope = enumerateTokens(hfs, root, groups)
     if (!grammarSafeNames(perScope))
       return optimizeFrom(spark, table, base, targetFileBytes, Nil, Nil)
-    val preds = delStateOf(spark, table, base)
+    val preds = delStateOf(hfs, root, baseM)
     // size every referenced file; one listing per scope
     val sized: Seq[(String, String, Long)] =
       perScope.flatMap { case (scope, _, referenced) =>
@@ -4684,7 +4347,7 @@ object VersionedTable {
     val d = writeSnapshot(spark, rows, table, 5000000L)
     validateConstraints(spark, table, d)
     applySkipping(spark, table, d, Nil, Nil, 10)
-    publishCowRebasingWith(spark, table, base, "optimize",
+    publishCowRebasingWith(spark, table, baseM, "optimize",
       perScope, touched, Some(d))(_ => false)
   }
 
@@ -4719,9 +4382,7 @@ object VersionedTable {
     // drip-appended multi-dir version back into one dir is half of
     // optimize's job; file/exclusion tokens (file-granular CoW) count
     // only the files the version actually references
-    groupTokensByScope(splitDirs(resolveDir(hfs, optRoot, base).getOrElse(
-        throw new IllegalArgumentException(
-          s"version $base of $table was never committed"))))
+    groupTokensByScope(splitDirs(commitOf(hfs, optRoot, table, base).dataDir))
       .foreach { case (scope, toks) =>
         groupRestriction(hfs, optRoot, scope, toks) match {
           case None =>

@@ -1282,6 +1282,29 @@ class GraftApiSpec extends SparkSpec {
     assert(seen.toSeq == Seq(0, 1, 2))
   }
 
+  test("iterateUntilFixpoint: a lazy checkpoint whose halt runs no action throws") {
+    import spark.implicits._
+    val init = Seq(8L, 3L).toDF("n")
+    def halve(st: org.apache.spark.sql.DataFrame, i: Int) =
+      st.select((col("n") / 2).cast("long").as("n"))
+    // a free halt never materializes the lazy checkpoint: lineage would
+    // grow every round, so the loop refuses instead of degrading silently
+    val e = intercept[IllegalStateException] {
+      Graft.iterateUntilFixpoint(init, maxIter = 3,
+        eagerCheckpoint = false)(halve)((_, i) => i >= 3)
+    }
+    assert(e.getMessage.contains("halt"), e.getMessage)
+    // a halt that counts the full state materializes it: no throw
+    val fp = Graft.iterateUntilFixpoint(init, maxIter = 10,
+      eagerCheckpoint = false)(halve) { (st, _) =>
+      st.filter(col("n") =!= 0L).count() == 0L
+    }
+    assert(fp.converged && fp.rounds == 4)
+    // the eager default needs no action from the halt
+    assert(Graft.iterateUntilFixpoint(init, maxIter = 3)(halve)(
+      (_, i) => i >= 3).rounds == 3)
+  }
+
   test("skyline2D: dominance exact on ties, duplicates of frontier pairs kept") {
     import spark.implicits._
     val df = Seq(
