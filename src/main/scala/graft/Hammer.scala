@@ -22,7 +22,8 @@ import graft.sources.{GraftCatalog, GraftSql, VersionedTable}
   * through O(new-data) `append`; one LAZY-DELETE writer appends a
   * sacrificial row then `deleteWhereLazy`s it (racing OPTIMIZE's
   * materialize-and-reset of the del stack); one maintenance thread
-  * loops `optimize` + `compactManifests` + `vacuum` against the churn.
+  * loops `optimize` + `compactManifests` + `vacuum` against the churn,
+  * paced at ~10 Hz like phase 5's.
   * The DML, append, and lazy-delete writers drive their verbs through
   * the NAME-ADDRESSED statement surface (r15: `UPDATE graft_hammer.t`,
   * `INSERT INTO graft_hammer.t VALUES`, `DELETE ... DEFERRED` via
@@ -135,6 +136,14 @@ object Hammer {
       if (done) { counter.incrementAndGet(); () }
     }
 
+    // pace the maintenance/consumer loops (phases 1 and 5) at ~10 Hz
+    // instead of a hot spin — an unpaced OPTIMIZE thrash turned every
+    // widened conflict window into another writer loss, tripled a
+    // phase's wall clock, and made its length and conflict count follow
+    // maintenance speed rather than writer behaviour (real maintenance
+    // is periodic; the races still collide constantly at 10 Hz)
+    def paced(body: => Unit): Unit = { body; Thread.sleep(100L) }
+
     // ---- phase 1: the mixed-verb brawl --------------------------------
     val mergeThreads = (0 until writers).map { w =>
       new Thread(() => guarded {
@@ -209,7 +218,7 @@ object Hammer {
       }
     }, "lazydelete")
     val maintThread = new Thread(() => guarded {
-      while (!stopMaint.get() && failures.isEmpty) {
+      while (!stopMaint.get() && failures.isEmpty) paced {
         try {
           VersionedTable.optimize(spark, t, targetFileBytes = 1L << 30)
           optimizes.incrementAndGet()
@@ -536,14 +545,6 @@ object Hammer {
         }
       }
     }, "p5-alter")
-    // r16: pace the maintenance/consumer loops at ~10 Hz instead of a
-    // hot spin — the granular merges pay probe passes per attempt, and
-    // an unpaced OPTIMIZE thrash (one full rewrite every ~0.25s) turned
-    // every widened conflict window into another writer loss, tripling
-    // the phase's wall clock while proving nothing extra (real
-    // maintenance is periodic; the races still collide constantly at
-    // 10 Hz — conflicts stay in the thousands)
-    def paced(body: => Unit): Unit = { body; Thread.sleep(100L) }
     val p5Maint = new Thread(() => guarded {
       while (!stopP5.get() && failures.isEmpty) paced {
         try {

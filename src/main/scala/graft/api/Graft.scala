@@ -814,6 +814,9 @@ object Graft {
     *    while staying off the (slow, HDFS-backed) reliable checkpoint
     *    path. At 1000 executors the materialized state is a keyed
     *    in-memory table per round — the classic Pregel superstep shape.
+    *    The checkpoint is always eager: under AQE a lazy one still runs
+    *    every shuffle-map stage when it is called, so deferring it to the
+    *    halt's action saves no barrier.
     *  - **Convergence actions.** `halt` runs AFTER the checkpoint, so the
     *    count/isEmpty action it almost always needs reads the
     *    materialized state instead of recomputing the round.
@@ -821,21 +824,9 @@ object Graft {
     * `step` receives (state, 0-based round index); `halt` receives
     * (state, rounds completed). Rounds where `i % checkpointEvery != 0`
     * skip the checkpoint — only worth it when `halt` is also cheap there.
-    *
-    * `eagerCheckpoint = false` (r19) marks the checkpoint lazily instead
-    * of running a dedicated materialization action: the NEXT action over
-    * the state — normally the halt's own count — computes and persists it
-    * in the same job, halving the driver-synchronized barriers per round
-    * (two full-cluster syncs → one at scale-out). Only sound when every
-    * checkpointed round's halt runs a FULL action over the state (a
-    * count, not an isEmpty/limit, which computes partitions partially);
-    * callers whose halt is free (fixed-round loops) must keep the eager
-    * default or the lineage never truncates. The loop enforces this: after
-    * the halt of a lazily checkpointed round, a state whose checkpoint is
-    * still unmaterialized throws (the check reads RDD state, no job).
     */
   def iterateUntilFixpoint(init: DataFrame, maxIter: Int,
-      checkpointEvery: Int = 1, eagerCheckpoint: Boolean = true)(
+      checkpointEvery: Int = 1)(
       step: (DataFrame, Int) => DataFrame)(
       halt: (DataFrame, Int) => Boolean): Fixpoint = {
     require(maxIter >= 1, s"maxIter must be >= 1: $maxIter")
@@ -847,18 +838,8 @@ object Graft {
     while (!done && i < maxIter) {
       val next = step(state, i)
       i += 1
-      val checkpointed = i % checkpointEvery == 0
-      state = if (checkpointed) next.localCheckpoint(eagerCheckpoint) else next
+      state = if (i % checkpointEvery == 0) next.localCheckpoint() else next
       done = halt(state, i)
-      if (checkpointed && !eagerCheckpoint) state.queryExecution.logical match {
-        case r: org.apache.spark.sql.execution.LogicalRDD
-            if r.rdd.isCheckpointed => ()
-        case _ => throw new IllegalStateException(
-          s"iterateUntilFixpoint(eagerCheckpoint = false): round $i's halt " +
-            "ran no full action over the state, so its lazy checkpoint " +
-            "never materialized and the lineage is not truncated — count " +
-            "the state in halt or use the eager checkpoint")
-      }
     }
     Fixpoint(state, i, done)
   }
@@ -882,7 +863,11 @@ object Graft {
   /** [[dupClusters]] plus convergence telemetry: the returned
     * [[Fixpoint]] carries the round count actually run, so operational
     * tooling (and the CC scale profile) can confirm the O(log diameter)
-    * claim on real data instead of trusting the docstring.
+    * claim on real data instead of trusting the docstring. Each round is
+    * an eager checkpoint plus the halt's convergence count. Graphs whose
+    * components are known in closed form need none of this: exact-dup
+    * pairs are cliques per content signature, so their clusters are the
+    * signature groups ([[collapseClusters]] keyed by the signature).
     */
   def dupClustersFx(pairs: DataFrame, maxIter: Int = 25): Fixpoint = {
     // r18: both directions in ONE pass over the pair plan (see pageRank)
@@ -894,13 +879,7 @@ object Graft {
       .distinct().cache()
     val init = edges.select(col("u").as("id")).distinct()
       .withColumn("cluster", col("id"))
-    // r19: lazy checkpoint — the halt below counts the FULL state every
-    // round anyway, so that one action materializes the round's
-    // checkpoint too: one driver barrier per round instead of two (the
-    // eager-checkpoint count + the convergence count), the dominant cost
-    // of scaling this loop out (r18 measured 8c/32c = 0.70).
-    val fp = iterateUntilFixpoint(init, maxIter,
-        eagerCheckpoint = false) { (labels, _) =>
+    val fp = iterateUntilFixpoint(init, maxIter) { (labels, _) =>
       // (1) candidate = min(current, min over neighbors' labels)
       val viaNeighbor = edges
         .join(labels.withColumnRenamed("id", "v"), Seq("v"))
@@ -2270,34 +2249,30 @@ object Graft {
   def highDegreeNodes(pairs: DataFrame, maxDegree: Long): DataFrame =
     nodeDegrees(normalizedEdges(pairs)).where(col("d") > maxDegree)
 
-  /** Cluster collapse / survivorship: the step that USES a dup graph —
-    * resolve pairs into connected components ([[dupClusters]]), attach
-    * every row to its cluster (rows in no pair are their own singleton
-    * cluster), keep ONE canonical row per cluster under `order` (e.g.
-    * longest text, then lowest id), and report per-cluster stats. This is
-    * the materialization a cleaning pipeline actually writes: survivors +
-    * an audit of what each absorbed. Shapes: the CC resolution is the
-    * pointer-jumping loop (O(log diameter) rounds); everything after is
-    * keyed joins/aggs on id or cluster — the label table is dup-graph
-    * nodes only (a small fraction of the corpus), AQE-broadcastable.
+  /** Cluster collapse / survivorship: rows with equal `cluster` keys form
+    * one cluster; keep ONE canonical row per cluster under `order` (e.g.
+    * longest text, then lowest id) and report per-cluster stats — the
+    * survivors + audit table a cleaning pipeline writes. Output:
+    * `cluster` (the min `id`), `keep_id`, `n_members`, then `stats`
+    * (aggregate columns, evaluated over the cluster). One window pass
+    * partitioned by the key and sorted by `order` (the aggregates use the
+    * whole-partition frame, so one sort serves all): one shuffle, no
+    * pair graph, no fixpoint.
+    * Exact duplicates pass their content signature (NULL-keyed rows
+    * need a per-row fallback, e.g. `coalesce(sig, id)`, to stay
+    * singletons); a near-dup graph passes `coalesce(label, id)` over its
+    * [[dupClusters]] labels.
     */
-  def collapseClusters(df: DataFrame, pairs: DataFrame, id: Column,
+  def collapseClusters(df: DataFrame, cluster: Column, id: Column,
       order: Seq[Column], stats: Seq[(String, Column)] = Nil): DataFrame = {
-    val labels = dupClusters(pairs).withColumnRenamed("id", "__cid")
-    // withCluster is read twice (stats agg + keep-first dedup) but NOT
-    // cached: it carries every df column (document bodies included), and
-    // caching it was measured slower at sf0.1 than re-running the label
-    // join — labels itself is already cached inside dupClusters, so the
-    // recompute is one cheap broadcast join per use.
-    val withCluster = df.withColumn("__cid", id)
-      .join(labels, Seq("__cid"), "left")
-      .withColumn("cluster", coalesce(col("cluster"), col("__cid")))
-    val agg = withCluster.groupBy(col("cluster"))
-      .agg(count(lit(1)).as("n_members"),
-        stats.map { case (n, c) => c.as(n) }: _*)
-    dedupExact(withCluster, Seq(col("cluster")), order)
-      .select(col("cluster"), col("__cid").as("keep_id"))
-      .join(agg, Seq("cluster"))
+    val ranked = Window.partitionBy(cluster).orderBy(order: _*)
+    val all = ranked.rowsBetween(Window.unboundedPreceding,
+      Window.unboundedFollowing)
+    df.select(Seq(min(id).over(all).as("cluster"), id.as("keep_id"),
+        count(lit(1)).over(all).as("n_members")) ++
+        stats.map { case (n, c) => c.over(all).as(n) } :+
+        row_number().over(ranked).as("__rk"): _*)
+      .where(col("__rk") === 1).drop("__rk")
   }
 
   /** Exact grouped k-NN self-join: for every vector, its `k` most

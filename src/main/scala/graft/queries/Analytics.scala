@@ -2310,12 +2310,18 @@ object Analytics {
     // (the q11_stats posture: built-in stddev is partition-order
     // nondeterministic), variance from E[x²]−E[x]² with identical
     // operation order in the oracle; parts under 5 lines are skipped.
+    // mean_price is rounded ONCE, half-up, from the exact mean of the
+    // unit prices taken in whole 1e-8 units (exact for any cents price
+    // over an integer quantity that terminates there): integer sum and
+    // integer division, identical in both engines. Rounding a double
+    // mean instead disagreed at the 4th decimal on exact 0.00005 ties.
     Q("q190_price_dispersion",
       (s, d) => {
         Tables(s, d, "lineitem")
           .withColumn("up", col("l_extendedprice") / col("l_quantity"))
           .groupBy(col("l_partkey"))
           .agg(count(lit(1)).as("n"),
+            sum(round(col("up") * 1e8).cast(LongType)).as("up8"),
             // davgHi, not davg: `up` is a COMPUTED double ratio whose
             // DECIMAL(25,6) cast landed exactly on .5e-6 boundaries at
             // sf0.1 (r13 defect) — scale 18 makes exact half-landings
@@ -2324,9 +2330,10 @@ object Analytics {
             Exact.davgHi(col("up") * col("up")).as("mx2"))
           .where(col("n") >= 5L)
           .select(col("l_partkey"), col("n"),
-            // 4dp, not the usual 6: belt-and-braces headroom for the
-            // residual shortest-repr vs exact-binary cast drift
-            (round(col("mx"), 4) + lit(0d)).as("mean_price"),
+            (expr("(2 * up8 + n * 10000) div (2 * n * 10000)") / 1e4)
+              .as("mean_price"),
+            // cv at 4dp, not the usual 6: belt-and-braces headroom for
+            // the residual shortest-repr vs exact-binary cast drift
             (round(
               sqrt(greatest(col("mx2") - col("mx") * col("mx"), lit(0.0))) /
                 col("mx"), 4) + lit(0d)).as("cv"))
@@ -2337,11 +2344,13 @@ object Analytics {
              |  FROM lineitem),
              |m AS (
              |  SELECT l_partkey, CAST(count(*) AS BIGINT) AS n,
+             |    SUM(CAST(round(up * 100000000) AS BIGINT)) AS up8,
              |    ${Exact.sqlAvgHi("up")} AS mx,
              |    ${Exact.sqlAvgHi("up * up")} AS mx2
              |  FROM up GROUP BY 1)
              |SELECT l_partkey, n,
-             |  round(mx, 4) + 0.0 AS mean_price,
+             |  CAST((2 * up8 + n * 10000) // (2 * n * 10000) AS DOUBLE)
+             |    / 10000 AS mean_price,
              |  round(sqrt(greatest(mx2 - mx * mx, 0.0)) / mx, 4) + 0.0
              |    AS cv
              |FROM m WHERE n >= 5 ORDER BY l_partkey""".stripMargin)),

@@ -1330,21 +1330,20 @@ object LlmOps {
              |  FROM documents)
              |WHERE rk <= 20 ORDER BY lang, doc_id""".stripMargin)),
 
-    // Q74 — cluster collapse / survivorship (Graft.collapseClusters): the
-    // step that USES the dup graph — every doc joins its connected
-    // component (singletons stand alone), the longest member (tiebreak:
-    // lowest id) survives, and each cluster reports membership stats —
-    // the survivors+audit table a cleaning run actually materializes.
-    // Oracle closed form: exact-dup components ARE the signature groups,
-    // so cluster = min id and survivor = first by (n_chars desc, id)
-    // within the signature. A NULL text pairs with nothing, so its
-    // signature is made distinct per document: each stays a singleton.
+    // Q74 — cluster collapse / survivorship (Graft.collapseClusters):
+    // exact duplicates cluster by content signature (exact-dup components
+    // ARE the signature groups, so no pair graph is built), the longest
+    // member (tiebreak: lowest id) survives, and each cluster reports
+    // membership stats — the survivors+audit table a cleaning run
+    // actually materializes. cluster = min id in the signature group. A
+    // NULL text pairs with nothing, so its key falls back to its own id:
+    // each stays a singleton. The oracle is the same closed form.
     Q("q74_survivorship",
       (s, d) => {
         val docs = Tables(s, d, "documents")
-        val pairs = Graft.exactDupPairs(docs, id = col("doc_id"),
-          text = col("text"))
-        Graft.collapseClusters(docs, pairs, id = col("doc_id"),
+        Graft.collapseClusters(docs, coalesce(
+            Graft.contentSignature(col("text")),
+            col("doc_id").cast("string")), id = col("doc_id"),
             order = Seq(col("n_chars").desc, col("doc_id")),
             stats = Seq("max_chars" -> max(col("n_chars"))))
           .select(col("cluster"), col("keep_id").as("keep_doc"),

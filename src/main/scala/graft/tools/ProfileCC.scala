@@ -5,9 +5,10 @@ import graft.api.Graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Scale profile for the connected-components family (dupClusters and the
-  * operators built on it: q31_dup_clusters, q74_survivorship): separates
-  * the two cost axes the docstrings claim —
+/** Scale profile for the connected-components operator (dupClusters, the
+  * body of q31_dup_clusters; q74_survivorship clusters exact duplicates
+  * by signature key and runs no components loop): separates the two
+  * cost axes the docstrings claim —
   *
   *  1. **Volume axis**: m disjoint id-offset copies of the real sf-dir
   *     exact-dup pair graph (component structure, hence diameter and

@@ -1030,15 +1030,51 @@ class GraftApiSpec extends SparkSpec {
     val rows = Seq((1L, "dup dup text", 30L), (2L, "dup dup text", 30L),
       (3L, "dup dup text", 30L), (9L, "alone here", 10L))
       .toDF("pk", "body", "len")
-    val pairs = Graft.exactDupPairs(rows, col("pk"), col("body"))
-    val out = Graft.collapseClusters(rows, pairs, col("pk"),
-        order = Seq(col("len").desc, col("pk")),
+    val out = Graft.collapseClusters(rows, Graft.contentSignature(col("body")),
+        col("pk"), order = Seq(col("len").desc, col("pk")),
         stats = Seq("sum_len" -> sum(col("len"))))
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2),
         r.getLong(3))).toMap
     assert(out == Map(
       1L -> (1L, 3L, 90L), // cluster of 1,2,3: survivor 1 (len tie, min id)
       9L -> (9L, 1L, 10L)), s"got $out")
+  }
+
+  test("collapseClusters by signature equals a plain-Scala survivorship and dupClusters labels") {
+    import spark.implicits._
+    val hot = (100L until 150L).map(i => (i, "hot boilerplate text here", i % 7))
+    val rows = hot ++ Seq(
+      (200L, null, 0L), (201L, null, 0L),              // NULL texts: singletons
+      (210L, "", 0L), (211L, "", 0L),                  // empty texts pair
+      (220L, "alpha beta gamma", 3L),
+      (221L, "gamma alpha beta", 5L),                  // permuted-token dup
+      (230L, "lonely one", 9L), (231L, "another lonely doc", 2L))
+    val df = rows.toDF("pk", "body", "len")
+    val out = Graft.collapseClusters(df,
+        coalesce(Graft.contentSignature(col("body")), col("pk").cast("string")),
+        col("pk"), order = Seq(col("len").desc, col("pk")),
+        stats = Seq("sum_len" -> sum(col("len"))))
+      .collect().map(r => r.getAs[Long]("cluster") -> (r.getAs[Long]("keep_id"),
+        r.getAs[Long]("n_members"), r.getAs[Long]("sum_len"))).toMap
+    // reference 1: survivorship in plain Scala, grouping by the token set
+    val groups = rows.groupBy { case (pk, body, _) =>
+      Option(body).map(_.split(" ").distinct.sorted.mkString(" "))
+        .getOrElse(s"null:$pk") }.values
+    val want = groups.map { g =>
+      val keep = g.minBy { case (pk, _, len) => (-len, pk) }._1
+      g.map(_._1).min -> (keep, g.size.toLong, g.map(_._3).sum)
+    }.toMap
+    assert(out == want, s"got $out")
+    assert(out(100L)._2 == 50L && out(200L)._2 == 1L && out(201L)._2 == 1L &&
+      out(210L)._2 == 2L && out(220L) == (221L, 2L, 8L))
+    // reference 2: the pair graph's components, for every doc in a pair
+    val labels = Graft.dupClusters(Graft.exactDupPairs(df, col("pk"), col("body")))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val keyLabels = groups.filter(_.size > 1)
+      .flatMap(g => g.map(_._1 -> g.map(_._1).min)).toMap
+    assert(labels == keyLabels, s"got $labels")
+    assert(labels.values.groupBy(identity).map { case (c, m) => c -> m.size.toLong } ==
+      out.collect { case (c, (_, n, _)) if n > 1 => c -> n })
   }
 
   test("zipfFit matches a driver-side OLS on the same rank/count points") {
@@ -1280,29 +1316,11 @@ class GraftApiSpec extends SparkSpec {
       seen += i; st
     } { (_, _) => false }
     assert(seen.toSeq == Seq(0, 1, 2))
-  }
-
-  test("iterateUntilFixpoint: a lazy checkpoint whose halt runs no action throws") {
-    import spark.implicits._
-    val init = Seq(8L, 3L).toDF("n")
-    def halve(st: org.apache.spark.sql.DataFrame, i: Int) =
+    // the checkpoint is eager: a halt that runs no action still works
+    val two = Seq(8L, 3L).toDF("n")
+    assert(Graft.iterateUntilFixpoint(two, maxIter = 3) { (st, _) =>
       st.select((col("n") / 2).cast("long").as("n"))
-    // a free halt never materializes the lazy checkpoint: lineage would
-    // grow every round, so the loop refuses instead of degrading silently
-    val e = intercept[IllegalStateException] {
-      Graft.iterateUntilFixpoint(init, maxIter = 3,
-        eagerCheckpoint = false)(halve)((_, i) => i >= 3)
-    }
-    assert(e.getMessage.contains("halt"), e.getMessage)
-    // a halt that counts the full state materializes it: no throw
-    val fp = Graft.iterateUntilFixpoint(init, maxIter = 10,
-      eagerCheckpoint = false)(halve) { (st, _) =>
-      st.filter(col("n") =!= 0L).count() == 0L
-    }
-    assert(fp.converged && fp.rounds == 4)
-    // the eager default needs no action from the halt
-    assert(Graft.iterateUntilFixpoint(init, maxIter = 3)(halve)(
-      (_, i) => i >= 3).rounds == 3)
+    }((_, i) => i >= 3).rounds == 3)
   }
 
   test("skyline2D: dominance exact on ties, duplicates of frontier pairs kept") {

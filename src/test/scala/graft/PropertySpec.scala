@@ -209,4 +209,24 @@ class PropertySpec extends SparkSpec {
           s"!= query ($nLow,$nHigh)")
     }
   }
+
+  test("q190 rounds a mean unit price on an exact 0.00005 tie half-up") {
+    import spark.implicits._
+    // eight lines of part 613 at 2-dp unit prices averaging exactly
+    // 1789.22375; extended price = quantity × unit price, TPC-H's rule.
+    // Rounding the double mean gave 1789.2237 here.
+    val cents = Seq(178922L, 178923L, 178922L, 178922L, 178920L, 178922L,
+      178924L, 178924L)
+    val qty = Seq(34L, 8L, 43L, 32L, 33L, 23L, 4L, 46L)
+    val lines = cents.zip(qty).map { case (c, q) =>
+      (613L, q.toDouble, BigDecimal(c * q, 2).toDouble) }
+    assert(BigDecimal(cents.sum, 2) / cents.size == BigDecimal("1789.22375"))
+    val dir = java.nio.file.Files.createTempDirectory("q190tie").toString
+    lines.toDF("l_partkey", "l_quantity", "l_extendedprice")
+      .write.parquet(s"$dir/lineitem.parquet")
+    val r = SparkEntry.queries("q190_price_dispersion")(spark, dir).head()
+    assert(r.getLong(0) == 613L && r.getLong(1) == 8L)
+    assert(r.getAs[Double]("mean_price") == 1789.2238,
+      s"mean_price ${r.getAs[Double]("mean_price")}")
+  }
 }
