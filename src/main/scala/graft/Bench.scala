@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-round benchmark: runs every declared query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line with per-query wall-clock seconds.
   *
@@ -15,20 +13,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // same DSv2 session catalog as Verify: q232's vanilla INSERT leg
-      .config("spark.sql.catalog.spark_catalog",
-        "graft.sources.GraftSparkSessionCatalog")
-      // production session shape (r17): the extensions make vanilla
-      // catalog reads columnar (ColumnarCatalogRead plan splice) and
-      // register the native functions/rules the way a deployed cluster
-      // would — bench must measure the configuration users run
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.session(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Tables.views(spark, sfDir)
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "5").toInt

@@ -96,10 +96,24 @@ object Hammer {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    import spark.implicits._
-
     val root = java.nio.file.Files.createTempDirectory("graft-hammer")
       .toString
+    // one run leaves hundreds of MB of tables: drop them once HAMMER.json
+    // holds the invariants
+    val failed =
+      try brawl(spark, root, writers, perWriter)
+      finally org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(root))
+    spark.stop()
+    if (failed > 0) sys.exit(1)
+  }
+
+  /** Runs every phase on tables under `root`, writes HAMMER.json and
+    * returns the number of broken invariants.
+    */
+  private def brawl(spark: SparkSession, root: String, writers: Int,
+      perWriter: Int): Int = {
+    import spark.implicits._
+
     val t = root + "/table"
     val DmlKey = -999L
     val OwKey = -5000L
@@ -883,7 +897,6 @@ object Hammer {
     println(s"[hammer] $json")
     java.nio.file.Files.write(java.nio.file.Paths.get("HAMMER.json"),
       json.getBytes("UTF-8"))
-    spark.stop()
-    if (failed > 0) sys.exit(1)
+    failed
   }
 }

@@ -41,4 +41,23 @@ object SparkEntry {
     */
   def oracleSql: Map[String, String] =
     all.collect { case Q(n, _, Some(sql)) => n -> sql }.toMap
+
+  /** The production session shape on `local[cpus]`, one shuffle partition
+    * per core. The DSv2 session catalog lets vanilla `spark.sql` read and
+    * write named versioned tables (q232's INSERT leg) and passes every
+    * other table through; the extensions make catalog reads columnar and
+    * register the native functions and rules, as on a deployed cluster.
+    * Verify, Bench and the test suites build from this, so correctness is
+    * checked and time is measured on the configuration users run. Callers
+    * add their own app name, warehouse and log level.
+    */
+  def session(cpus: String): SparkSession.Builder =
+    SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.catalog.spark_catalog",
+        "graft.sources.GraftSparkSessionCatalog")
+      .withExtensions(new graft.functions.GraftExtensions)
+      .config("spark.ui.enabled", "false")
 }

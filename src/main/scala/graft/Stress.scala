@@ -159,67 +159,72 @@ object Stress {
     spark.sparkContext.setLogLevel("WARN")
     val stressDir = java.nio.file.Files
       .createTempDirectory("graft-stress").toString
-    println(s"[stress] synthesizing ${mult}x corpus from $sfDir -> $stressDir")
-    val t0 = System.nanoTime()
-    synthesize(spark, sfDir, stressDir, mult)
-    println(s"[stress] synthesis took ${fm((System.nanoTime() - t0) / 1e9)}s")
-
-    val listener = new MetricsListener
-    spark.sparkContext.addSparkListener(listener)
     val failures = mutable.ArrayBuffer.empty[String]
-    // SPARK_GRAFT_STRESS_ONLY=q50_resample,... narrows while iterating —
-    // ANY registered query is allowed, so ad-hoc scale comparisons (e.g.
-    // exact vs sketch duals) run on the same synthesized corpus
-    val only = sys.env.get("SPARK_GRAFT_STRESS_ONLY").map(_.split(",").toSet)
-    val toRun = only match {
-      case Some(o) => SparkEntry.all.map(_.name).filter(o.contains)
-      case None => heavyQueries
-    }
-    val reports = toRun.map { name =>
-      listener.reset()
-      spark.catalog.clearCache()
-      val q0 = System.nanoTime()
-      val err =
-        try { SparkEntry.queries(name)(spark, stressDir)
-          .write.format("noop").mode("overwrite").save(); None }
-        catch { case e: Throwable =>
-          Some(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}") }
-      val secs = (System.nanoTime() - q0) / 1e9
-      // listener bus is async; give queued task-end events time to land
-      Thread.sleep(500)
-      val stages = listener.stages.toMap
-      val skews = stages.collect {
-        case (sid, ts) if ts.size >= minTasks =>
-          val durs = ts.map(_._1).sorted
-          val median = durs((durs.size - 1) / 2)
-          (sid, median, durs.last)
-      }.filter(_._2 >= minMedianMs)
-      val worst = skews.map { case (_, med, max) => max.toDouble / med }
-        .foldLeft(1.0)(math.max)
-      val spill = stages.values.flatten.map(_._3).sum
-      err.foreach(e => failures += s"$name failed: $e")
-      skews.foreach { case (sid, med, max) =>
-        if (max > skewRatio * med) failures +=
-          s"$name stage $sid skew: max ${max}ms > $skewRatio x median ${med}ms"
+    // the synthesized corpus runs to hundreds of MB: drop it once
+    // STRESS.json holds the results
+    try {
+      println(s"[stress] synthesizing ${mult}x corpus from $sfDir -> $stressDir")
+      val t0 = System.nanoTime()
+      synthesize(spark, sfDir, stressDir, mult)
+      println(s"[stress] synthesis took ${fm((System.nanoTime() - t0) / 1e9)}s")
+
+      val listener = new MetricsListener
+      spark.sparkContext.addSparkListener(listener)
+      // SPARK_GRAFT_STRESS_ONLY=q50_resample,... narrows while iterating —
+      // ANY registered query is allowed, so ad-hoc scale comparisons (e.g.
+      // exact vs sketch duals) run on the same synthesized corpus
+      val only = sys.env.get("SPARK_GRAFT_STRESS_ONLY").map(_.split(",").toSet)
+      val toRun = only match {
+        case Some(o) => SparkEntry.all.map(_.name).filter(o.contains)
+        case None => heavyQueries
       }
-      if (spill > spillMax) failures +=
-        s"$name spilled $spill bytes > $spillMax"
-      println(s"[stress] $name ${fm(secs)}s worstSkew=${fm(worst)} " +
-        s"diskSpill=$spill${err.map(" ERROR " + _).getOrElse("")}")
-      (name, secs, worst, spill, err)
-    }
-    spark.sparkContext.removeSparkListener(listener)
-    val json = reports.map { case (n, s, w, sp, e) =>
-      s""""$n":{"sec":${fm(s)},"worst_skew":${fm(w)},"disk_spill":$sp""" +
-        e.map(m => s""","error":"${m.replace("\"", "'")}"""").getOrElse("") + "}"
-    }.mkString(
-      s"""{"mult":$mult,"sf":"$sfDir","cpus":$cpus,""" +
-        s""""skew_ratio_max":$skewRatio,"spill_max_bytes":$spillMax,""" +
-        s""""failures":${failures.size},"queries":{""",
-      ",", "}}")
-    java.nio.file.Files.write(java.nio.file.Paths.get("STRESS.json"),
-      json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    println(json)
+      val reports = toRun.map { name =>
+        listener.reset()
+        spark.catalog.clearCache()
+        val q0 = System.nanoTime()
+        val err =
+          try { SparkEntry.queries(name)(spark, stressDir)
+            .write.format("noop").mode("overwrite").save(); None }
+          catch { case e: Throwable =>
+            Some(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}") }
+        val secs = (System.nanoTime() - q0) / 1e9
+        // listener bus is async; give queued task-end events time to land
+        Thread.sleep(500)
+        val stages = listener.stages.toMap
+        val skews = stages.collect {
+          case (sid, ts) if ts.size >= minTasks =>
+            val durs = ts.map(_._1).sorted
+            val median = durs((durs.size - 1) / 2)
+            (sid, median, durs.last)
+        }.filter(_._2 >= minMedianMs)
+        val worst = skews.map { case (_, med, max) => max.toDouble / med }
+          .foldLeft(1.0)(math.max)
+        val spill = stages.values.flatten.map(_._3).sum
+        err.foreach(e => failures += s"$name failed: $e")
+        skews.foreach { case (sid, med, max) =>
+          if (max > skewRatio * med) failures +=
+            s"$name stage $sid skew: max ${max}ms > $skewRatio x median ${med}ms"
+        }
+        if (spill > spillMax) failures +=
+          s"$name spilled $spill bytes > $spillMax"
+        println(s"[stress] $name ${fm(secs)}s worstSkew=${fm(worst)} " +
+          s"diskSpill=$spill${err.map(" ERROR " + _).getOrElse("")}")
+        (name, secs, worst, spill, err)
+      }
+      spark.sparkContext.removeSparkListener(listener)
+      val json = reports.map { case (n, s, w, sp, e) =>
+        s""""$n":{"sec":${fm(s)},"worst_skew":${fm(w)},"disk_spill":$sp""" +
+          e.map(m => s""","error":"${m.replace("\"", "'")}"""").getOrElse("") + "}"
+      }.mkString(
+        s"""{"mult":$mult,"sf":"$sfDir","cpus":$cpus,""" +
+          s""""skew_ratio_max":$skewRatio,"spill_max_bytes":$spillMax,""" +
+          s""""failures":${failures.size},"queries":{""",
+        ",", "}}")
+      java.nio.file.Files.write(java.nio.file.Paths.get("STRESS.json"),
+        json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      println(json)
+    } finally org.apache.hadoop.fs.FileUtil.fullyDelete(
+      new java.io.File(stressDir))
     if (failures.nonEmpty) {
       failures.foreach(f => System.err.println(s"[stress] TRIPWIRE: $f"))
       spark.stop()

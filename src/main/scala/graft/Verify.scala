@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,21 +9,7 @@ object Verify {
     val Array(sfDir, outDir, rest @ _*) = args: @unchecked
     val only: Option[Set[String]] = if (rest.isEmpty) None else Some(rest.toSet)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // DSv2 session catalog: vanilla spark.sql reads AND writes named
-      // versioned tables (q232's INSERT leg); transparent to every
-      // non-versioned table (DelegatingCatalogExtension passthrough)
-      .config("spark.sql.catalog.spark_catalog",
-        "graft.sources.GraftSparkSessionCatalog")
-      // production session shape (r17): columnar catalog reads via the
-      // ColumnarCatalogRead plan splice, same as Bench — correctness is
-      // verified on the configuration that gets measured and deployed
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.session(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

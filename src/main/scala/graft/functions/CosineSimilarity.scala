@@ -89,7 +89,8 @@ case class CosineSimilarity(left: Expression, right: Expression)
 }
 
 /** SparkSessionExtensions injector — the production registration path:
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or
+  * [[graft.SparkEntry.session]] (with the session catalog), a builder's
+  * `.withExtensions(new GraftExtensions)` or
   * `--conf spark.sql.extensions=graft.functions.GraftExtensions`.
   */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {

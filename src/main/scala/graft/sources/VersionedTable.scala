@@ -371,10 +371,6 @@ object VersionedTable {
       }
       None // unreachable
     }
-    val pdbg = sys.env.contains("GRAFT_REBASE_DEBUG")
-    def ptrace(msg: => String): Unit =
-      if (pdbg) System.err.println(
-        s"[publish ${Thread.currentThread().getName}] $msg")
     val preId = listCheckpointId()
     def mapOf(id: Option[Long]): Map[Long, CheckpointEntry] = id match {
       case None => Map.empty
@@ -410,8 +406,6 @@ object VersionedTable {
         body.getBytes(StandardCharsets.UTF_8)))
       throw new CommitConflictException(version,
         new java.nio.file.FileAlreadyExistsException(manifest.toString))
-    ptrace(s"CLAIMED v=$version op=$op preId=$preId horizon=$horizon " +
-      s"dir=$dataDirName")
     // post-claim verify: a compaction can fold-and-retire the slot in
     // the window between the horizon read above and the link — if the
     // newest checkpoint now binds this version to ANOTHER dir, the claim
@@ -423,7 +417,6 @@ object VersionedTable {
     val postId = listCheckpointId()
     val after = if (postId == preId) preMap else mapOf(postId)
     if (after.get(version).exists(_.dir != dataDirName)) {
-      ptrace(s"UNDO v=$version op=$op postId=$postId")
       hfs.delete(manifest, false)
       throw foldedConflict(
         s"version $version was checkpoint-folded during the claim")
@@ -3409,10 +3402,6 @@ object VersionedTable {
       mergeKey: Option[String] = None)(
       hitsAdded: Seq[String] => Boolean): Long = {
     val (hfs, root) = fs(spark, table)
-    val dbg = sys.env.contains("GRAFT_REBASE_DEBUG")
-    def trace(msg: => String): Unit =
-      if (dbg) System.err.println(
-        s"[rebase ${Thread.currentThread().getName}] $msg")
     val base = baseM.version
     val consAtBase = latestConstraintGen(hfs, root)
     val baseFiles: Set[String] = basePerScope.iterator.flatMap {
@@ -3436,8 +3425,6 @@ object VersionedTable {
         publish(spark, table, attempt + 1L, toks, batchId, op = op,
           mergeKey = mergeKey,
           delRef = baseM.del, schemaRef = baseM.schema)
-        trace(s"PUBLISHED op=$op base=$base attempt=$attempt " +
-          s"v=${attempt + 1} toks=$toks")
         return attempt + 1L
       } catch {
         case e: CommitConflictException =>
@@ -3480,15 +3467,9 @@ object VersionedTable {
           }
           (try tryRebase()
           catch { case scala.util.control.NonFatal(_) => None }) match {
-            case None =>
-              trace(s"GIVEUP op=$op base=$base attempt=$attempt " +
-                s"latest=${latestVersion(spark, table)}")
-              throw e
+            case None => throw e
             case Some((cur, curPerScope)) =>
               cowRebases.incrementAndGet()
-              trace(s"REBASE op=$op base=$base attempt=$attempt -> $cur " +
-                s"winnerToks=${curPerScope.map(x =>
-                  x._2.mkString("|")).mkString(";")}")
               attempt = cur
               attemptPerScope = curPerScope
           }

@@ -62,6 +62,16 @@ class CatalogSpec extends AnyFunSuite {
     } finally spark.stop()
   }
 
+  /** The production session shape ([[SparkEntry.session]]) with its own
+    * fresh temp warehouse, so managed tables never collide with a
+    * previous run's leftovers in the default ./spark-warehouse.
+    */
+  private def graftSession(app: String) =
+    SparkEntry.session("4").appName(app)
+      .config("spark.sql.warehouse.dir", java.nio.file.Files
+        .createTempDirectory(s"$app-wh").toString)
+      .getOrCreate()
+
   // ---- textual lakehouse SQL (GraftSql over VersionedTable) ----------
 
   private def plainSession() = org.apache.spark.sql.SparkSession.builder()
@@ -599,21 +609,9 @@ class CatalogSpec extends AnyFunSuite {
 
   test("vanilla Spark SQL reads AND writes a named versioned table (DSv2)") {
     import org.apache.spark.sql.functions._
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").appName("graft-dsv2")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.catalog.spark_catalog",
-        "graft.sources.GraftSparkSessionCatalog")
-      // production session shape: extensions + catalog together — the
-      // ColumnarCatalogRead splice makes every vanilla read columnar
-      .withExtensions(new graft.functions.GraftExtensions)
-      // own warehouse: the managed plain_t below must not collide with a
-      // previous run's leftovers in the default ./spark-warehouse
-      .config("spark.sql.warehouse.dir", java.nio.file.Files
-        .createTempDirectory("graft-dsv2-wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // production session shape: extensions + catalog together — the
+    // ColumnarCatalogRead splice makes every vanilla read columnar
+    val spark = graftSession("graft-dsv2")
     try {
       spark.sparkContext.setLogLevel("WARN")
       import graft.sources.{GraftCatalog, VersionedTable}
@@ -785,16 +783,7 @@ class CatalogSpec extends AnyFunSuite {
 
   test("vanilla Spark SQL DML: UPDATE / DELETE / MERGE on a named table") {
     import org.apache.spark.sql.functions._
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").appName("graft-vanilla-dml")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.catalog.spark_catalog",
-        "graft.sources.GraftSparkSessionCatalog")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.warehouse.dir", java.nio.file.Files
-        .createTempDirectory("graft-vdml-wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graftSession("graft-vanilla-dml")
     try {
       spark.sparkContext.setLogLevel("WARN")
       import graft.sources.{GraftCatalog, VersionedTable}
@@ -921,16 +910,7 @@ class CatalogSpec extends AnyFunSuite {
 
   test("vanilla CREATE TABLE USING graft, CTAS, format(\"graft\") I/O") {
     import org.apache.spark.sql.functions._
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").appName("graft-vanilla-create")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.catalog.spark_catalog",
-        "graft.sources.GraftSparkSessionCatalog")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.warehouse.dir", java.nio.file.Files
-        .createTempDirectory("graft-vcr-wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graftSession("graft-vanilla-create")
     try {
       spark.sparkContext.setLogLevel("WARN")
       import graft.sources.VersionedTable
@@ -999,16 +979,7 @@ class CatalogSpec extends AnyFunSuite {
   }
 
   test("vanilla ALTER TABLE and TRUNCATE TABLE on a named table") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").appName("graft-vanilla-alter")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.catalog.spark_catalog",
-        "graft.sources.GraftSparkSessionCatalog")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.warehouse.dir", java.nio.file.Files
-        .createTempDirectory("graft-valter-wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graftSession("graft-vanilla-alter")
     try {
       spark.sparkContext.setLogLevel("WARN")
       import graft.sources.{GraftCatalog, VersionedTable}
@@ -1056,16 +1027,7 @@ class CatalogSpec extends AnyFunSuite {
   }
 
   test("vanilla time travel: VERSION AS OF / TIMESTAMP AS OF on db.t") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").appName("graft-vanilla-tt")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.catalog.spark_catalog",
-        "graft.sources.GraftSparkSessionCatalog")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.warehouse.dir", java.nio.file.Files
-        .createTempDirectory("graft-vtt-wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graftSession("graft-vanilla-tt")
     try {
       spark.sparkContext.setLogLevel("WARN")
       spark.sql("CREATE DATABASE IF NOT EXISTS tt")
@@ -1100,16 +1062,7 @@ class CatalogSpec extends AnyFunSuite {
   }
 
   test("parser extension: engine grammar straight through spark.sql") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").appName("graft-parser")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.catalog.spark_catalog",
-        "graft.sources.GraftSparkSessionCatalog")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.warehouse.dir", java.nio.file.Files
-        .createTempDirectory("graft-parser-wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graftSession("graft-parser")
     try {
       spark.sparkContext.setLogLevel("WARN")
       spark.sql("CREATE DATABASE IF NOT EXISTS pp")

@@ -537,6 +537,19 @@ class GraftApiSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(labels.values.toSet == Set(0L), s"got $labels")
     assert(labels.keySet == (0L to 8L).toSet)
+    // volume axis: 4 disjoint id-offset copies of the same path keep the
+    // diameter, so the round count stays put while the edges grow 4x
+    val off = 100L
+    val copies = (0L until 4L).flatMap(c =>
+      (0L until 8L).map(i => (c * off + i, c * off + i + 1)))
+      .toDF("id_a", "id_b")
+    val fp4 = Graft.dupClustersFx(copies)
+    assert(fp4.converged)
+    assert(fp4.rounds == fp.rounds, s"rounds=${fp4.rounds} vs ${fp.rounds}")
+    val labels4 = fp4.state.collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(labels4 == (0L until 4L).flatMap(c =>
+      (0L to 8L).map(i => (c * off + i) -> c * off)).toMap, s"got $labels4")
   }
 
   test("annSrpCodes: one coded row per vector, bucket = sign pattern, dups collide") {

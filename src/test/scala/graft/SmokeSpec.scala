@@ -12,6 +12,32 @@ class SmokeSpec extends SparkSpec {
     assert(names.size >= 42, s"expected full §2B surface, got ${names.size}")
   }
 
+  // One-off measurement mains with hard-coded masters have crept into the
+  // production jar before. Plan capture lives in src/test (graft.Plans);
+  // per-op jobs, verb and read metrics come from perfbench --trace 1.
+  test("src/main ships only the driver's and the gates' mains") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root),
+      s"$root not found from ${java.nio.file.Paths.get("").toAbsolutePath}")
+    val template = ("""(?m)^( *)(?:(?:private|final|case)\s+)*""" +
+      """(?:object|class|trait)\s+(\w+)""").r
+    val main = """(?m)^( *)def\s+main\s*\(""".r
+    val app = """\bobject\s+(\w+)\s+extends\s+App\b""".r
+    val files = java.nio.file.Files.walk(root).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    val mains = files.flatMap { f =>
+      val src = java.nio.file.Files.readString(f)
+      // a main belongs to the nearest template above it that is indented
+      // less, i.e. the one enclosing it rather than a sibling
+      main.findAllMatchIn(src).map { m =>
+        template.findAllMatchIn(src.substring(0, m.start)).toSeq
+          .filter(_.group(1).length < m.group(1).length).last.group(2)
+      } ++ app.findAllMatchIn(src).map(_.group(1))
+    }.toSet
+    assert(mains == Set("Bench", "Verify", "Hammer", "Stress"))
+  }
+
   test("entry() returns rows on sf0.001") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

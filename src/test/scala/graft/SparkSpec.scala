@@ -5,22 +5,14 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (built once per JVM) — the
-  * PRODUCTION session shape, same as Verify/Bench: DSv2 session catalog
-  * + GraftExtensions (columnar catalog reads, vanilla DML, native
-  * functions), so every suite exercises the configuration users run.
+  * production session shape, [[SparkEntry.session]], same as Verify and
+  * Bench, so every suite exercises the configuration users run.
   */
 object TestSession {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
+  lazy val spark: SparkSession = SparkEntry.session("4")
     .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.catalog.spark_catalog",
-      "graft.sources.GraftSparkSessionCatalog")
-    .withExtensions(new graft.functions.GraftExtensions)
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-    .config("spark.ui.enabled", "false")
     .getOrCreate()
 }
 
