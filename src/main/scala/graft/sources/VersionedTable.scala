@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets
 import java.util.UUID
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 
 /** Transactional versioned parquet snapshots with an atomic manifest
   * commit — the minimal lakehouse transaction layer (the shape of a Delta
@@ -129,6 +129,11 @@ object VersionedTable {
   def latestVersion(spark: SparkSession, table: String): Option[Long] =
     versions(spark, table).lastOption
 
+  /** The latest committed version; throws for a table that has none. */
+  private def latestOrFail(spark: SparkSession, table: String): Long =
+    latestVersion(spark, table).getOrElse(
+      throw new IllegalArgumentException(s"$table has no committed versions"))
+
   /** Commit `df` as the table's next full snapshot; returns the new
     * version. Atomic: the snapshot is invisible until the manifest
     * create succeeds; a concurrent commit of the same version throws
@@ -141,27 +146,18 @@ object VersionedTable {
       statsCols: Seq[String] = Nil,
       bloomCols: Seq[String] = Nil,
       bloomBitsPerRow: Int = 10,
-      op: String = "commit"): Long = {
-    val next = latestVersion(spark, table).getOrElse(0L) + 1L
-    val dirName = writeSnapshot(spark, df, table, maxRecordsPerFile)
-    // CHECK constraints gate the publish: a violating snapshot never
-    // becomes a version (its dir is an orphan, vacuum-reclaimable)
-    validateConstraints(spark, table, dirName)
-    // zone-map sidecar BEFORE publish: the stats become visible in the
-    // same atomic step as the data they describe
-    applySkipping(spark, table, dirName, statsCols, bloomCols, bloomBitsPerRow)
-    publish(spark, table, next, dirName, op = op)
-    next
-  }
+      op: String = "commit"): Long =
+    commitPinned(spark, df, table, latestVersion(spark, table).getOrElse(0L),
+      op, maxRecordsPerFile, statsCols, bloomCols, bloomBitsPerRow)
 
   /** The pinned-base commit tail every derived-snapshot writer shares
     * (copy-on-write DML, [[optimize]], [[restore]], the rollup refresh):
-    * write + constraint gate + sidecar + publish at EXACTLY `base` + 1.
-    * A commit landing between the caller's base read and this publish
-    * raises [[CommitConflictException]] instead of being silently
-    * clobbered by a snapshot derived from stale data — plain [[commit]]
-    * re-selects latest+1 at publish time, which is only safe when the
-    * df does NOT derive from a previously-read version.
+    * [[writeSnapshot]] + publish at EXACTLY `base` + 1. A commit landing
+    * between the caller's base read and this publish raises
+    * [[CommitConflictException]] instead of being silently clobbered by
+    * a snapshot derived from stale data. [[commit]] pins the latest
+    * version it sees before writing, which is only safe because its df
+    * does NOT derive from a previously-read version.
     */
   private def commitPinned(spark: SparkSession, df: DataFrame, table: String,
       base: Long, op: String,
@@ -169,17 +165,16 @@ object VersionedTable {
       statsCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil,
       bloomBitsPerRow: Int = 10,
       batchId: Option[Long] = None): Long = {
-    val dirName = writeSnapshot(spark, df, table, maxRecordsPerFile)
-    validateConstraints(spark, table, dirName)
-    applySkipping(spark, table, dirName, statsCols, bloomCols, bloomBitsPerRow)
+    val dirName = writeSnapshot(spark, df, table, maxRecordsPerFile,
+      statsCols, bloomCols, bloomBitsPerRow)
     publish(spark, table, base + 1L, dirName, batchId, op = op)
     base + 1L
   }
 
-  /** Sidecar step shared by every commit path: explicit columns win;
-    * otherwise the table's persistent [[setSkippingPolicy]] applies
-    * (leniently — policy columns absent from THIS snapshot's schema are
-    * skipped, so schema evolution never breaks a merge).
+  /** Sidecar step of [[writeSnapshot]]: explicit columns win; otherwise
+    * the table's persistent [[setSkippingPolicy]] applies (leniently —
+    * policy columns absent from THIS snapshot's schema are skipped, so
+    * schema evolution never breaks a merge).
     */
   private def applySkipping(spark: SparkSession, table: String,
       dirName: String, statsCols: Seq[String], bloomCols: Seq[String],
@@ -198,11 +193,11 @@ object VersionedTable {
   }
 
   /** [[commit]] with the snapshot range-clustered on `clusterCols` first
-    * (repartitionByRange + sortWithinPartitions), so each data file covers
-    * a narrow slice of the cluster-key space — the layout that makes the
-    * zone-map sidecar actually prune (an unclustered write interleaves the
-    * key range across every file and no [min,max] test can exclude any).
-    * Stats default to the cluster columns. This is the simplified Z-order
+    * ([[clusteredLayout]]), so each data file covers a narrow slice of
+    * the cluster-key space — the layout that makes the zone-map sidecar
+    * actually prune (an unclustered write interleaves the key range
+    * across every file and no [min,max] test can exclude any). Stats
+    * default to the cluster columns. This is the simplified Z-order
     * story: one-dimensional clustering at commit, [[Sinks.zorderedParquet]]
     * when two dimensions must both prune.
     */
@@ -214,11 +209,7 @@ object VersionedTable {
       op: String = "commit"): Long = {
     require(clusterCols.nonEmpty, "commitClustered needs cluster columns")
     import org.apache.spark.sql.functions.col
-    val cols = clusterCols.map(col)
-    val ranged =
-      if (numFiles > 0) df.repartitionByRange(numFiles, cols: _*)
-      else df.repartitionByRange(cols: _*)
-    commit(spark, ranged.sortWithinPartitions(cols: _*), table,
+    commit(spark, clusteredLayout(df, numFiles, clusterCols.map(col)), table,
       maxRecordsPerFile,
       statsCols = if (statsCols.nonEmpty) statsCols else clusterCols,
       bloomCols = bloomCols, op = op)
@@ -237,24 +228,44 @@ object VersionedTable {
       dimA: String, dimB: String, numFiles: Int = 8,
       statsCols: Seq[String] = Nil,
       bloomCols: Seq[String] = Nil,
-      maxRecordsPerFile: Long = 5000000L): Long = {
-    import org.apache.spark.sql.functions.col
-    val z = df
-      .withColumn("__graft_z", graft.api.Graft.zorderKey(
-        col(dimA).cast("long"), col(dimB).cast("long")))
-      .repartitionByRange(numFiles, col("__graft_z"))
-      .sortWithinPartitions(col("__graft_z"))
-      .drop("__graft_z")
-    commit(spark, z, table, maxRecordsPerFile,
+      maxRecordsPerFile: Long = 5000000L): Long =
+    commit(spark, clusteredLayout(df, numFiles, mortonKey(dimA, dimB)), table,
+      maxRecordsPerFile,
       statsCols = if (statsCols.nonEmpty) statsCols else Seq(dimA, dimB),
       bloomCols = bloomCols)
+
+  /** The range layout of [[commitClustered]], [[commitZordered]] and a
+    * clustering [[optimize]]: `df` range-partitioned into `n` partitions
+    * on `key` and sorted within each partition on the same key. `n` <= 0
+    * leaves the partition count to the session (AQE may coalesce it).
+    */
+  private def clusteredLayout(df: DataFrame, n: Int,
+      key: Seq[Column]): DataFrame =
+    (if (n > 0) df.repartitionByRange(n, key: _*)
+     else df.repartitionByRange(key: _*)).sortWithinPartitions(key: _*)
+
+  /** The Morton key of two non-negative integral columns, the
+    * [[clusteredLayout]] key of a z-order write. */
+  private def mortonKey(dimA: String, dimB: String): Seq[Column] = {
+    import org.apache.spark.sql.functions.col
+    Seq(graft.api.Graft.zorderKey(col(dimA).cast("long"),
+      col(dimB).cast("long")))
   }
 
-  /** Step 2 of the commit protocol: write `df` to a fresh writer-unique
-    * data dir, returning its relative name for the publish step.
+  /** Step 2 of the commit protocol, the one write tail of every verb
+    * that writes a data dir: write `df` to a fresh writer-unique dir,
+    * then gate it on the CHECK constraints (a violating snapshot never
+    * becomes a version — its dir is an orphan, vacuum-reclaimable) and
+    * write its zone-map sidecar BEFORE any publish (the stats become
+    * visible in the same atomic step as the data they describe; merges
+    * inherit the skipping policy too, so a drip-merged table never loses
+    * its index on the first CDC batch).
+    * Returns the dir's relative name for the publish step.
     */
   private def writeSnapshot(spark: SparkSession, df: DataFrame,
-      table: String, maxRecordsPerFile: Long): String = {
+      table: String, maxRecordsPerFile: Long,
+      statsCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil,
+      bloomBitsPerRow: Int = 10): String = {
     val (_, root) = fs(spark, table)
     val dirName = s"data/${UUID.randomUUID}"
     // ErrorIfExists: the uuid dir is fresh by construction — Overwrite
@@ -263,6 +274,8 @@ object VersionedTable {
       .option("compression", "zstd")
       .option("maxRecordsPerFile", maxRecordsPerFile)
       .parquet(new Path(root, dirName).toString)
+    validateConstraints(spark, table, dirName)
+    applySkipping(spark, table, dirName, statsCols, bloomCols, bloomBitsPerRow)
     dirName
   }
 
@@ -833,9 +846,7 @@ object VersionedTable {
     */
   private def publishSchemaOp(spark: SparkSession, table: String,
       op: SchemaOp)(validate: DataFrame => Unit): Long = {
-    val base = latestVersion(spark, table).getOrElse(
-      throw new IllegalArgumentException(
-        s"$table has no committed versions"))
+    val base = latestOrFail(spark, table)
     validate(readVersion(spark, table, base))
     val (hfs, root) = fs(spark, table)
     val baseM = commitOf(hfs, root, table, base)
@@ -1240,11 +1251,8 @@ object VersionedTable {
       !scope.contains('!') && referenced.forall(n => !n.contains('!'))
     }
 
-  def readLatest(spark: SparkSession, table: String): DataFrame = {
-    val v = latestVersion(spark, table).getOrElse(
-      throw new IllegalArgumentException(s"$table has no committed versions"))
-    readVersion(spark, table, v)
-  }
+  def readLatest(spark: SparkSession, table: String): DataFrame =
+    readVersion(spark, table, latestOrFail(spark, table))
 
   /** What changed between two committed snapshots: (key, change ∈
     * added|removed|changed) via [[graft.api.Graft.snapshotDiff]] — the
@@ -1267,8 +1275,7 @@ object VersionedTable {
     */
   def changesSince(spark: SparkSession, table: String, fromVersion: Long,
       key: String, hashCols: Seq[String]): DataFrame = {
-    val to = latestVersion(spark, table).getOrElse(
-      throw new IllegalArgumentException(s"$table has no committed versions"))
+    val to = latestOrFail(spark, table)
     require(fromVersion <= to,
       s"fromVersion $fromVersion is ahead of latest $to")
     diffVersions(spark, table, fromVersion, to, key, hashCols)
@@ -1315,7 +1322,7 @@ object VersionedTable {
     * commit's changes — the lost-update anomaly the optimistic protocol
     * exists to prevent. Since r16 a PROVABLY-DISJOINT race resolves
     * internally instead (file-granular merges rebase like appends and
-    * DML — see [[publishCowRebasingWith]]'s guards: the winner kept
+    * DML — see [[publishCowRebasing]]'s guards: the winner kept
     * every touched file, holds none of this batch's keys in its added
     * files, and changed no sidecar/constraint/batch-token state).
     * Isolation note (Delta's WriteSerializable level, its default): the
@@ -1327,12 +1334,9 @@ object VersionedTable {
   def commitMerge(spark: SparkSession, table: String, changes: DataFrame,
       key: String, version: String, op: String,
       maxRecordsPerFile: Long = 5000000L,
-      batchId: Option[Long] = None): Long = {
-    val baseVersion = latestVersion(spark, table).getOrElse(
-      throw new IllegalArgumentException(s"$table has no committed versions"))
-    commitMergeFrom(spark, table, baseVersion, changes, key, version, op,
-      maxRecordsPerFile, batchId)
-  }
+      batchId: Option[Long] = None): Long =
+    commitMergeFrom(spark, table, latestOrFail(spark, table), changes, key,
+      version, op, maxRecordsPerFile, batchId)
 
   /** [[commitMerge]] against an explicitly pinned base version — the seam
     * that makes the optimistic-concurrency contract testable (pin a stale
@@ -1354,8 +1358,8 @@ object VersionedTable {
     * the feed on that recorded column, and a composite identity has no
     * single column to record, so multi-key-merged bases simply take the
     * full-recompute fallback (never a wrong answer).
-    */
-  /** @param probeScope r18: a caller that already probed the base for a
+    *
+    * @param probeScope r18: a caller that already probed the base for a
     *   SUPERSET of this batch's keys (mergeUpdateKeysFrom probes for the
     *   SOURCE keys to restrict the matched-row read; the change keys are
     *   a subset) passes its touched (scope, file-token) groups here, and
@@ -1422,107 +1426,75 @@ object VersionedTable {
     // see different rows — silent duplicates. (The updateWhere/
     // deleteWhere gate is root-only by construction: cond sits wholly
     // in the root Filter it builds.)
-    val granularEligible = added.isEmpty &&
-      schemaStateOf(hfs, root, baseM).isEmpty &&
-      changes.queryExecution.analyzed.find(
-        p => p.expressions.exists(!_.deterministic)).isEmpty
-    // resolve the base's token layout only when eligible; grammar-unsafe
-    // file names and tiny non-stale-pinned tables fall back to the
-    // whole-snapshot path (same reasoning as [[commitCowGranular]]: no
-    // representable kept token / the probe cannot pay for itself, and a
-    // stale-pinned base must keep granularity for the internal rebase)
-    val granularCtx = if (!granularEligible) None else {
-      val groups = groupTokensByScope(splitDirs(baseM.dataDir))
-      val perScope = enumerateTokens(hfs, root, groups)
-      val bypass =
-        perScope.iterator.map(_._3.size).sum <= granularBypassMaxFiles &&
-          latestVersion(spark, table).contains(baseVersion)
-      if (!grammarSafeNames(perScope) || bypass) None
-      else Some((groups, perScope))
+    val deterministic = changes.queryExecution.analyzed.find(
+      p => p.expressions.exists(!_.deterministic)).isEmpty
+    // granular: only the files holding a change key feed applyChanges;
+    // otherwise the whole (widened) snapshot does
+    val granular = (if (added.isEmpty && deterministic)
+      granularLayout(hfs, root, baseM) else None)
+      .filterNot(smallFreshBase(spark, table, baseVersion, _)).map { perScope =>
+      val preds = delStateOf(hfs, root, baseM)
+      val touched = probeTouched(spark, hfs, root, preds, perScope,
+        probeScope)(keyHits(_, changesCached, keys))
+      lastCowRewrite.set((touched.valuesIterator.map(_.size).sum,
+        perScope.iterator.map(_._3.size).sum))
+      (perScope, touched,
+        touchedRows(spark, hfs, root, preds, perScope, touched)
+          .getOrElse(base.limit(0))) // pure-insert batch: no file touched
     }
-    val committed: Long = if (granularCtx.isDefined) {
-        import org.apache.spark.sql.functions.col
-        val (groups, perScope) = granularCtx.get
-        val preds = delStateOf(hfs, root, baseM)
-        // probe: files holding any change key (see [[probeKeyTouchedRaw]])
-        val keyFrame = changesCached
-          .select(keys.map(org.apache.spark.sql.functions.col): _*)
-          .distinct().alias("c")
-        val probeGroups = probeScope.getOrElse(groups)
-        val touchedRaw =
-          if (probeGroups.isEmpty) Set.empty[String]
-          else probeKeyTouchedRaw(spark, hfs, root, preds,
-            probeGroups, keyFrame, keys)
-        val touched = touchedByScope(hfs, root, perScope, touchedRaw)
-        lastCowRewrite.set((touched.valuesIterator.map(_.size).sum,
-          perScope.iterator.map(_._3.size).sum))
-        val touchedRows = perScope.collect {
-          case (scope, _, _) if touched.contains(scope) =>
-            visibleScopeFrame(spark, hfs, root, preds, scope,
-              touched(scope).toSeq.sorted.map(n => s"$scope/$n"))
-        }.reduceOption(_ union _)
-          .getOrElse(base.limit(0)) // pure-insert batch: no file touched
-        val merged = graft.api.Graft.applyChanges(
-          touchedRows, changesCached, keys, version, op)
-        val d = writeSnapshot(spark, merged, table, maxRecordsPerFile)
-        validateConstraints(spark, table, d)
-        applySkipping(spark, table, d, Nil, Nil, 10)
-        changesCached.write.mode(SaveMode.Overwrite)
-          .option("compression", "zstd")
-          .parquet(new Path(new Path(table),
-            s"$d/$changesDirName").toString)
+    val input = granular.map(_._3).getOrElse(
+      added.foldLeft(base)((b, c) =>
+        b.withColumn(c, org.apache.spark.sql.functions.lit(null)
+          .cast(changes.schema(c).dataType))))
+    val d = writeSnapshot(spark,
+      graft.api.Graft.applyChanges(input, changesCached, keys, version, op),
+      table, maxRecordsPerFile)
+    // change-data-feed at write time: the change batch IS this version's
+    // row-level CDC — persist it inside the (still unpublished) data dir,
+    // so a downstream consumer reads deltas without diffing snapshots.
+    // The `_` prefix keeps it invisible to readVersion; atomic with the
+    // commit by the same argument as the stats sidecar.
+    changesCached.write.mode(SaveMode.Overwrite)
+      .option("compression", "zstd")
+      .parquet(new Path(new Path(table), s"$d/$changesDirName").toString)
+    val mergeKey = if (keys.size == 1) Some(keys.head) else None
+    val committed: Long = granular match {
+      case Some((perScope, touched, _)) =>
         // publish with the DISJOINT REBASE tail (r16): a racing commit
         // whose reference set holds none of this batch's keys resolves
         // internally — guard 2's hit test is the same null-safe key
         // semi-join the probe used (sound for rollup pre-image recovery
         // too: guards 1+2 make our keys' pre-images in the winner's
         // snapshot identical to our base's)
-        publishCowRebasingWith(spark, table, baseM, "merge",
-          perScope, touched, Some(d), batchId,
-          mergeKey = if (keys.size == 1) Some(keys.head) else None)(
-          paths => parquetOf(spark, paths: _*).alias("b")
-            .join(keyFrame,
-              keys.map(k => col(s"b.$k") <=> col(s"c.$k")).reduce(_ && _),
-              "left_semi")
+        publishCowRebasing(spark, table, baseM, "merge",
+          perScope, touched, Some(d), batchId, mergeKey)(paths =>
+          keyHits(parquetOf(spark, paths: _*), changesCached, keys)
             .limit(1).count() > 0)
-      } else {
-        val widened = added.foldLeft(base)((b, c) =>
-          b.withColumn(c, org.apache.spark.sql.functions.lit(null)
-            .cast(changes.schema(c).dataType)))
-        val merged = graft.api.Graft.applyChanges(
-          widened, changesCached, keys, version, op)
-        val d = writeSnapshot(spark, merged, table, maxRecordsPerFile)
-        validateConstraints(spark, table, d)
-        // merges inherit the table's skipping policy: a drip-merged table
-        // must not lose its index on the first CDC batch
-        applySkipping(spark, table, d, Nil, Nil, 10)
-        // change-data-feed at write time: the change batch IS this
-        // version's row-level CDC — persist it inside the (still
-        // unpublished) data dir, so a downstream consumer reads deltas
-        // without diffing snapshots. The `_` prefix keeps it invisible to
-        // readVersion; atomic with the commit by the same argument as the
-        // stats sidecar.
-        changesCached.write.mode(SaveMode.Overwrite)
-          .option("compression", "zstd")
-          .parquet(new Path(new Path(table),
-            s"$d/$changesDirName").toString)
+      case None =>
         publish(spark, table, baseVersion + 1L, d, batchId, op = "merge",
-          mergeKey = if (keys.size == 1) Some(keys.head) else None)
+          mergeKey = mergeKey)
         baseVersion + 1L
-      }
-    // streaming change feed (opt-in via enableChangeFeed): mirror the
-    // committed batch into _cdf/ for file-stream subscribers. The commit
-    // above STANDS regardless — a mirror failure here self-heals on the
-    // next merge or an explicit mirrorChangeFeed call, so it must not
-    // surface as a (false) commit failure
-    if (hfs.exists(new Path(root, cdfDirName)))
-      try mirrorChangeFeed(spark, table)
-      catch { case scala.util.control.NonFatal(_) => () }
+    }
+    mirrorIfEnabled(spark, table)
     committed
     } finally changesCached.unpersist(false)
   }
 
   private val changesDirName = "_changes"
+
+  /** The streaming change feed's tail after a merge or append commit
+    * (opt-in via [[enableChangeFeed]]): mirror the committed batch into
+    * `_cdf/` for file-stream subscribers. The commit STANDS regardless —
+    * a mirror failure self-heals on the next commit or an explicit
+    * [[mirrorChangeFeed]] call, so it must not surface as a (false)
+    * commit failure.
+    */
+  private def mirrorIfEnabled(spark: SparkSession, table: String): Unit = {
+    val (hfs, root) = fs(spark, table)
+    if (hfs.exists(new Path(root, cdfDirName)))
+      try mirrorChangeFeed(spark, table)
+      catch { case scala.util.control.NonFatal(_) => () }
+  }
 
   /** The exact change batch `version` was committed with (columns as the
     * merge caller supplied — for [[mergeInto]]/[[mergeBatchIfNew]] that is
@@ -1589,7 +1561,7 @@ object VersionedTable {
     if (!hfs.exists(p)) throw new IllegalArgumentException(
       s"version $version of $table has no change log (full-snapshot " +
         "commit) — use diffVersions for snapshot-level CDC")
-    parquetOf(spark, p.toString)
+    parquetOf(spark, sidecarFiles(hfs, p): _*)
   }
 
   /** BOUNDED CDC range read (r15): the change batches of every version
@@ -1851,10 +1823,8 @@ object VersionedTable {
     val changes = source
       .withColumn("__op", when(deleteWhen, "d").otherwise("u"))
       .withColumn("__ver", lit(1L))
-    val baseVersion = latestVersion(spark, table).getOrElse(
-      throw new IllegalArgumentException(s"$table has no committed versions"))
-    commitMergeFromKeys(spark, table, baseVersion, changes, keys,
-      version = "__ver", op = "__op",
+    commitMergeFromKeys(spark, table, latestOrFail(spark, table), changes,
+      keys, version = "__ver", op = "__op",
       maxRecordsPerFile = maxRecordsPerFile, batchId = batchId)
   }
 
@@ -1890,10 +1860,7 @@ object VersionedTable {
       batchId: Option[Long] = None,
       updateWhen: org.apache.spark.sql.Column =
         org.apache.spark.sql.functions.lit(true)): Long =
-    mergeUpdateKeysFrom(spark, table,
-      latestVersion(spark, table).getOrElse(
-        throw new IllegalArgumentException(
-          s"$table has no committed versions")),
+    mergeUpdateKeysFrom(spark, table, latestOrFail(spark, table),
       source, keys, set, maxRecordsPerFile, batchId, updateWhen)
 
   /** [[mergeUpdateKeys]] against an explicitly pinned base — the
@@ -1948,26 +1915,17 @@ object VersionedTable {
     // batch — the merge's own probe, applyChanges, the CDC write, the
     // rebase guard — then opens only those files
     val (restricted, sourceProbeScope) =
-      if (schemaStateOf(hfs, root, baseM).nonEmpty) (cur, None)
-      else {
-        val preds = delStateOf(hfs, root, baseM)
-        val groups = groupTokensByScope(splitDirs(baseM.dataDir))
-        val keyFrame = source
-          .select(keys.map(col): _*).distinct().alias("c")
-        val touchedRaw = probeKeyTouchedRaw(spark, hfs, root, preds,
-          groups, keyFrame, keys)
-        val touched = touchedByScope(hfs, root,
-          enumerateTokens(hfs, root, groups), touchedRaw)
-        // r18: the touched set doubles as the NEXT probe's scope — the
-        // commit tail re-probes for the (subset) change keys, and files
-        // outside this superset cannot hold one (see commitMergeFromKeys)
-        val scope = touched.toSeq.map { case (sc, names) =>
-          (sc, names.toSeq.sorted.map(n => s"$sc/$n"))
-        }
-        if (touched.isEmpty) (cur.limit(0), Some(Nil: Seq[(String, Seq[String])]))
-        else (scope.map { case (sc, toks) =>
-          visibleScopeFrame(spark, hfs, root, preds, sc, toks)
-        }.reduce(_ union _), Some(scope))
+      granularLayout(hfs, root, baseM) match {
+        case None => (cur, None)
+        case Some(perScope) =>
+          val preds = delStateOf(hfs, root, baseM)
+          val touched = probeTouched(spark, hfs, root, preds, perScope)(
+            keyHits(_, source, keys))
+          // r18: the touched set doubles as the NEXT probe's scope — the
+          // commit tail re-probes for the (subset) change keys, and files
+          // outside this superset cannot hold one (see commitMergeFromKeys)
+          (touchedRows(spark, hfs, root, preds, perScope, touched)
+            .getOrElse(cur.limit(0)), Some(touchedGroups(perScope, touched)))
       }
     val t = restricted.alias("t")
     val s = source.alias("s")
@@ -2060,20 +2018,25 @@ object VersionedTable {
     * compact the accreted dirs.
     */
   def appendBatchIfNew(spark: SparkSession, table: String,
-      source: DataFrame, batchId: Long): Option[Long] = {
+      source: DataFrame, batchId: Long): Option[Long] =
+    streamBatchIfNew(spark, table, batchId, source)(base =>
+      appendFrom(spark, table, base, source, 5000000L,
+        batchId = Some(batchId)))
+
+  /** The exactly-once frame of the three stream sinks: a batch whose
+    * token the latest commit already carries is a replay (None); the
+    * first batch on an empty table commits `bootstrap` as v1 (op
+    * "stream"); any later batch runs `verb` against the latest version.
+    */
+  private def streamBatchIfNew(spark: SparkSession, table: String,
+      batchId: Long, bootstrap: => DataFrame)(
+      verb: Long => Long): Option[Long] =
     if (lastBatchId(spark, table).contains(batchId)) None
-    else latestVersion(spark, table) match {
-      case None =>
-        val dirName = writeSnapshot(spark, source, table, 5000000L)
-        validateConstraints(spark, table, dirName)
-        applySkipping(spark, table, dirName, Nil, Nil, 10)
-        publish(spark, table, 1L, dirName, Some(batchId), op = "stream")
-        Some(1L)
-      case Some(base) =>
-        Some(appendFrom(spark, table, base, source, 5000000L,
-          batchId = Some(batchId)))
-    }
-  }
+    else Some(latestVersion(spark, table) match {
+      case None => commitPinned(spark, bootstrap, table, 0L, op = "stream",
+        batchId = Some(batchId))
+      case Some(base) => verb(base)
+    })
 
   /** [[append]] against an explicitly pinned base — the concurrency test
     * seam, mirroring [[deleteWhereFrom]].
@@ -2098,9 +2061,6 @@ object VersionedTable {
     val aligned = rows.select(baseDf.columns.map(c =>
       col(c).cast(baseDf.schema(c).dataType).as(c)): _*)
     val dirName = writeSnapshot(spark, aligned, table, maxRecordsPerFile)
-    validateConstraints(spark, table, dirName)
-    applySkipping(spark, table, dirName, Nil, Nil, 10)
-    val (hfs, root) = fs(spark, table)
     // deferred deletes travel with the append (by sidecar NAME — the
     // sidecar is immutable): the new dir is outside every recorded
     // predicate's scope, so appended rows are never retro-deleted, while
@@ -2117,12 +2077,10 @@ object VersionedTable {
     // latest and the same written dir re-publishes there (guards and
     // soundness argument on [[publishAppendRebasing]]).
     val v = publishAppendRebasing(spark, table, base, dirName, batchId)
-    // feed-enabled tables mirror the appended dir as upsert rows (same
-    // self-healing tail as commitMerge's — the mirror is one O(batch)
-    // copy, paid only when the table opted into streaming CDC)
-    if (hfs.exists(new Path(root, cdfDirName)))
-      try mirrorChangeFeed(spark, table)
-      catch { case scala.util.control.NonFatal(_) => () }
+    // feed-enabled tables mirror the appended dir as upsert rows (the
+    // mirror is one O(batch) copy, paid only when the table opted into
+    // streaming CDC)
+    mirrorIfEnabled(spark, table)
     v
   }
 
@@ -2220,20 +2178,10 @@ object VersionedTable {
   def mergeBatchIfNew(spark: SparkSession, table: String, source: DataFrame,
       key: String, batchId: Long,
       deleteWhen: org.apache.spark.sql.Column =
-        org.apache.spark.sql.functions.lit(false)): Option[Long] = {
-    if (lastBatchId(spark, table).contains(batchId)) None
-    else latestVersion(spark, table) match {
-      case None =>
-        val dirName = writeSnapshot(spark, source, table, 5000000L)
-        validateConstraints(spark, table, dirName)
-        applySkipping(spark, table, dirName, Nil, Nil, 10)
-        publish(spark, table, 1L, dirName, Some(batchId), op = "stream")
-        Some(1L)
-      case Some(_) =>
-        Some(mergeInto(spark, table, source, key, deleteWhen,
-          batchId = Some(batchId)))
-    }
-  }
+        org.apache.spark.sql.functions.lit(false)): Option[Long] =
+    streamBatchIfNew(spark, table, batchId, source)(_ =>
+      mergeInto(spark, table, source, key, deleteWhen,
+        batchId = Some(batchId)))
 
   /** Exactly-once CDC-REPLICA micro-batch — the apply side of the
     * change-feed subscription ([[graft.streaming.Streams
@@ -2252,25 +2200,17 @@ object VersionedTable {
   def replicaBatchIfNew(spark: SparkSession, table: String,
       changes: DataFrame, key: String, version: String, op: String,
       batchId: Long): Option[Long] = {
-    if (lastBatchId(spark, table).contains(batchId)) None
-    else latestVersion(spark, table) match {
-      case None =>
-        val dataFields = changes.schema.fields
-          .filterNot(f => f.name == version || f.name == op)
-        val empty = spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(dataFields))
-        val net = graft.api.Graft.applyChanges(
-          empty, changes, key, version, op)
-        val dirName = writeSnapshot(spark, net, table, 5000000L)
-        validateConstraints(spark, table, dirName)
-        applySkipping(spark, table, dirName, Nil, Nil, 10)
-        publish(spark, table, 1L, dirName, Some(batchId), op = "stream")
-        Some(1L)
-      case Some(_) =>
-        Some(commitMerge(spark, table, changes, key, version, op,
-          batchId = Some(batchId)))
+    def net: DataFrame = {
+      val dataFields = changes.schema.fields
+        .filterNot(f => f.name == version || f.name == op)
+      val empty = spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        org.apache.spark.sql.types.StructType(dataFields))
+      graft.api.Graft.applyChanges(empty, changes, key, version, op)
     }
+    streamBatchIfNew(spark, table, batchId, net)(_ =>
+      commitMerge(spark, table, changes, key, version, op,
+        batchId = Some(batchId)))
   }
 
   /** Reclaim storage from data dirs no manifest references — the orphans
@@ -2757,10 +2697,9 @@ object VersionedTable {
     * by old data.
     */
   def restore(spark: SparkSession, table: String, version: Long): Long = {
-    val base = latestVersion(spark, table).getOrElse(
-      throw new IllegalArgumentException(s"$table has no committed versions"))
-    val snap = readVersion(spark, table, version)
-    commitPinned(spark, snap, table, base, op = "restore")
+    val base = latestOrFail(spark, table)
+    commitPinned(spark, readVersion(spark, table, version), table, base,
+      op = "restore")
   }
 
   /** Physically EXPIRE every version but the newest `keepLast`: after
@@ -2917,9 +2856,7 @@ object VersionedTable {
     require(latestVersion(spark, targetTable).isEmpty,
       s"$targetTable already has committed versions — clone only " +
         "bootstraps")
-    val v = version.getOrElse(latestVersion(spark, sourceTable).getOrElse(
-      throw new IllegalArgumentException(
-        s"$sourceTable has no committed versions")))
+    val v = version.getOrElse(latestOrFail(spark, sourceTable))
     val dirs = dataPathsOf(spark, sourceTable, v).map(_.toString)
     require(dirs.forall(d => !d.contains(";") && !d.contains("\"")),
       s"source data paths must not contain ';' or '\"'")
@@ -3068,8 +3005,7 @@ object VersionedTable {
   def deleteWhere(spark: SparkSession, table: String,
       cond: org.apache.spark.sql.Column,
       maxRecordsPerFile: Long = 5000000L): Long =
-    deleteWhereFrom(spark, table, latestVersion(spark, table).getOrElse(
-      throw new IllegalArgumentException(s"$table has no committed versions")),
+    deleteWhereFrom(spark, table, latestOrFail(spark, table),
       cond, maxRecordsPerFile)
 
   /** [[deleteWhere]] against an explicitly pinned base — the seam that
@@ -3100,18 +3036,31 @@ object VersionedTable {
     }
 
   /** Tables referencing at most this many data files take the
-    * whole-snapshot path for non-stale-pinned granular verbs: the probe
-    * pass (an extra scan job per verb) cannot pay for itself when the
-    * full rewrite is this small — the r16 bench showed a flat ~1 s/verb
-    * probe tax on fixture-scale lifecycle chains. Kept strictly below
-    * the smallest fixture that PINS granular behavior (SinksSpec's
-    * rebase law commits nominally-4 files but range sampling can merge
-    * a group — 3 can materialize; the hammer fleet seeds 8; q246 lays
-    * out 8), and the bypass never applies to a stale-pinned base (see
-    * [[commitCowGranular]] — granularity is what powers internal
-    * rebase).
+    * whole-snapshot path for non-stale-pinned granular DML and merges:
+    * the probe pass (an extra scan job per verb) cannot pay for itself
+    * when the full rewrite is this small — the r16 bench showed a flat
+    * ~1 s/verb probe tax on fixture-scale lifecycle chains; without it
+    * `lakehouse_churn`'s ~2-file UPDATE/DELETE run 10 jobs instead of 8,
+    * and Hammer's 1-file phase-1 merges starve under its 10 Hz OPTIMIZE.
+    * Kept strictly below the smallest fixture that PINS granular
+    * behavior (SinksSpec's rebase law commits nominally-4 files but range
+    * sampling can merge a group — 3 can materialize; the hammer fleet
+    * seeds 8; q246 lays out 8), and the bypass never
+    * applies to a stale-pinned base — granularity is what powers the
+    * internal rebase (a whole-snapshot verb dropped onto a winner it
+    * never read can only conflict honestly).
     */
   private[graft] val granularBypassMaxFiles = 2
+
+  /** The small-table bypass of [[commitCowGranular]] and
+    * [[commitMergeFromKeys]] (see [[granularBypassMaxFiles]]): true when
+    * `base` is still the latest version and its layout references at
+    * most that many files.
+    */
+  private def smallFreshBase(spark: SparkSession, table: String, base: Long,
+      perScope: Seq[(String, Seq[String], Seq[String])]): Boolean =
+    perScope.iterator.map(_._3.size).sum <= granularBypassMaxFiles &&
+      latestVersion(spark, table).contains(base)
 
   /** FILE-GRANULAR copy-on-write — the shared tail of [[deleteWhere]] and
     * [[updateWhere]]. Instead of rewriting the whole snapshot (O(table):
@@ -3138,11 +3087,10 @@ object VersionedTable {
     * Deferred-delete predicates PROPAGATE by sidecar name (their scoped
     * dirs are all kept or subset — the fresh dir is outside every
     * recorded scope, and the rewritten rows were read through the keep
-    * filters, so nothing double-applies or resurrects). An ACTIVE SCHEMA
-    * MAPPING falls back to the whole-snapshot rewrite, preserving the
-    * documented "CoW verbs materialize the mapping" contract (and the
-    * probe's physical-name binding). A NONDETERMINISTIC predicate also
-    * falls back: file-granular evaluates `cond` twice (probe + rewrite),
+    * filters, so nothing double-applies or resurrects). A base that
+    * [[granularLayout]] refuses takes the whole-snapshot rewrite, and so
+    * do a small fresh base ([[smallFreshBase]]) and a NONDETERMINISTIC
+    * predicate: file-granular evaluates `cond` twice (probe + rewrite),
     * which is only sound when both passes select the same rows.
     *
     * A no-match verb publishes a metadata-only version referencing the
@@ -3153,82 +3101,87 @@ object VersionedTable {
       base: Long, cond: org.apache.spark.sql.Column, op: String,
       maxRecordsPerFile: Long)(
       transform: DataFrame => DataFrame): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit}
+    import org.apache.spark.sql.functions.{coalesce, lit}
     val (hfs, root) = fs(spark, table)
     val baseM = commitOf(hfs, root, table, base)
     val cur = snapshotOf(spark, hfs, root, baseM)
-    val deterministic = cur.where(coalesce(cond, lit(false)))
-      .queryExecution.analyzed.expressions.forall(_.deterministic)
-    if (schemaStateOf(hfs, root, baseM).nonEmpty || !deterministic)
-      // whole-snapshot fallback: materializes the mapping / evaluates a
-      // nondeterministic predicate exactly once, as before
-      return commitPinned(spark, transform(cur), table, base, op = op,
-        maxRecordsPerFile = maxRecordsPerFile)
+    val hit = coalesce(cond, lit(false))
+    val deterministic =
+      cur.where(hit).queryExecution.analyzed.expressions.forall(_.deterministic)
+    val perScope =
+      (if (deterministic) granularLayout(hfs, root, baseM) else None)
+        .filterNot(smallFreshBase(spark, table, base, _)) match {
+        case Some(layout) => layout
+        case None =>
+          // whole-snapshot fallback: materializes the mapping / evaluates
+          // a nondeterministic predicate exactly once / skips the probe
+          // on a small fresh table
+          return commitPinned(spark, transform(cur), table, base, op = op,
+            maxRecordsPerFile = maxRecordsPerFile)
+      }
     val preds = delStateOf(hfs, root, baseM)
-    val groups = groupTokensByScope(splitDirs(baseM.dataDir))
-    val perScope = enumerateTokens(hfs, root, groups)
-    // grammar-unsafe file names ('!' in an adopted foreign dir) have no
-    // representable kept-token form — whole-snapshot, like a mapping
-    if (!grammarSafeNames(perScope))
-      return commitPinned(spark, transform(cur), table, base, op = op,
-        maxRecordsPerFile = maxRecordsPerFile)
-    // small-table probe bypass: on a table this small the probe pass is
-    // pure overhead (rewriting everything costs less than the extra scan
-    // job), so take the whole-snapshot path — EXCEPT when the caller
-    // pinned a STALE base, because granularity is also what powers the
-    // internal disjoint rebase (a whole-snapshot verb dropped onto a
-    // winner it never read can only conflict honestly). Non-stale tiny
-    // tables revert to exactly the pre-granular (r15) behavior: a racing
-    // commit surfaces as CommitConflictException for the caller's retry.
-    if (perScope.iterator.map(_._3.size).sum <= granularBypassMaxFiles &&
-        latestVersion(spark, table).contains(base))
-      return commitPinned(spark, transform(cur), table, base, op = op,
-        maxRecordsPerFile = maxRecordsPerFile)
     // 1. probe: distinct touched files, driver-side — bounded by the
     // files the rewrite will open anyway (the file-index memory class)
-    val probe = groups.map { case (scope, toks) =>
-      visibleScopeFrame(spark, hfs, root, preds, scope, toks)
-        .where(coalesce(cond, lit(false)))
-        .select(col("_metadata.file_path").as("__graft_file"))
-    }.reduce(_ union _)
-    val touchedRaw = probe.distinct().collect()
-      .map(r => schemeFreePath(r.getString(0))).toSet
-    val touched = touchedByScope(hfs, root, perScope, touchedRaw)
-    val totalFiles = perScope.iterator.map(_._3.size).sum
-    val touchedCount = touched.valuesIterator.map(_.size).sum
-    lastCowRewrite.set((touchedCount, totalFiles))
-    val newDir: Option[String] =
-      if (touchedCount == 0) None // nothing matches: zero bytes moved
-      else {
-        // 2. rewrite ONLY the touched files (visible rows → transform)
-        val touchedRows = perScope.collect {
-          case (scope, _, _) if touched.contains(scope) =>
-            visibleScopeFrame(spark, hfs, root, preds, scope,
-              touched(scope).toSeq.sorted.map(n => s"$scope/$n"))
-        }.reduce(_ union _)
-        val dirName = writeSnapshot(spark, transform(touchedRows), table,
-          maxRecordsPerFile)
-        validateConstraints(spark, table, dirName)
-        applySkipping(spark, table, dirName, Nil, Nil, 10)
-        Some(dirName)
-      }
+    val touched =
+      probeTouched(spark, hfs, root, preds, perScope)(_.where(hit))
+    lastCowRewrite.set((touched.valuesIterator.map(_.size).sum,
+      perScope.iterator.map(_._3.size).sum))
+    // 2. rewrite ONLY the touched files (visible rows → transform); no
+    // match writes nothing: zero bytes moved
+    val newDir = touchedRows(spark, hfs, root, preds, perScope, touched)
+      .map(rows => writeSnapshot(spark, transform(rows), table,
+        maxRecordsPerFile))
     // 3. reference the rest in place (the fresh dir goes LAST — the
     // "dir this version itself wrote" convention), publishing with the
     // DISJOINT REBASE tail: a racing commit whose reference set provably
     // does not intersect this verb's touched rows resolves internally
-    publishCowRebasing(spark, table, baseM, cond, op, perScope, touched,
-      newDir)
+    publishCowRebasing(spark, table, baseM, op, perScope, touched, newDir)(
+      paths => parquetOf(spark, paths: _*).where(hit).limit(1).count() > 0)
   }
 
-  /** Enumerate a token list per scope: (scope, its tokens, the file
+  /** The base's per-scope token layout when a file-granular verb may run
+    * on it, or None for the whole-snapshot path: under an ACTIVE SCHEMA
+    * MAPPING (the whole-snapshot rewrite keeps the documented "CoW verbs
+    * materialize the mapping" contract, and the probes bind physical
+    * names), or when a referenced name is grammar-unsafe (see
+    * [[grammarSafeNames]]). The one eligibility decision of every
+    * granular verb; each adds only its own fallbacks (nondeterminism,
+    * widening, and for DML and merges the small-table bypass).
+    */
+  private def granularLayout(hfs: FileSystem, root: Path, baseM: Manifest)
+      : Option[Seq[(String, Seq[String], Seq[String])]] =
+    if (schemaStateOf(hfs, root, baseM).nonEmpty) None
+    else Some(layoutOf(hfs, root, baseM)).filter(grammarSafeNames)
+
+  /** The touched files as (scope, kept-file tokens) groups, in layout
+    * order.
+    */
+  private def touchedGroups(
+      perScope: Seq[(String, Seq[String], Seq[String])],
+      touched: Map[String, Set[String]]): Seq[(String, Seq[String])] =
+    perScope.collect { case (scope, _, _) if touched.contains(scope) =>
+      scope -> touched(scope).toSeq.sorted.map(n => s"$scope/$n")
+    }
+
+  /** The VISIBLE rows of the touched files — the input of every granular
+    * rewrite; None when no file is touched.
+    */
+  private def touchedRows(spark: SparkSession, hfs: FileSystem, root: Path,
+      preds: Seq[DelPred],
+      perScope: Seq[(String, Seq[String], Seq[String])],
+      touched: Map[String, Set[String]]): Option[DataFrame] =
+    touchedGroups(perScope, touched).map { case (scope, toks) =>
+      visibleScopeFrame(spark, hfs, root, preds, scope, toks)
+    }.reduceOption(_ union _)
+
+  /** Version `m`'s token layout per scope: (scope, its tokens, the file
     * names the version references there) — a listing for whole-dir
     * tokens (committed dirs are immutable, so the listing is stable),
     * the token names themselves for kept-file tokens.
     */
-  private def enumerateTokens(hfs: FileSystem, root: Path,
-      groups: Seq[(String, Seq[String])])
+  private def layoutOf(hfs: FileSystem, root: Path, m: Manifest)
       : Seq[(String, Seq[String], Seq[String])] =
-    groups.map { case (scope, toks) =>
+    groupTokensByScope(splitDirs(m.dataDir)).map { case (scope, toks) =>
       (scope, toks,
         groupRestriction(hfs, root, scope, toks)
           .getOrElse(listParquet(hfs, root, scope)))
@@ -3278,6 +3231,29 @@ object VersionedTable {
       new ParquetToSparkSchemaConverter(spark.sessionState.conf))
   }
 
+  /** Every file `perScope` references with its byte length, one listing
+    * per scope: (scope, file name, bytes).
+    */
+  private def referencedSizes(hfs: FileSystem, root: Path,
+      perScope: Seq[(String, Seq[String], Seq[String])])
+      : Seq[(String, String, Long)] =
+    perScope.flatMap { case (scope, _, referenced) =>
+      val lens = hfs.listStatus(new Path(root, scope)).iterator
+        .map(st => st.getPath.getName -> st.getLen).toMap
+      referenced.map(n => (scope, n, lens.getOrElse(n, 0L)))
+    }
+
+  /** The visible part files of a `_`-prefixed sidecar dir (`_stats`,
+    * `_changes`), listed once on the driver. Reading the files instead of
+    * the dir keeps Spark from dropping the `_` root by name, warning
+    * "All paths were ignored", and then reading it anyway.
+    */
+  private def sidecarFiles(hfs: FileSystem, dir: Path): Seq[String] =
+    hfs.listStatus(dir).iterator.map(_.getPath)
+      .filterNot { p => val n = p.getName
+        n.startsWith("_") || n.startsWith(".") }
+      .map(_.toString).toSeq.sorted
+
   /** The shared snapshot-read entry: parquet over `paths` (files or dirs
     * sharing one schema) typed by the first path's [[footerSchema]].
     */
@@ -3296,41 +3272,45 @@ object VersionedTable {
     delKeepFilter(preds, scope).map(df.where).getOrElse(df)
   }
 
-  /** Probe: the files of `groups` holding any `keyFrame` key — NULL-
-    * SAFE equality (applyChanges groups null keys like values, so a
-    * null-key change must touch null-key base rows too) — as scheme-
-    * free paths. The metadata column is stamped BEFORE the semi-join:
-    * `_metadata` only resolves directly over a file-source relation,
-    * never through a join above it. `keyFrame` must be aliased "c".
+  /** Probe: the referenced files of `perScope` holding a row `hits`
+    * keeps, as scope → file NAMES (empty scopes dropped). One
+    * column-pruned scan per scope of `only` (default: the whole layout),
+    * distinct on the driver, mapped back onto the layout. The metadata
+    * column is stamped BEFORE `hits`: `_metadata` only resolves directly
+    * over a file-source relation, never through a join above it.
     */
-  private def probeKeyTouchedRaw(spark: SparkSession, hfs: FileSystem,
-      root: Path, preds: Seq[DelPred], groups: Seq[(String, Seq[String])],
-      keyFrame: DataFrame, keys: Seq[String]): Set[String] = {
+  private def probeTouched(spark: SparkSession, hfs: FileSystem, root: Path,
+      preds: Seq[DelPred], perScope: Seq[(String, Seq[String], Seq[String])],
+      only: Option[Seq[(String, Seq[String])]] = None)(
+      hits: DataFrame => DataFrame): Map[String, Set[String]] = {
     import org.apache.spark.sql.functions.col
-    groups.map { case (scope, toks) =>
-      visibleScopeFrame(spark, hfs, root, preds, scope, toks)
-        .withColumn("__graft_file", col("_metadata.file_path"))
-        .alias("b")
-        .join(keyFrame,
-          keys.map(k => col(s"b.$k") <=> col(s"c.$k")).reduce(_ && _),
-          "left_semi")
+    val groups = only.getOrElse(perScope.map(g => (g._1, g._2)))
+    if (groups.isEmpty) return Map.empty
+    val raw = groups.map { case (scope, toks) =>
+      hits(visibleScopeFrame(spark, hfs, root, preds, scope, toks)
+        .withColumn("__graft_file", col("_metadata.file_path")))
         .select(col("__graft_file"))
     }.reduce(_ union _).distinct()
       .collect().map(r => schemeFreePath(r.getString(0))).toSet
-  }
-
-  /** Map probed raw paths back onto the token layout: scope → the
-    * referenced file NAMES the probe touched (empty scopes dropped).
-    */
-  private def touchedByScope(hfs: FileSystem, root: Path,
-      perScope: Seq[(String, Seq[String], Seq[String])],
-      touchedRaw: Set[String]): Map[String, Set[String]] =
     perScope.iterator.map { case (scope, _, referenced) =>
       val qualScope = schemeFreePath(
         hfs.makeQualified(new Path(root, scope)).toString)
-      scope -> referenced.filter(n =>
-        touchedRaw.contains(s"$qualScope/$n")).toSet
+      scope -> referenced.filter(n => raw.contains(s"$qualScope/$n")).toSet
     }.filter(_._2.nonEmpty).toMap
+  }
+
+  /** The rows of `df` holding any key tuple of `batch` — NULL-SAFE
+    * equality (applyChanges groups null keys like values, so a null-key
+    * change must touch null-key base rows too): the merge probe's hit
+    * test, and its rebase guard's.
+    */
+  private def keyHits(df: DataFrame, batch: DataFrame,
+      keys: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    df.alias("b").join(batch.select(keys.map(col): _*).distinct().alias("c"),
+      keys.map(k => col(s"b.$k") <=> col(s"c.$k")).reduce(_ && _),
+      "left_semi")
+  }
 
   /** Process-wide count of internally-resolved CoW conflicts — the
     * [[publishAppendRebasing]] counter's DML sibling; observability for
@@ -3371,29 +3351,17 @@ object VersionedTable {
     * second rewrite. Any guard failing re-raises the conflict for the
     * honest re-derive. Two updaters on disjoint predicate regions of a
     * clustered table therefore both land first-try (hammer phase 7).
+    *
+    * `hitsAdded` is guard 2's hit test: "does any row of these
+    * winner-added files match this verb?" — a predicate scan for
+    * UPDATE/DELETE, a key semi-join for MERGE, never for compaction.
+    * `batchId`/`mergeKey` pass through to the publish (the merge path's
+    * provenance); a present batch token ALSO guards the rebase: if the
+    * new latest already carries it, the exactly-once check must re-run
+    * against what actually won (conflict to caller, the
+    * [[publishAppendRebasing]] rule).
     */
   private def publishCowRebasing(spark: SparkSession, table: String,
-      baseM: Manifest, cond: org.apache.spark.sql.Column, op: String,
-      basePerScope: Seq[(String, Seq[String], Seq[String])],
-      touched: Map[String, Set[String]],
-      newDir: Option[String]): Long = {
-    import org.apache.spark.sql.functions.{coalesce, lit}
-    publishCowRebasingWith(spark, table, baseM, op, basePerScope, touched,
-      newDir)(paths =>
-      parquetOf(spark, paths: _*)
-        .where(coalesce(cond, lit(false))).limit(1).count() > 0)
-  }
-
-  /** [[publishCowRebasing]] with the guard-2 hit test abstracted:
-    * `hitsAdded` answers "does any row of these winner-added files match
-    * this verb?" — a predicate scan for UPDATE/DELETE, a key semi-join
-    * for MERGE. `batchId`/`mergeKey` pass through to the publish (the
-    * merge path's provenance); a present batch token ALSO guards the
-    * rebase: if the new latest already carries it, the exactly-once
-    * check must re-run against what actually won (conflict to caller,
-    * the [[publishAppendRebasing]] rule).
-    */
-  private def publishCowRebasingWith(spark: SparkSession, table: String,
       baseM: Manifest, op: String,
       basePerScope: Seq[(String, Seq[String], Seq[String])],
       touched: Map[String, Set[String]],
@@ -3443,8 +3411,7 @@ object VersionedTable {
             if (curM.del != baseM.del || curM.schema != baseM.schema ||
                 latestConstraintGen(hfs, root) != consAtBase)
               return None
-            val curPerScope = enumerateTokens(hfs, root,
-              groupTokensByScope(splitDirs(curM.dataDir)))
+            val curPerScope = layoutOf(hfs, root, curM)
             val curFilesByScope = curPerScope.iterator.map {
               case (scope, _, referenced) => scope -> referenced.toSet
             }.toMap
@@ -3522,10 +3489,7 @@ object VersionedTable {
     */
   def deleteWhereLazy(spark: SparkSession, table: String,
       predicate: String): Long =
-    deleteWhereLazyFrom(spark, table,
-      latestVersion(spark, table).getOrElse(
-        throw new IllegalArgumentException(
-          s"$table has no committed versions")), predicate)
+    deleteWhereLazyFrom(spark, table, latestOrFail(spark, table), predicate)
 
   /** [[deleteWhereLazy]] against a pinned base — the concurrency seam;
     * publishes at exactly base+1, so a racing commit conflicts instead
@@ -3561,14 +3525,10 @@ object VersionedTable {
     val ref = writeDelSidecar(spark, table, state)
     publish(spark, table, base + 1L, baseDirs, op = "lazydelete",
       delRef = Some(ref))
-    // feed-enabled tables mirror the synthesized delete rows now (same
-    // self-healing tail as commitMerge's) — this is the one place a
-    // deferred delete pays an enumeration scan in the WRITE path, and
-    // only because the table opted into streaming CDC; the commit above
-    // stands regardless
-    if (hfs.exists(new Path(root, cdfDirName)))
-      try mirrorChangeFeed(spark, table)
-      catch { case scala.util.control.NonFatal(_) => () }
+    // feed-enabled tables mirror the synthesized delete rows now — this
+    // is the one place a deferred delete pays an enumeration scan in the
+    // WRITE path, and only because the table opted into streaming CDC
+    mirrorIfEnabled(spark, table)
     base + 1L
   }
 
@@ -3584,8 +3544,7 @@ object VersionedTable {
       maxRecordsPerFile: Long = 5000000L): Long = {
     import org.apache.spark.sql.functions.{coalesce, col, lit, when}
     require(set.nonEmpty, "updateWhere needs at least one assignment")
-    val base = latestVersion(spark, table).getOrElse(
-      throw new IllegalArgumentException(s"$table has no committed versions"))
+    val base = latestOrFail(spark, table)
     val cur = readVersion(spark, table, base)
     val missing = set.keys.filterNot(cur.columns.contains)
     require(missing.isEmpty,
@@ -3634,8 +3593,7 @@ object VersionedTable {
       cond: org.apache.spark.sql.Column, rows: DataFrame,
       maxRecordsPerFile: Long = 5000000L): Long = {
     import org.apache.spark.sql.functions.{coalesce, col, lit, not}
-    val base = latestVersion(spark, table).getOrElse(
-      throw new IllegalArgumentException(s"$table has no committed versions"))
+    val base = latestOrFail(spark, table)
     val cur = readVersion(spark, table, base)
     val missing = cur.columns.diff(rows.columns)
     val extra = rows.columns.diff(cur.columns)
@@ -4065,8 +4023,8 @@ object VersionedTable {
         val sel =
           if (!hfs.exists(statsPath)) None
           else try {
-            val (kept, total) = pruneAgainstStats(spark, statsPath, bounds,
-              pointPreds, probeHashes)
+            val (kept, total) = pruneAgainstStats(spark, hfs, statsPath,
+              bounds, pointPreds, probeHashes)
             Some(restriction match {
               case None => (kept, total)
               case Some(rs) => (kept.filter(rs.contains), rs.size)
@@ -4093,11 +4051,12 @@ object VersionedTable {
     * in the sidecar). `probeHashes` is aligned with `pointPreds` (see
     * [[pruneSelection]]).
     */
-  private def pruneAgainstStats(spark: SparkSession, statsPath: Path,
-      bounds: Seq[ColumnBounds], pointPreds: Seq[(String, Seq[Any])],
+  private def pruneAgainstStats(spark: SparkSession, hfs: FileSystem,
+      statsPath: Path, bounds: Seq[ColumnBounds],
+      pointPreds: Seq[(String, Seq[Any])],
       probeHashes: => Seq[Option[Seq[Seq[Long]]]]): (Seq[String], Int) = {
     import org.apache.spark.sql.functions.{coalesce, col, lit}
-    val stats = parquetOf(spark, statsPath.toString)
+    val stats = parquetOf(spark, sidecarFiles(hfs, statsPath): _*)
     val has = stats.columns.toSet
     val rangeTests = bounds
       .filter(b => has(s"min__${b.column}"))
@@ -4229,11 +4188,9 @@ object VersionedTable {
   def readLatestPruned(spark: SparkSession, table: String,
       bounds: Seq[ColumnBounds],
       equalities: Seq[ColumnEquals] = Nil,
-      inLists: Seq[ColumnIn] = Nil): DataFrame = {
-    val v = latestVersion(spark, table).getOrElse(
-      throw new IllegalArgumentException(s"$table has no committed versions"))
-    readVersionPruned(spark, table, v, bounds, equalities, inLists)
-  }
+      inLists: Seq[ColumnIn] = Nil): DataFrame =
+    readVersionPruned(spark, table, latestOrFail(spark, table), bounds,
+      equalities, inLists)
 
   /** Rewrite the LATEST snapshot into ~`targetFileBytes` files and commit
     * the result as a NEW version (Delta's OPTIMIZE): the small-file
@@ -4282,10 +4239,7 @@ object VersionedTable {
   def compactSmallFiles(spark: SparkSession, table: String,
       minFileBytes: Long = 32L << 20,
       targetFileBytes: Long = 128L << 20): Long =
-    compactSmallFilesFrom(spark, table,
-      latestVersion(spark, table).getOrElse(
-        throw new IllegalArgumentException(
-          s"$table has no committed versions")),
+    compactSmallFilesFrom(spark, table, latestOrFail(spark, table),
       minFileBytes, targetFileBytes)
 
   /** [[compactSmallFiles]] against an explicitly pinned base — the
@@ -4300,20 +4254,13 @@ object VersionedTable {
         s"($minFileBytes)")
     val (hfs, root) = fs(spark, table)
     val baseM = commitOf(hfs, root, table, base)
-    if (schemaStateOf(hfs, root, baseM).nonEmpty)
-      return optimizeFrom(spark, table, base, targetFileBytes, Nil, Nil)
-    val groups = groupTokensByScope(splitDirs(baseM.dataDir))
-    val perScope = enumerateTokens(hfs, root, groups)
-    if (!grammarSafeNames(perScope))
-      return optimizeFrom(spark, table, base, targetFileBytes, Nil, Nil)
+    val perScope = granularLayout(hfs, root, baseM) match {
+      case Some(layout) => layout
+      case None => return optimizeFrom(spark, table, base, targetFileBytes,
+        Nil, Nil)
+    }
     val preds = delStateOf(hfs, root, baseM)
-    // size every referenced file; one listing per scope
-    val sized: Seq[(String, String, Long)] =
-      perScope.flatMap { case (scope, _, referenced) =>
-        val lens = hfs.listStatus(new Path(root, scope)).iterator
-          .map(st => st.getPath.getName -> st.getLen).toMap
-        referenced.map(n => (scope, n, lens.getOrElse(n, 0L)))
-      }
+    val sized = referencedSizes(hfs, root, perScope)
     val small = sized.filter(_._3 < minFileBytes)
     lastCowRewrite.set((small.size, sized.size))
     if (small.size < 2) return base // nothing worth compacting
@@ -4321,25 +4268,19 @@ object VersionedTable {
       small.groupBy(_._1).map { case (s, xs) => s -> xs.map(_._2).toSet }
     val outFiles = math.max(1, math.ceil(
       small.iterator.map(_._3).sum.toDouble / targetFileBytes).toInt)
-    val rows = touched.toSeq.sortBy(_._1).map { case (scope, names) =>
-      visibleScopeFrame(spark, hfs, root, preds, scope,
-        names.toSeq.sorted.map(n => s"$scope/$n"))
-    }.reduce(_ union _).coalesce(outFiles) // bin-pack, never shuffle
+    val rows = touchedRows(spark, hfs, root, preds, perScope, touched).get
+      .coalesce(outFiles) // bin-pack, never shuffle
     val d = writeSnapshot(spark, rows, table, 5000000L)
-    validateConstraints(spark, table, d)
-    applySkipping(spark, table, d, Nil, Nil, 10)
-    publishCowRebasingWith(spark, table, baseM, "optimize",
+    publishCowRebasing(spark, table, baseM, "optimize",
       perScope, touched, Some(d))(_ => false)
   }
 
   def optimize(spark: SparkSession, table: String,
       targetFileBytes: Long = 128L << 20,
       clusterCols: Seq[String] = Nil,
-      zorderCols: Seq[String] = Nil): Long = {
-    val v = latestVersion(spark, table).getOrElse(
-      throw new IllegalArgumentException(s"$table has no committed versions"))
-    optimizeFrom(spark, table, v, targetFileBytes, clusterCols, zorderCols)
-  }
+      zorderCols: Seq[String] = Nil): Long =
+    optimizeFrom(spark, table, latestOrFail(spark, table), targetFileBytes,
+      clusterCols, zorderCols)
 
   /** [[optimize]] against an explicitly pinned base — the seam that makes
     * its optimistic-concurrency contract testable, mirroring
@@ -4351,52 +4292,30 @@ object VersionedTable {
   private[graft] def optimizeFrom(spark: SparkSession, table: String,
       base: Long, targetFileBytes: Long,
       clusterCols: Seq[String], zorderCols: Seq[String] = Nil): Long = {
-    import org.apache.spark.sql.functions.col
     require(clusterCols.isEmpty || zorderCols.isEmpty,
       "CLUSTER BY and ZORDER BY are mutually exclusive")
     require(zorderCols.isEmpty || zorderCols.size == 2,
       s"ZORDER BY takes exactly two columns: $zorderCols")
     require(targetFileBytes > 0, s"targetFileBytes must be > 0: $targetFileBytes")
-    val (hfs, optRoot) = fs(spark, table)
-    var bytes = 0L
+    val (hfs, root) = fs(spark, table)
     // sum across ALL the version's REFERENCED files — compacting a
     // drip-appended multi-dir version back into one dir is half of
     // optimize's job; file/exclusion tokens (file-granular CoW) count
     // only the files the version actually references
-    groupTokensByScope(splitDirs(commitOf(hfs, optRoot, table, base).dataDir))
-      .foreach { case (scope, toks) =>
-        groupRestriction(hfs, optRoot, scope, toks) match {
-          case None =>
-            val it = hfs.listFiles(new Path(optRoot, scope), false)
-            while (it.hasNext) {
-              val f = it.next()
-              if (f.getPath.getName.endsWith(".parquet")) bytes += f.getLen
-            }
-          case Some(files) =>
-            val names = files.toSet
-            hfs.listStatus(new Path(optRoot, scope)).foreach { st =>
-              if (names.contains(st.getPath.getName)) bytes += st.getLen
-            }
-        }
-      }
+    val bytes = referencedSizes(hfs, root,
+      layoutOf(hfs, root, commitOf(hfs, root, table, base)))
+      .iterator.map(_._3).sum
     val n = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
     val cur = readVersion(spark, table, base)
+    // a z-order rewrite covers a compact square of the (a, b) plane per
+    // file, so a range on EITHER dimension prunes (the commitZordered
+    // layout, available post-hoc as an OPTIMIZE)
+    import org.apache.spark.sql.functions.col
     val rewritten =
-      if (zorderCols.nonEmpty) {
-        // Morton 2-D: range-partition + sort on the bit interleave, so
-        // each rewritten file covers a compact square in (a, b) space and
-        // a range on EITHER dimension prunes (the commitZordered layout,
-        // available post-hoc as an OPTIMIZE)
-        val z = graft.api.Graft.zorderKey(
-          col(zorderCols.head).cast("long"), col(zorderCols(1)).cast("long"))
-        cur.withColumn("__graft_z", z)
-          .repartitionByRange(n, col("__graft_z"))
-          .sortWithinPartitions(col("__graft_z"))
-          .drop("__graft_z")
-      }
-      else if (clusterCols.isEmpty) cur.repartition(n)
-      else cur.repartitionByRange(n, clusterCols.map(col): _*)
-        .sortWithinPartitions(clusterCols.map(col): _*)
+      if (clusterCols.isEmpty && zorderCols.isEmpty) cur.repartition(n)
+      else clusteredLayout(cur, n,
+        if (zorderCols.isEmpty) clusterCols.map(col)
+        else mortonKey(zorderCols.head, zorderCols(1)))
     // clustered/z-ordered rewrites default their zone-map stats to the
     // layout columns (the commitClustered/commitZordered contract);
     // unclustered ones fall back to the table's skipping policy inside

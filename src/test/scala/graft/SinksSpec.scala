@@ -1211,6 +1211,109 @@ class SinksSpec extends SparkSpec {
     val ops = VersionedTable.history(spark, t).orderBy("version")
       .collect().map(_.getString(4))
     assert(ops.toSeq == Seq("commit", "merge"), ops.mkString(","))
+
+    // every verb that writes a data dir goes through one write tail: a
+    // violating row throws and publishes nothing, and a clean write's
+    // fresh dir carries the skipping policy's `_stats` sidecar. Seeded
+    // tables hold 4 clustered files under a skipping policy, so merge,
+    // update and delete take the file-granular path.
+    def rows(kq: (Long, Long)*) =
+      kq.map { case (k, q) => (k, q, s"n$k") }.toDF("k", "qty", "name")
+    val qtyOnly = Map("qty_pos" -> "qty > 0")
+    // compaction, OPTIMIZE, RESTORE and DELETE only move existing rows:
+    // their violating row is k = 7, which a constraint set after the
+    // seed forbids (DELETE of k = 3 rewrites k = 7's file)
+    val noK7 = qtyOnly + ("k_not_7" -> "k <> 7")
+    def gated(cs: Map[String, String])(verb: String => Any)(tt: String) = {
+      VersionedTable.setConstraints(spark, tt, cs)
+      verb(tt)
+    }
+    case class Verb(name: String, seeded: Boolean, granular: Boolean,
+        bad: String => Any, good: String => Any)
+    val big = 1L << 30
+    val verbs = Seq(
+      Verb("commit", true, false,
+        VersionedTable.commit(spark, rows((1L, -1L)), _),
+        VersionedTable.commit(spark, rows((1L, 1L)), _)),
+      Verb("commitClustered", true, false,
+        VersionedTable.commitClustered(spark, rows((1L, -1L), (2L, 2L)), _,
+          Seq("k")),
+        VersionedTable.commitClustered(spark, rows((1L, 1L), (2L, 2L)), _,
+          Seq("k"))),
+      Verb("append", true, false,
+        VersionedTable.append(spark, _, rows((1000L, -1L))),
+        VersionedTable.append(spark, _, rows((1000L, 3L)))),
+      Verb("appendBatchIfNew", false, false,
+        VersionedTable.appendBatchIfNew(spark, _, rows((1L, -1L)), 0L),
+        VersionedTable.appendBatchIfNew(spark, _, rows((1L, 1L)), 0L)),
+      Verb("mergeBatchIfNew", false, false,
+        VersionedTable.mergeBatchIfNew(spark, _, rows((1L, -1L)), "k", 0L),
+        VersionedTable.mergeBatchIfNew(spark, _, rows((1L, 1L)), "k", 0L)),
+      Verb("replicaBatchIfNew", false, false,
+        VersionedTable.replicaBatchIfNew(spark, _, rows((1L, -1L))
+          .withColumn("ver", lit(1L)).withColumn("op", lit("u")),
+          "k", "ver", "op", 0L),
+        VersionedTable.replicaBatchIfNew(spark, _, rows((1L, 1L))
+          .withColumn("ver", lit(1L)).withColumn("op", lit("u")),
+          "k", "ver", "op", 0L)),
+      Verb("mergeInto", true, true,
+        VersionedTable.mergeInto(spark, _, rows((5L, -1L)), "k"),
+        VersionedTable.mergeInto(spark, _, rows((5L, 9L)), "k")),
+      Verb("mergeUpdate", true, true,
+        VersionedTable.mergeUpdate(spark, _, Seq(5L).toDF("k"), "k",
+          Map("qty" -> lit(-1L))),
+        VersionedTable.mergeUpdate(spark, _, Seq(5L).toDF("k"), "k",
+          Map("qty" -> lit(42L)))),
+      Verb("updateWhere", true, true,
+        VersionedTable.updateWhere(spark, _, col("k") === 5L,
+          Map("qty" -> lit(-1L))),
+        VersionedTable.updateWhere(spark, _, col("k") === 5L,
+          Map("qty" -> lit(3L)))),
+      Verb("deleteWhere", true, true,
+        gated(noK7)(VersionedTable.deleteWhere(spark, _, col("k") === 3L)),
+        VersionedTable.deleteWhere(spark, _, col("k") === 7L)),
+      Verb("overwriteWhere", true, false,
+        VersionedTable.overwriteWhere(spark, _, col("k") === 5L,
+          rows((5L, -1L))),
+        VersionedTable.overwriteWhere(spark, _, col("k") === 5L,
+          rows((5L, 2L)))),
+      Verb("compactSmallFiles", true, false,
+        gated(noK7)(VersionedTable.compactSmallFiles(spark, _, big, big)),
+        gated(qtyOnly)(VersionedTable.compactSmallFiles(spark, _, big, big))),
+      Verb("optimize", true, false,
+        gated(noK7)(VersionedTable.optimize(spark, _)),
+        gated(qtyOnly)(VersionedTable.optimize(spark, _))),
+      Verb("restore", true, false,
+        gated(noK7)(VersionedTable.restore(spark, _, 1L)),
+        gated(qtyOnly)(VersionedTable.restore(spark, _, 1L))))
+    verbs.foreach { vb =>
+      val tt = tmp() + s"/vt_gate_${vb.name}"
+      VersionedTable.setConstraints(spark, tt, qtyOnly)
+      VersionedTable.setSkippingPolicy(spark, tt, Seq("k"))
+      if (vb.seeded) VersionedTable.commitClustered(spark,
+        spark.range(400).select(col("id").as("k"),
+          (col("id") % 7 + 1).as("qty"),
+          concat(lit("n"), col("id")).as("name")),
+        tt, clusterCols = Seq("k"), numFiles = 4)
+      val before = VersionedTable.latestVersion(spark, tt)
+      withClue(vb.name) {
+        intercept[VersionedTable.ConstraintViolationException](vb.bad(tt))
+        assert(VersionedTable.latestVersion(spark, tt) == before)
+        VersionedTable.lastCowRewrite.set((-7, -7))
+        vb.good(tt)
+        val latest = VersionedTable.latestVersion(spark, tt).get
+        assert(latest == before.getOrElse(0L) + 1L)
+        if (vb.granular) {
+          val (rewritten, total) = VersionedTable.lastCowRewrite.get()
+          assert(total >= 3 && rewritten >= 1 && rewritten < total,
+            s"$rewritten of $total files rewritten")
+        }
+        val wrote = VersionedTable.history(spark, tt)
+          .where(col("version") === latest).head().getString(1)
+          .split(';').last
+        assert(new java.io.File(s"$tt/$wrote/_stats").isDirectory, wrote)
+      }
+    }
   }
 
   test("optimize rewrites the latest snapshot as a new compacted version") {

@@ -21,6 +21,10 @@ for sf in "${sfs[@]}"; do
     > "/tmp/graft_verify_$name.log" 2>&1 \
     || { echo "== $name: VERIFY DRIVER FAILED (see /tmp/graft_verify_$name.log)"; fail=1; continue; }
   echo "== $name: oracle compare"
-  python3 tools/oracle_check.py "$out" "$sf" | tail -3 || fail=1
+  # print every non-PASS row (failing and engine-only query names) and
+  # the totals; a failing query fails the sweep
+  python3 tools/oracle_check.py "$out" "$sf" > "$out.oracle.txt" 2>&1 \
+    || fail=1
+  grep -v '^PASS ' "$out.oracle.txt"
 done
 exit $fail
